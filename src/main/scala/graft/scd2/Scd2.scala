@@ -119,16 +119,27 @@ object Scd2 {
     * equivalent to [[fromEvents]] over the concatenated event log (tested
     * property) given the precondition, and replaying is idempotent given an
     * idempotent sink.
+    *
+    * `firstTs` (keys + `__first_ts`, the batch's per-key minimum ts) lets
+    * a caller that already holds that aggregate (the bucketed stream
+    * collects it to find its touched buckets) skip recomputing it. It is
+    * not used under [[LatePolicy.Drop]], where the first ts is taken over
+    * the non-late rows only.
     */
   def applyBatch(history: DataFrame, batch: DataFrame, keys: Seq[String],
                  tsCol: String, seqCol: String,
-                 onLate: LatePolicy = LatePolicy.Error): DataFrame =
-    applyBatchImpl(history, batch, keys, tsCol, onLate,
+                 onLate: LatePolicy = LatePolicy.Error,
+                 firstTs: Option[DataFrame] = None): DataFrame =
+    applyBatchImpl(history, batch, keys, tsCol, onLate, firstTs,
       ev => fromEvents(ev, keys, tsCol, seqCol))
+
+  /** The per-key first event time the merge expires open rows at. */
+  def firstEventTs(batch: DataFrame, keys: Seq[String], tsCol: String): DataFrame =
+    batch.groupBy(keys.map(col): _*).agg(min(col(tsCol)).as("__first_ts"))
 
   private def applyBatchImpl(history: DataFrame, batch: DataFrame,
                              keys: Seq[String], tsCol: String,
-                             onLate: LatePolicy,
+                             onLate: LatePolicy, firstTs: Option[DataFrame],
                              versionize: DataFrame => DataFrame): DataFrame = {
     val events = onLate match {
       case LatePolicy.Drop =>
@@ -138,8 +149,10 @@ object Scd2 {
       case _ => batch
     }
     val newVersions = versionize(events)
-    val firstNew = events.groupBy(keys.map(col): _*)
-      .agg(min(col(tsCol)).as("__first_ts"))
+    val firstNew = onLate match {
+      case LatePolicy.Drop => firstEventTs(events, keys, tsCol)
+      case _ => firstTs.getOrElse(firstEventTs(events, keys, tsCol))
+    }
     val expireCond = col(IsCurrent) === "Y" && col("__first_ts").isNotNull
     // Error policy: evaluated on the already-joined (open row × batch min-ts)
     // pairs, so the guard costs nothing beyond a comparison per open row
@@ -223,8 +236,7 @@ object Scd2 {
           .select(batch.columns.map(col).toIndexedSeq: _*)
       case _ => batch
     }
-    val firstNew = events.groupBy(keys.map(col): _*)
-      .agg(min(col(tsCol)).as("__first_ts"))
+    val firstNew = firstEventTs(events, keys, tsCol)
     val checked = onLate match {
       case LatePolicy.Error =>
         when(col("__first_ts") < col(ValidFrom), lateErrorExpr(keys, tsCol))
@@ -297,11 +309,12 @@ object Scd2 {
     * the batch's first event time for the key); the new versions come
     * from [[fromEventsWithDeletes]], so a batch ending in a delete leaves
     * the key with no current row (until a later re-insert). Same merge
-    * shape, precondition and [[LatePolicy]] as [[applyBatch]]. */
+    * shape, precondition, [[LatePolicy]] and `firstTs` as [[applyBatch]]. */
   def applyBatchWithDeletes(history: DataFrame, batch: DataFrame,
                             keys: Seq[String], tsCol: String, seqCol: String,
                             opCol: String,
-                            onLate: LatePolicy = LatePolicy.Error): DataFrame =
-    applyBatchImpl(history, batch, keys, tsCol, onLate,
+                            onLate: LatePolicy = LatePolicy.Error,
+                            firstTs: Option[DataFrame] = None): DataFrame =
+    applyBatchImpl(history, batch, keys, tsCol, onLate, firstTs,
       ev => fromEventsWithDeletes(ev, keys, tsCol, seqCol, opCol).drop(opCol))
 }

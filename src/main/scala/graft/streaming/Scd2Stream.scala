@@ -1,9 +1,16 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
 import graft.scd2.Scd2
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Structured Streaming wiring for the CDC → SCD2 pipeline (SURVEY.md §7.1
   * item 4) — the Spark-first restatement of the reference's NiFi flow:
@@ -214,12 +221,21 @@ object Scd2Stream {
   }
 
   /** One micro-batch against a BUCKETED history: the table is laid out as
-    * `historyDir/__bucket=N/` (N = murmur3(key) mod nBuckets) and a batch
-    * only reads + rewrites the buckets its keys hash into — the 100 TB
-    * answer to [[applyMicroBatch]]'s full-table rewrite. With k touched
-    * buckets out of B, a micro-batch costs O(history·k/B + batch), and
-    * partition pruning serves point-lookups by key from one bucket.
-    * Untouched buckets are never opened.
+    * `historyDir/__bucket=N/` (N = the key's [[bucketOf]]) and a batch only
+    * reads + rewrites the buckets its keys hash into — the 100 TB answer
+    * to [[applyMicroBatch]]'s full-table rewrite. With k touched buckets
+    * out of B, a micro-batch costs O(history·k/B + batch); untouched
+    * buckets are never opened.
+    *
+    * Spark jobs per call, whatever the batch size: one to cache the batch,
+    * two for the per-key first-ts aggregate (map stage + the one collect
+    * that yields both the touched buckets and the merge's broadcast side),
+    * one for the merge's window shuffle, one to broadcast the collected
+    * aggregate (skipped when no touched bucket holds history yet), one for
+    * the write. The touched buckets are read with the memoized table-wide
+    * schema, so no schema-inference job runs; only the first apply after a
+    * commit this process did not make (or after a schema-changing one)
+    * re-infers it, at O(buckets) listing cost.
     *
     * Crash-safe via the manifest + per-bucket rename protocol (class doc);
     * commit is the commit-log append AFTER all buckets are swapped, and
@@ -234,33 +250,46 @@ object Scd2Stream {
     recoverBucketed(historyDir)
     val commitLog = historyDir + ".commits"
     if (batchId.exists(committedIds(commitLog).contains)) return
-    // persist: the batch feeds three actions (touched-bucket probe,
-    // emptiness via the probe, merge) — compute the input once
-    val cached = batch.persist()
+    // persist: the batch feeds two actions (first-ts collect, merge) —
+    // compute the input once, so observe() metrics upstream count it once.
+    // coalesce: a narrow batch routed through a union of source partitions
+    // would otherwise run one task per branch × partition in every stage
+    val cached = batch.coalesce(spark.sparkContext.defaultParallelism).persist()
     try {
-      val bucket = pmod(hash(keys.map(col): _*), lit(nBuckets))
-      val tagged = cached.withColumn("__bucket", bucket)
-      val touched = tagged.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted
-      if (touched.isEmpty) return
-      val dirs = touched.map(b => s"$historyDir/__bucket=$b")
-        .filter(StreamFs.exists)
+      val bucket = bucketCol(keys.map(col), nBuckets)
+      val firstTs = Scd2.firstEventTs(cached, keys, tsCol)
+      val collected = firstTs.withColumn("__bucket", bucket).collect()
+      if (collected.isEmpty) return
+      val touched = collected.map(_.getInt(firstTs.schema.size)).distinct.sorted
+      val firstNew = Some(spark.createDataFrame(
+        collected.map(r => Row.fromSeq(r.toSeq.init)).toSeq.asJava, firstTs.schema))
+      // touched bucket → whether it has a pre-image to read and move aside
+      val pre = touched.toSeq.map(b =>
+        b -> StreamFs.exists(s"$historyDir/__bucket=$b"))
+      val dirs = pre.collect { case (b, true) => s"$historyDir/__bucket=$b" }
+      // the table-wide schema before this batch: inferred if the touched
+      // buckets must be read and it is not memoized for the current commit
+      // state; otherwise only a memo that still holds
+      val prior =
+        if (dirs.nonEmpty) Some(tableSchema(spark, historyDir))
+        else memoizedSchema(historyDir, commitStamp(spark, historyDir))
       val merged =
         if (dirs.nonEmpty) {
-          // mergeSchema: after an ADD COLUMN only the buckets a batch
-          // touches get rewritten with the wider schema, so bucket dirs
-          // legitimately carry mixed schemas until every bucket has been
-          // touched once — the union read null-backfills the old ones
-          val histRaw = spark.read.option("basePath", historyDir)
-            .option("mergeSchema", "true")
+          // read with the table-wide schema: after an ADD COLUMN only the
+          // buckets a batch touches get rewritten with the wider schema, so
+          // bucket dirs legitimately carry mixed schemas until every bucket
+          // has been touched once — a column a bucket's files lack reads
+          // as null
+          val histRaw = spark.read.schema(prior.get)
+            .option("basePath", historyDir)
             .parquet(dirs.toIndexedSeq: _*)
           val (hist, b) =
             alignForEvolution(histRaw.drop("__bucket"), cached, tsCol, opCol)
           opCol match {
             case Some(op) => Scd2.applyBatchWithDeletes(hist,
-              b, keys, tsCol, seqCol, op, onLate)
+              b, keys, tsCol, seqCol, op, onLate, firstNew)
             case None => Scd2.applyBatch(hist, b, keys,
-              tsCol, seqCol, onLate)
+              tsCol, seqCol, onLate, firstNew)
           }
         } else opCol match {
           case Some(op) =>
@@ -273,8 +302,7 @@ object Scd2Stream {
         .write.partitionBy("__bucket")
         .mode("overwrite").parquet(tmp)
       failpoint("after-tmp-write")
-      val pre = touched.toSeq.map(b =>
-        b -> StreamFs.exists(s"$historyDir/__bucket=$b"))
+      tableSchemas.remove(historyDir)
       writeManifest(historyDir + ".inflight", batchId, pre)
       failpoint("after-manifest")
       val oldRoot = historyDir + ".oldbuckets"
@@ -300,6 +328,13 @@ object Scd2Stream {
       StreamFs.delete(oldRoot)
       StreamFs.delete(tmp)
       StreamFs.delete(historyDir + ".inflight")
+      // a commit that wrote no column the table lacked leaves its schema
+      // as it was: carry the memo over to the new commit state
+      prior.filter(p => merged.schema.forall(f =>
+          p.find(_.name == f.name)
+            .exists(_.dataType.catalogString == f.dataType.catalogString)))
+        .foreach(p => commitStamp(spark, historyDir)
+          .foreach(st => tableSchemas.put(historyDir, SchemaMemo(st, p))))
     } finally { cached.unpersist(); () }
   }
 
@@ -344,23 +379,107 @@ object Scd2Stream {
     spark.read.option("mergeSchema", "true").parquet(historyDir)
       .drop("__bucket")
 
-  /** Point lookup served from ONE bucket: recomputes the write path's
-    * bucket id for the key and filters on the partition column, so
-    * partition pruning opens a single `__bucket=N` directory — the
-    * O(history/B) point-read the bucketed layout exists for (the lookup
-    * side of the reference's `DatabaseRecordLookupService`, J1, at scale).
-    * Plan-asserted in StreamingSpec. */
+  /** Point lookup served from ONE bucket — the O(history/B) point-read the
+    * bucketed layout exists for (the lookup side of the reference's
+    * `DatabaseRecordLookupService`, J1, at scale). The bucket id is
+    * computed in process ([[bucketOf]], each value cast to its key
+    * column's type), only `historyDir/__bucket=N` is listed and read, and
+    * the result carries [[readBucketed]]'s table-wide schema: a column an
+    * ADD COLUMN brought in after the bucket's last rewrite reads as null,
+    * and a bucket never written yields no rows.
+    *
+    * One Spark job per call (the scan) while the table-wide schema is
+    * memoized for the current commit state; the first lookup after a
+    * commit this process did not make (or after a schema-changing one)
+    * re-infers it, at O(buckets) listing cost. The `__bucket` filter stays
+    * on the plan as a partition filter (plan-asserted in StreamingSpec). */
   def lookupByKey(spark: SparkSession, historyDir: String, keys: Seq[String],
                   values: Seq[Any], nBuckets: Int = 64): DataFrame = {
-    // evaluate the exact write-path bucket expression on a one-row plan
-    val b = spark.range(1)
-      .select(pmod(hash(values.map(lit): _*), lit(nBuckets)).as("b"))
-      .first().getInt(0)
+    require(keys.size == values.size,
+      s"lookupByKey: ${keys.size} key columns but ${values.size} values")
+    val schema = tableSchema(spark, historyDir)
+    val b = bucketOf(spark, values, keys.map(schema(_).dataType), nBuckets)
+    val dir = s"$historyDir/__bucket=$b"
+    if (!StreamFs.exists(dir))
+      return spark.createDataFrame(java.util.List.of[Row](), schema)
     keys.zip(values).foldLeft(
-      spark.read.option("mergeSchema", "true").parquet(historyDir)
+      spark.read.schema(schema).option("basePath", historyDir).parquet(dir)
         .filter(col("__bucket") === b)) {
       case (df, (k, v)) => df.filter(col(k) === v)
     }.drop("__bucket")
+  }
+
+  // ---- bucket function ---------------------------------------------------
+
+  /** THE bucket function of the bucketed layout: `pmod(hash(keys), B)`,
+    * Spark's murmur3 `hash`. The write path and the touched-bucket
+    * derivation evaluate it over the key columns, the point lookup over
+    * literals ([[bucketOf]]). */
+  private def bucketCol(keys: Seq[Column], nBuckets: Int): Column =
+    pmod(hash(keys: _*), lit(nBuckets))
+
+  /** The bucket a key's rows live in, computed in process with no Spark
+    * job: [[bucketCol]] over literals, resolved by the analyzer into its
+    * Catalyst `Pmod(Murmur3Hash(...))` and evaluated in place. Each value
+    * is cast to its key column's type first, so `5L` looked up on an `Int`
+    * key hashes exactly as the write path hashed the stored `5`. */
+  def bucketOf(spark: SparkSession, values: Seq[Any], keyTypes: Seq[DataType],
+               nBuckets: Int): Int = {
+    require(values.size == keyTypes.size,
+      s"bucketOf: ${keyTypes.size} key types but ${values.size} values")
+    val literals = values.zip(keyTypes).map { case (v, t) => lit(v).cast(t) }
+    spark.emptyDataFrame.select(bucketCol(literals, nBuckets))
+      .queryExecution.analyzed.expressions.head.eval().asInstanceOf[Int]
+  }
+
+  // ---- table-wide schema memo --------------------------------------------
+  //
+  // A single-bucket read cannot see the columns other buckets carry, and
+  // inferring the table-wide schema costs a listing of every bucket plus a
+  // mergeSchema job. So it is memoized per table, keyed to the table's
+  // commit state: the modification time of the history root (every commit
+  // renames bucket dirs out of and into it) and the length + modification
+  // time of the commit log (which grows with every batch-id commit). A
+  // commit by another process, a crash mid-protocol or a recovery moves
+  // that state, and the next reader re-infers; this needs modification
+  // times finer than the gap between two commits (local filesystems and
+  // HDFS keep milliseconds). This process's own commits — the protocol has
+  // a single writer — invalidate the memo before touching the table and
+  // carry it over when they wrote no new column.
+
+  private type CommitStamp = (Long, Long, Long)
+  private final case class SchemaMemo(stamp: CommitStamp, schema: StructType)
+  private val tableSchemas = new ConcurrentHashMap[String, SchemaMemo]()
+
+  /** The table's commit state; None when the history root does not exist. */
+  private def commitStamp(spark: SparkSession, historyDir: String): Option[CommitStamp] = {
+    val root = new Path(historyDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def status(p: Path) =
+      try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+    status(root).map { r =>
+      val log = status(new Path(historyDir + ".commits"))
+      (r.getModificationTime, log.fold(-1L)(_.getLen),
+        log.fold(-1L)(_.getModificationTime))
+    }
+  }
+
+  private def memoizedSchema(historyDir: String,
+                             stamp: Option[CommitStamp]): Option[StructType] =
+    Option(tableSchemas.get(historyDir)).filter(m => stamp.contains(m.stamp))
+      .map(_.schema)
+
+  /** [[readBucketed]]'s schema, from the memo when it holds for the current
+    * commit state; otherwise inferred, and memoized if the state held still
+    * while it was. */
+  private def tableSchema(spark: SparkSession, historyDir: String): StructType = {
+    val before = commitStamp(spark, historyDir)
+    memoizedSchema(historyDir, before).getOrElse {
+      val inferred = readBucketed(spark, historyDir).schema
+      before.filter(_ => commitStamp(spark, historyDir) == before)
+        .foreach(st => tableSchemas.put(historyDir, SchemaMemo(st, inferred)))
+      inferred
+    }
   }
 
   // ---- commit/marker/manifest plumbing -----------------------------------

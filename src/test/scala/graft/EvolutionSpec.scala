@@ -210,4 +210,32 @@ class EvolutionSpec extends SparkSpec {
       .groupBy("k").count().filter(col("count") =!= 1).count()
     assert(curPerKey === 0)
   }
+
+  test("bucketed layout: ADD COLUMN — point lookups carry the table-wide schema") {
+    val dir = Files.createTempDirectory("graft-evo-bkt-lookup").toString + "/hist"
+    val nBuckets = 64
+    def bucket(k: Int) = Scd2Stream.bucketOf(spark, Seq(k), Seq(IntegerType), nBuckets)
+    Scd2Stream.applyMicroBatchBucketed(spark, batch(1 to 32, 1000L, None),
+      dir, Seq("k"), "ts", "seq", nBuckets = nBuckets, batchId = Some(0L))
+    Scd2Stream.applyMicroBatchBucketed(spark, batch(Seq(2, 7), 2000L, Some("segment")),
+      dir, Seq("k"), "ts", "seq", nBuckets = nBuckets, batchId = Some(1L))
+    val hist = Scd2Stream.readBucketed(spark, dir)
+    def lookup(k: Int) =
+      Scd2Stream.lookupByKey(spark, dir, Seq("k"), Seq(k), nBuckets = nBuckets)
+    // a key whose bucket the ADD COLUMN batch never touched: its files lack
+    // the column, the lookup still carries it (null)
+    val cold = (1 to 32).find(k => !Set(bucket(2), bucket(7)).contains(bucket(k))).get
+    val coldRows = lookup(cold)
+    assert(coldRows.schema === hist.schema)
+    assert(coldRows.collect().map(_.getAs[String]("segment")).toSeq === Seq(null))
+    assert(lookup(7).filter(col("is_current") === "Y").collect()
+      .map(_.getAs[String]("segment")).toSeq === Seq("segment-7"))
+    // a key whose bucket dir was never written: no rows, same schema
+    val written = (1 to 32).map(bucket).toSet
+    val absent = Iterator.from(33).find(k => !written.contains(bucket(k))).get
+    assert(!new java.io.File(s"$dir/__bucket=${bucket(absent)}").exists())
+    val none = lookup(absent)
+    assert(none.schema === hist.schema)
+    assert(none.count() === 0)
+  }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** STREAMING ANN INDEX MAINTENANCE — the ingestion face of the IVF-PQ
   * index ([[graft.ops.SimilarityQueries.annIvfPq]]'s layout), composed
-  * with the batch-dir marker commit protocol of [[DedupStream]] /
-  * [[NearDupStream]] (all I/O through [[StreamFs]]):
+  * with the batch-dir marker commit protocol of [[BatchStore]] (all I/O
+  * through [[StreamFs]]):
   *
   *  - [[init]] trains the index ONCE from a bootstrap corpus: coarse
   *    cells + PQ codebook, persisted under `meta/`. Training is the same
@@ -25,8 +25,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    `pq_code` kernel call), and appends `coded/batch=N/cell=C/…` —
   *    CELL-PARTITIONED, so a probe opens nprobe/|cells| of the files and
   *    reads 4 bytes of codes per vector. Replay of a committed batch id
-  *    is a no-op via the `_GRAFT_COMMIT` marker; a crashed batch leaves
-  *    an unmarked dir that [[recover]] sweeps.
+  *    is a no-op via the [[BatchStore]] commit marker; a crashed batch
+  *    leaves an unmarked dir that [[recover]] sweeps.
   *  - [[search]] serves arbitrary query vectors from the LIVE index:
   *    probe the nprobe nearest cells, ADC-score the probed cells' codes
   *    (`pq_lut` once per query, `pq_adc` per candidate), per-query top-k.
@@ -41,6 +41,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * lookup-enrich path) only by analogy — this operator is part of the
   * engine's training-data surface, not the NiFi flow. */
 object AnnStream {
+
+  /** `coded/batch=N` is the only batch sub-table; `meta/` sits beside it. */
+  private[streaming] val store = new BatchStore("coded")
 
   private val m = SimilarityQueries.pqSubspaces
   private val k = SimilarityQueries.pqCodebookSize
@@ -68,16 +71,18 @@ object AnnStream {
     val stride = SimilarityQueries.seedStrideOf(v.count())
     val cents = v.filter(col("vec_id") % stride === 1)
       .select(col("vec_id").as("cell"), col("e").as("ce"), col("norm").as("cn"))
-    DedupStream.writeAtomically(cents, s"$indexDir/meta/centroids", mark = true)
+    BatchStore.writeDir(s"$indexDir/meta/centroids", cents,
+      mark = true)
     val cb = v.orderBy("vec_id").limit(k)
       .agg(array_sort(collect_list(struct(col("vec_id"), col("e")))).as("cbs"))
       .select(transform(col("cbs"), _("e")).as("cb"))
-    DedupStream.writeAtomically(cb, s"$indexDir/meta/codebook", mark = true)
+    BatchStore.writeDir(s"$indexDir/meta/codebook", cb,
+      mark = true)
   }
 
   private def committedMeta(indexDir: String): Boolean =
-    StreamFs.exists(s"$indexDir/meta/centroids/${DedupStream.Marker}") &&
-      StreamFs.exists(s"$indexDir/meta/codebook/${DedupStream.Marker}")
+    BatchStore.isCommitted(s"$indexDir/meta/centroids") &&
+      BatchStore.isCommitted(s"$indexDir/meta/codebook")
 
   /** Start the ingest stream: `vectors` must carry
     * (vec_id long, embedding array). [[init]] must have run. */
@@ -95,10 +100,8 @@ object AnnStream {
     * Idempotent per `batchId` via the commit marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
                       batchId: Long): Unit = {
-    CompactionLock.requireFree(indexDir, "AnnStream.applyMicroBatch")
-    recover(indexDir)
-    val dst = s"$indexDir/coded/batch=$batchId"
-    if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
+    if (store.replayed(indexDir, batchId, "AnnStream.applyMicroBatch"))
+      return
     require(committedMeta(indexDir), s"AnnStream.init has not run for $indexDir")
     val cents = broadcast(spark.read.parquet(s"$indexDir/meta/centroids"))
     val cb = broadcast(spark.read.parquet(s"$indexDir/meta/codebook"))
@@ -112,39 +115,14 @@ object AnnStream {
     val coded = assigned.crossJoin(cb)
       .select(col("vec_id"), col("cell"),
         pqCode(col("e"), col("cb"), lit(m))("codes").as("codes"))
-    val tmp = dst + ".tmp"
-    StreamFs.delete(tmp)
-    coded.write.partitionBy("cell").mode("overwrite").parquet(tmp)
-    StreamFs.delete(dst)
-    StreamFs.renameOrThrow(tmp, dst)
-    StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
+    BatchStore.stage(s"$indexDir/coded/batch=$batchId", mark = true)(
+      coded.write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Sweep unmarked (crashed) coded batch dirs, stale temp dirs,
     * uncommitted takedown dirs, and complete or roll back an
     * interrupted [[compact]] swap. Safe to call any time. */
-  def recover(indexDir: String): Unit = {
-    val cold = indexDir + ".cold"
-    val ctmp = indexDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(indexDir)) StreamFs.delete(cold) // new root live
-      else StreamFs.renameOrThrow(cold, indexDir) // crash between renames
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(indexDir))
-      StreamFs.delete(ctmp)
-    StreamFs.listNames(s"$indexDir/coded").foreach { n =>
-      val p = s"$indexDir/coded/$n"
-      if (n.endsWith(".tmp")) StreamFs.delete(p)
-      else if (n.startsWith("batch=") &&
-        !StreamFs.exists(s"$p/${DedupStream.Marker}")) StreamFs.delete(p)
-    }
-    StreamFs.listNames(s"$indexDir/${Takedown.Sub}").foreach { t =>
-      val p = s"$indexDir/${Takedown.Sub}/$t"
-      if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-          !StreamFs.exists(s"$p/${DedupStream.Marker}")))
-        StreamFs.delete(p)
-    }
-  }
+  def recover(indexDir: String): Unit = store.recover(indexDir)
 
   /** TAKEDOWN over the coded index — the RTBF reach into DERIVED data:
     * a removed doc's PQ codes are compressed projections of its
@@ -185,47 +163,29 @@ object AnnStream {
     * committed takedowns applied physically: the staged root carries no
     * takedown dirs and no removed vector's codes. Earlier committed ids
     * survive as marker-only dirs (the replay no-op check); meta is
-    * carried verbatim. The [[DedupStream.compact]] rename-aside swap +
+    * carried verbatim. The [[BatchStore.compact]] rename-aside swap +
     * heartbeated lock protocol; [[recover]] completes or rolls back. */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    CompactionLock.withLock(indexDir) {
-      recover(indexDir)
-      val batches = StreamFs.listNames(s"$indexDir/coded")
-        .filter(_.startsWith("batch="))
-        .filter(b => StreamFs.exists(
-          s"$indexDir/coded/$b/${DedupStream.Marker}"))
-        .sortBy(_.stripPrefix("batch=").toLong)
+    store.compact(indexDir) { stage =>
+      val batches = store.committed(indexDir)
       if (batches.isEmpty) return
       if (batches.length <= 1 &&
-        Takedown.committedDirs(indexDir).isEmpty) return
-      val target = batches.last
-      val stage = indexDir + ".ctmp"
-      StreamFs.delete(stage)
+        BatchStore.takedownDirs(indexDir).isEmpty) return
       // the reader view IS the fold (takedowns applied)
       readCoded(spark, indexDir)
-        .write.partitionBy("cell").parquet(s"$stage/coded/$target")
-      StreamFs.createMarker(s"$stage/coded/$target/${DedupStream.Marker}")
-      batches.init.foreach(b =>
-        StreamFs.createMarker(s"$stage/coded/$b/${DedupStream.Marker}"))
+        .write.partitionBy("cell").parquet(s"$stage/coded/${batches.last}")
+      store.markAll(stage, batches)
       Seq("centroids", "codebook").foreach { m =>
         spark.read.parquet(s"$indexDir/meta/$m")
           .write.parquet(s"$stage/meta/$m")
-        StreamFs.createMarker(s"$stage/meta/$m/${DedupStream.Marker}")
+        BatchStore.mark(s"$stage/meta/$m")
       }
-      val old = indexDir + ".cold"
-      StreamFs.renameOrThrow(indexDir, old)
-      StreamFs.renameOrThrow(stage, indexDir)
-      StreamFs.delete(old)
     }
 
   /** The live coded corpus (committed batches only, committed takedowns
     * applied): (vec_id, cell, codes). */
   def readCoded(spark: SparkSession, indexDir: String): DataFrame = {
-    val dirs = StreamFs.listNames(s"$indexDir/coded")
-      .filter(_.startsWith("batch="))
-      .filter(b => StreamFs.exists(s"$indexDir/coded/$b/${DedupStream.Marker}"))
-      .map(b => s"$indexDir/coded/$b")
-      .filter(StreamFs.hasDataFiles) // post-compaction marker-only ids
+    val dirs = store.dataDirs(indexDir, "coded")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("vec_id"),

@@ -23,8 +23,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * tokenize+hash with no dependence on history size at all (the ideal
   * every streaming operator here approximates).
   *
-  * Crash safety: the per-batch cell dir commits via [[DedupStream]]'s
-  * marker protocol (staged tmp write → rename → `_GRAFT_COMMIT`);
+  * Crash safety: the per-batch cell dir commits via the [[BatchStore]]
+  * marker protocol (staged tmp write → rename → commit marker);
   * [[recover]] sweeps marker-less orphans; replay of a committed
   * `batchId` is a no-op, so foreachBatch retries are idempotent.
   *
@@ -35,6 +35,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (the same linearity). Estimates serve from the merged 4096-row
   * table as a broadcast. */
 object CmsStream {
+
+  private val store = new BatchStore("cells")
 
   /** Start the sketch stream: `docs` must carry a `text` column. */
   def start(spark: SparkSession, docs: DataFrame, stateDir: String,
@@ -51,38 +53,16 @@ object CmsStream {
     * them under `cells/batch=N`. Idempotent per `batchId`. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                       batchId: Long): Unit = {
-    CompactionLock.requireFree(stateDir, "CmsStream.applyMicroBatch")
-    recover(stateDir)
-    val dst = s"$stateDir/cells/batch=$batchId"
-    if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
+    if (store.replayed(stateDir, batchId, "CmsStream.applyMicroBatch"))
+      return
     val toks = batch.select(explode(tokens(col("text"))).as("token"))
-    DedupStream.writeAtomically(ProfileQueries.cmsCells(toks), dst,
-      mark = true)
+    store.write(stateDir, "cells", batchId, ProfileQueries.cmsCells(toks))
   }
 
-  /** Sweep marker-less (crashed mid-write) batch cell dirs and
-    * uncommitted takedown manifests. */
-  def recover(stateDir: String): Unit = {
-    // compaction swap recovery first (the DedupStream.recover protocol)
-    val cold = stateDir + ".cold"
-    val ctmp = stateDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(stateDir)) StreamFs.delete(cold)
-      else StreamFs.renameOrThrow(cold, stateDir)
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(stateDir))
-      StreamFs.delete(ctmp)
-    StreamFs.listNames(s"$stateDir/cells").filter(_.startsWith("batch="))
-      .filterNot(b =>
-        StreamFs.exists(s"$stateDir/cells/$b/${DedupStream.Marker}"))
-      .foreach(b => StreamFs.delete(s"$stateDir/cells/$b"))
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}").foreach { t =>
-      val p = s"$stateDir/${Takedown.Sub}/$t"
-      if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-          !StreamFs.exists(s"$p/${DedupStream.Marker}")))
-        StreamFs.delete(p)
-    }
-  }
+  /** Sweep marker-less (crashed mid-write) batch cell dirs, stale temps
+    * and uncommitted takedown manifests; finish or roll back an
+    * interrupted [[compact]] swap. */
+  def recover(stateDir: String): Unit = store.recover(stateDir)
 
   // ---- takedown: batch-grain subtraction by LINEARITY ------------------
 
@@ -98,40 +78,12 @@ object CmsStream {
     * micro-batches accordingly. The one-sided CMS guarantee survives:
     * the merged estimate still dominates every surviving batch's truth.
     * Idempotent per takedownId (marker = commit point, the house
-    * protocol); cost = one manifest write, independent of corpus AND of
+    * protocol; committed under the [[CompactionLock]] like every
+    * takedown); cost = one manifest write, independent of corpus AND of
     * removal size. */
   def applyTakedown(spark: SparkSession, stateDir: String,
-                    removedBatchIds: Seq[Long], takedownId: Long): Unit = {
-    recover(stateDir)
-    val dst = s"$stateDir/${Takedown.Sub}/td=$takedownId"
-    if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
-    val tmp = dst + ".tmp"
-    StreamFs.delete(tmp)
-    StreamFs.writeAtomicString(s"$tmp/removed_batches",
-      removedBatchIds.distinct.sorted.mkString("\n"))
-    StreamFs.delete(dst)
-    StreamFs.renameOrThrow(tmp, dst)
-    StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
-  }
-
-  /** Batch ids removed by every committed takedown. */
-  private def removedBatches(stateDir: String): Set[Long] =
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-      .filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$stateDir/${Takedown.Sub}/$t/${DedupStream.Marker}"))
-      .flatMap(t => StreamFs.readString(
-        s"$stateDir/${Takedown.Sub}/$t/removed_batches").toSeq)
-      .flatMap(_.split('\n')).filter(_.nonEmpty).map(_.toLong).toSet
-
-  private def committedCellDirs(stateDir: String): Seq[String] = {
-    val removed = removedBatches(stateDir)
-    StreamFs.listNames(s"$stateDir/cells").filter(_.startsWith("batch="))
-      .filter(b => StreamFs.exists(s"$stateDir/cells/$b/${DedupStream.Marker}"))
-      .filterNot(b => removed.contains(b.stripPrefix("batch=").toLong))
-      .map(b => s"$stateDir/cells/$b")
-      .filter(StreamFs.hasDataFiles) // post-compaction marker-only ids
-  }
+                    removedBatchIds: Seq[Long], takedownId: Long): Unit =
+    Takedown.applyBatchGrain(store, stateDir, removedBatchIds, takedownId)
 
   /** COMPACTION — sum the surviving batches' cells into the single
     * highest-id batch dir (the same linearity the read uses), leave
@@ -139,34 +91,21 @@ object CmsStream {
     * takedowns physically: removed batches' cells are simply not in the
     * sum, and the staged root carries no takedown dirs. */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val all = StreamFs.listNames(s"$stateDir/cells")
-        .filter(_.startsWith("batch="))
-        .filter(b => StreamFs.exists(
-          s"$stateDir/cells/$b/${DedupStream.Marker}"))
-        .sortBy(_.stripPrefix("batch=").toLong)
-      val hasTd = StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-        .exists(_.startsWith("td="))
+    store.compact(stateDir) { stage =>
+      val all = store.committed(stateDir)
       if (all.isEmpty) return
-      if (all.length <= 1 && !hasTd) return
-      val target = all.last
-      val stage = stateDir + ".ctmp"
-      StreamFs.delete(stage)
+      if (all.length <= 1 && BatchStore.takedownDirs(stateDir).isEmpty) return
       readSketch(spark, stateDir) // the takedown-aware merged cells
-        .write.parquet(s"$stage/cells/$target")
-      all.foreach(b =>
-        StreamFs.createMarker(s"$stage/cells/$b/${DedupStream.Marker}"))
-      val old = stateDir + ".cold"
-      StreamFs.renameOrThrow(stateDir, old)
-      StreamFs.renameOrThrow(stage, stateDir)
-      StreamFs.delete(old)
+        .write.parquet(s"$stage/cells/${all.last}")
+      store.markAll(stage, all)
     }
 
   /** The merged sketch over every committed, non-removed batch: cells
     * ADD (and, for takedowns, un-add by exclusion). */
   def readSketch(spark: SparkSession, stateDir: String): DataFrame = {
-    val dirs = committedCellDirs(stateDir)
+    val removed = Takedown.removedBatches(stateDir)
+    val dirs = store.dataDirs(stateDir, "cells")
+      .filterNot(d => removed.contains(BatchStore.batchId(d)))
     if (dirs.isEmpty)
       spark.range(0).select(col("id").cast("int").as("j"),
         col("id").as("bucket"), col("id").as("cell"))

@@ -1,10 +1,13 @@
 package graft.streaming
 
 /** Compaction mutual exclusion for the batch-dir streams — ONE `.clock`
-  * protocol shared by [[DedupStream]]/[[NearDupStream]] (same layout),
-  * [[GraphStream]] and [[EvalStream]], replacing their three copies of
-  * the round-13 check-then-create lock. Round-13 ADVICE + verdict #6
-  * hardening, in order:
+  * protocol taken by every [[BatchStore]] (Dedup and the gates sharing
+  * its layout — NearDup, Media, Url, Winnow, Scrub — plus Ann, Cms,
+  * Curation, Embed, Eval, Graph, Pack and Pair): compaction and every
+  * takedown commit run under [[withLock]], every micro-batch checks
+  * [[requireFree]]. It replaced three copies of the round-13
+  * check-then-create lock. Round-13 ADVICE + verdict #6 hardening, in
+  * order:
   *
   *  - ACQUISITION is an atomic create-if-absent
   *    ([[StreamFs.createExclusive]] — `CreateFlag.CREATE` without
@@ -24,8 +27,8 @@ package graft.streaming
   *    now a loud [[IllegalStateException]] instead of an operational
   *    footgun (a concurrent root rename-aside would strand a mid-flight
   *    batch write). A STALE lock does not block ingest — recovery
-  *    ([[DedupStream.recover]] et al.) sweeps the dead compactor's
-  *    stage as before.
+  *    ([[BatchStore.recover]]) sweeps the dead compactor's stage as
+  *    before.
   *
   * Object-store note: create-if-absent maps to a conditional PUT where
   * the connector supports it; where it does not, the lock degrades to
@@ -56,7 +59,7 @@ object CompactionLock {
   }
 
   /** Ingest-side guard: throw while a live compaction holds the root.
-    * (Verdict #6 — all compacting streams call this at micro-batch
+    * (Verdict #6 — [[BatchStore.replayed]] calls this at micro-batch
     * entry.) */
   def requireFree(root: String, op: String): Unit =
     if (heldLive(root))

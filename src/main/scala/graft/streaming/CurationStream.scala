@@ -43,8 +43,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * marker, so a crash mid-batch leaves orphans [[recover]] sweeps —
   * never a committed verdict missing its claims. Replay of a committed
   * batchId no-ops. Compact/ingest exclusion is enforced via the
-  * heartbeated [[CompactionLock]]. */
+  * heartbeated [[CompactionLock]] (the [[BatchStore]] protocol). */
 object CurationStream {
+
+  private val store = new BatchStore("verdicts", "claims", "counts")
 
   /** Start the ingest stream: `docs` must carry (doc_id long,
     * text string). */
@@ -58,16 +60,12 @@ object CurationStream {
       }
       .start()
 
-  private def committed(stateDir: String, b: String): Boolean =
-    StreamFs.exists(s"$stateDir/verdicts/$b/${DedupStream.Marker}")
-
   /** One micro-batch: score, claim hashes, gate, commit. Idempotent
     * per `batchId`. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       stateDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(stateDir, "CurationStream.applyMicroBatch")
-    recover(stateDir)
-    if (committed(stateDir, s"batch=$batchId")) return // replay
+    if (store.replayed(stateDir, batchId, "CurationStream.applyMicroBatch"))
+      return
     val scored = CurationQueries.scoredDocs(
         batch.select(col("doc_id"), col("text")))
       // FULL 128-bit md5 hex, exactly the batch pipeline's partition key
@@ -106,15 +104,12 @@ object CurationStream {
           CurationQueries.rejectReason.as("reject_reason"))
         // claims first, counts second, verdicts (with marker) last:
         // the verdicts marker is the single commit point
-        DedupStream.writeAtomically(
+        store.write(stateDir, "claims", batchId,
           withCanon.filter(col("is_canonical"))
-            .select("content_hash", "doc_id"),
-          s"$stateDir/claims/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(
-          CurationQueries.funnelCounts(verdicts),
-          s"$stateDir/counts/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(verdicts,
-          s"$stateDir/verdicts/batch=$batchId", mark = true)
+            .select("content_hash", "doc_id"))
+        store.write(stateDir, "counts", batchId,
+          CurationQueries.funnelCounts(verdicts))
+        store.write(stateDir, "verdicts", batchId, verdicts)
       } finally { withCanon.unpersist(); () }
     } finally { scored.unpersist(); () }
   }
@@ -122,48 +117,20 @@ object CurationStream {
   /** Sweep crash debris (claims/counts without a committed verdicts
     * twin, marker-less verdicts, stale temps) and finish or roll back
     * an interrupted [[compact]] swap. */
-  def recover(stateDir: String): Unit = {
-    val cold = stateDir + ".cold"
-    val ctmp = stateDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(stateDir)) StreamFs.delete(cold)
-      else StreamFs.renameOrThrow(cold, stateDir)
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(stateDir))
-      StreamFs.delete(ctmp)
-    Seq("verdicts", "claims", "counts").foreach { sub =>
-      StreamFs.listNames(s"$stateDir/$sub").filter(_.startsWith("batch="))
-        .foreach { b =>
-          if (!committed(stateDir, b)) StreamFs.delete(s"$stateDir/$sub/$b")
-        }
-      StreamFs.listNames(s"$stateDir/$sub").filter(_.endsWith(".tmp"))
-        .foreach(n => StreamFs.delete(s"$stateDir/$sub/$n"))
-    }
-    // uncommitted takedowns (crash before the td marker) are debris
-    StreamFs.listNames(s"$stateDir/$TdSub")
-      .foreach { t =>
-        if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-            !StreamFs.exists(s"$stateDir/$TdSub/$t/${DedupStream.Marker}")))
-          StreamFs.delete(s"$stateDir/$TdSub/$t")
-      }
-  }
+  def recover(stateDir: String): Unit = store.recover(stateDir)
 
   /** Merge all committed batch dirs into the highest id per sub-table,
     * earlier ids surviving as marker-only tombstones — the
     * [[DedupStream.compact]] pass over this stream's three sub-tables,
-    * same heartbeated lock and crash-safe root swap. */
+    * same heartbeated lock and crash-safe root swap
+    * ([[BatchStore.compact]]). */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val batches = StreamFs.listNames(s"$stateDir/verdicts")
-        .filter(_.startsWith("batch="))
-        .filter(b => committed(stateDir, b))
-        .sortBy(_.stripPrefix("batch=").toLong)
+    store.compact(stateDir) { stage =>
+      val batches = store.committed(stateDir)
       if (batches.isEmpty) return // removal-only td, nothing to fold
-      if (batches.length <= 1 && committedTdDirs(stateDir).isEmpty) return
+      if (batches.length <= 1 && BatchStore.takedownDirs(stateDir).isEmpty)
+        return
       val target = batches.last
-      val stage = stateDir + ".ctmp"
-      StreamFs.delete(stage)
       // the reader views ARE the fold: committed takedowns apply during
       // the rewrite and the staged root carries no td dirs
       readVerdicts(spark, stateDir)
@@ -171,41 +138,20 @@ object CurationStream {
       readClaims(spark, stateDir).foreach(
         _.write.parquet(s"$stage/claims/$target"))
       // counts COLLAPSE under the sum, not just concatenate
-      sumCounts(spark, stateDir,
-          batches.map(b => s"$stateDir/counts/$b")
-            .filter(StreamFs.hasDataFiles))
+      sumCounts(spark, stateDir, store.dataDirs(stateDir, "counts"))
         .write.parquet(s"$stage/counts/$target")
-      StreamFs.createMarker(s"$stage/verdicts/$target/${DedupStream.Marker}")
-      batches.init.foreach(b =>
-        StreamFs.createMarker(s"$stage/verdicts/$b/${DedupStream.Marker}"))
-      val old = stateDir + ".cold"
-      StreamFs.renameOrThrow(stateDir, old)
-      StreamFs.renameOrThrow(stage, stateDir)
-      StreamFs.delete(old)
+      store.markAll(stage, batches)
     }
-
-  private def claimDirs(stateDir: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/claims").filter(_.startsWith("batch="))
-      .filter(b => committed(stateDir, b))
-      .map(b => s"$stateDir/claims/$b")
-
-  private def committedDirsAll(stateDir: String, sub: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/$sub").filter(_.startsWith("batch="))
-      .filter(b => committed(stateDir, b))
-      .map(b => s"$stateDir/$sub/$b")
-
-  private def committedDirs(stateDir: String, sub: String): Seq[String] =
-    committedDirsAll(stateDir, sub).filter(StreamFs.hasDataFiles)
 
   /** Every committed verdict row so far — the stream's data output,
     * committed takedowns applied: removed docs gone, re-elected claim
     * owners carrying their CORRECTED (stateless-outcome) verdicts. */
   def readVerdicts(spark: SparkSession, stateDir: String): DataFrame = {
     val base = spark.read.option("basePath", s"$stateDir/verdicts")
-      .parquet(committedDirs(stateDir, "verdicts"): _*)
+      .parquet(store.dataDirs(stateDir, "verdicts"): _*)
       .drop("batch")
-    (readTd(spark, stateDir, "removed"), readTd(spark, stateDir,
-        "corrected")) match {
+    (Takedown.readSub(spark, stateDir, "removed"),
+        Takedown.readSub(spark, stateDir, "corrected")) match {
       case (None, _) => base
       case (Some(rm), corr) =>
         val r = rm.select("doc_id").distinct()
@@ -223,33 +169,18 @@ object CurationStream {
 
   // ---- takedown (the corpus gates' Takedown, claims-layout flavor) ----
 
-  private val TdSub = "takedown"
-
-  private def committedTdDirs(stateDir: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/$TdSub").filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$stateDir/$TdSub/$t/${DedupStream.Marker}"))
-      .map(t => s"$stateDir/$TdSub/$t")
-
-  private def readTd(spark: SparkSession, stateDir: String,
-                     sub: String): Option[DataFrame] = {
-    val dirs = committedTdDirs(stateDir).map(d => s"$d/$sub")
-      .filter(d => StreamFs.exists(d) && StreamFs.hasDataFiles(d))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
-
   /** The committed claim rows, takedowns applied: removed docs' claims
     * vanish (they stop rejecting arrivals of their hash) and re-elected
     * owners' claims take their place (arrivals of a class that still
     * has a representative stay rejected). None ⇔ no committed claims. */
   private def readClaims(spark: SparkSession,
                          stateDir: String): Option[DataFrame] = {
-    val dirs = claimDirs(stateDir).filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(stateDir, "claims")
     if (dirs.isEmpty) return None
     val base = spark.read.parquet(dirs: _*)
       .select("content_hash", "doc_id")
-    Some((readTd(spark, stateDir, "removed"), readTd(spark, stateDir,
-        "corrected")) match {
+    Some((Takedown.readSub(spark, stateDir, "removed"),
+        Takedown.readSub(spark, stateDir, "corrected")) match {
       case (None, _) => base
       case (Some(rm), corr) =>
         val r = rm.select("doc_id").distinct()
@@ -282,10 +213,7 @@ object CurationStream {
     * corpus text). */
   def applyTakedown(spark: SparkSession, stateDir: String,
                     removed: DataFrame, takedownId: Long): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val dst = s"$stateDir/$TdSub/td=$takedownId"
-      if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
+    store.commitTakedown(stateDir, takedownId) { tmp =>
       val r = removed.select("doc_id").distinct().localCheckpoint()
       // parquet-backed: both probes below re-scan it map-side filtered
       // by a removal-proportional broadcast — never materialized whole
@@ -305,13 +233,8 @@ object CurationStream {
         .withColumn("keep", col("reject_reason").isNull)
         .select(v.columns.map(col): _*)
         .localCheckpoint()
-      val tmp = dst + ".tmp"
-      StreamFs.delete(tmp)
       r.write.parquet(s"$tmp/removed")
       if (!corrected.isEmpty) corrected.write.parquet(s"$tmp/corrected")
-      StreamFs.delete(dst)
-      StreamFs.renameOrThrow(tmp, dst)
-      StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
     }
 
   private def sumCounts(spark: SparkSession, stateDir: String,
@@ -333,7 +256,7 @@ object CurationStream {
     * tables per batch dir, never the corpus. */
   def funnelLive(spark: SparkSession, stateDir: String): DataFrame =
     CurationQueries.funnelFromCounts(sumCounts(spark, stateDir,
-      committedDirs(stateDir, "counts")))
+      store.dataDirs(stateDir, "counts")))
 
   /** Trailing-`lastK`-batch funnel — the same tail over the subset sum
     * ([[EvalStream.readCountsWindow]]'s semantics: fewer dirs than the
@@ -347,9 +270,7 @@ object CurationStream {
     // filter second — a committed zero-row batch is an empty window
     // member, not a shift of the window into history (round-14 ADVICE)
     CurationQueries.funnelFromCounts(sumCounts(spark, stateDir,
-      committedDirsAll(stateDir, "counts")
-        .sortBy(_.split('/').last.stripPrefix("batch=").toLong)
-        .takeRight(lastK)
+      store.dirs(stateDir, "counts").takeRight(lastK)
         .filter(StreamFs.hasDataFiles)))
   }
 

@@ -31,9 +31,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * few KB) in one hash aggregate — state-BLIND ingest like
   * [[CmsStream]]/[[EvalStream]], so steady-state cost never grows with
   * history; the report is a subset sum over committed dirs plus a
-  * ≤|labels|-row fold. Crash safety, replay, compaction horizon, and
-  * the ingest/compact lock are [[EvalStream]]'s protocol verbatim. */
+  * ≤|labels|-row fold. Crash safety, replay and the ingest/compact
+  * lock are the [[BatchStore]] protocol; the compaction horizon is
+  * [[EvalStream]]'s. */
 object EmbedStream {
+
+  private val store = new BatchStore("counts")
 
   /** Collapse a batch of (label, embedding) rows to its integer-micro
     * component-sum table — THE state row shape, and the linear unit the
@@ -63,36 +66,15 @@ object EmbedStream {
     * `counts/batch=N`. Idempotent per `batchId`. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       stateDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(stateDir, "EmbedStream.applyMicroBatch")
-    recover(stateDir)
-    val dst = s"$stateDir/counts/batch=$batchId"
-    if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
-    DedupStream.writeAtomically(
-      embedCounts(batch.select("label", "embedding")), dst, mark = true)
+    if (store.replayed(stateDir, batchId, "EmbedStream.applyMicroBatch"))
+      return
+    store.write(stateDir, "counts", batchId,
+      embedCounts(batch.select("label", "embedding")))
   }
 
   /** Sweep marker-less batch dirs; finish or roll back an interrupted
-    * [[compact]] swap — [[EvalStream.recover]]'s steps verbatim. */
-  def recover(stateDir: String): Unit = {
-    val cold = stateDir + ".cold"
-    val ctmp = stateDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(stateDir)) StreamFs.delete(cold)
-      else StreamFs.renameOrThrow(cold, stateDir)
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(stateDir))
-      StreamFs.delete(ctmp)
-    StreamFs.listNames(s"$stateDir/counts").filter(_.startsWith("batch="))
-      .filterNot(b =>
-        StreamFs.exists(s"$stateDir/counts/$b/${DedupStream.Marker}"))
-      .foreach(b => StreamFs.delete(s"$stateDir/counts/$b"))
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}").foreach { t =>
-      val p = s"$stateDir/${Takedown.Sub}/$t"
-      if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-          !StreamFs.exists(s"$p/${DedupStream.Marker}")))
-        StreamFs.delete(p)
-    }
-  }
+    * [[compact]] swap — [[BatchStore.recover]]. */
+  def recover(stateDir: String): Unit = store.recover(stateDir)
 
   // ---- takedown: doc-grain subtraction by integer linearity ------------
 
@@ -119,12 +101,8 @@ object EmbedStream {
     * aggregate), never the corpus. */
   def applyTakedown(spark: SparkSession, stateDir: String,
                     removed: DataFrame, takedownId: Long): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val dst = s"$stateDir/${Takedown.Sub}/td=$takedownId"
-      if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
-      val ids = committedDirs(stateDir)
-        .map(_.split('/').last.stripPrefix("batch=").toLong).toSet
+    store.commitTakedown(stateDir, takedownId) { tmp =>
+      val ids = store.committed(stateDir).map(BatchStore.batchId).toSet
       val r = removed.select("doc_id", "batch", "label", "embedding")
         .localCheckpoint()
       val badBatch = r.select("batch").distinct().collect()
@@ -132,7 +110,7 @@ object EmbedStream {
       require(badBatch.isEmpty,
         s"takedown targets uncommitted batch ids ${badBatch.toSeq.sorted}")
       // resubmission guard: drop docs an earlier committed td removed
-      val fresh = priorRemoved(spark, stateDir) match {
+      val fresh = Takedown.removedIds(spark, stateDir) match {
         case None => r
         case Some(prev) =>
           r.join(broadcast(prev), Seq("doc_id"), "left_anti")
@@ -144,62 +122,31 @@ object EmbedStream {
         .groupBy("batch", "label", "dim")
         .agg((-sum(round(col("x") * 1e6).cast("long"))).as("s_micro"),
           (-count(lit(1))).as("n"))
-      val tmp = dst + ".tmp"
-      StreamFs.delete(tmp)
       fresh.select("doc_id").distinct().write.parquet(s"$tmp/removed")
       neg.write.partitionBy("batch").parquet(s"$tmp/cells")
-      StreamFs.delete(dst)
-      StreamFs.renameOrThrow(tmp, dst)
-      StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
     }
-
-  /** doc_ids removed by every COMMITTED takedown so far. */
-  private def priorRemoved(spark: SparkSession,
-                           stateDir: String): Option[DataFrame] = {
-    val dirs = StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-      .filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$stateDir/${Takedown.Sub}/$t/${DedupStream.Marker}"))
-      .map(t => s"$stateDir/${Takedown.Sub}/$t/removed")
-      .filter(d => StreamFs.exists(d) && StreamFs.hasDataFiles(d))
-    if (dirs.isEmpty) None
-    else Some(spark.read.parquet(dirs: _*).select("doc_id").distinct())
-  }
 
   /** Committed negated-correction cell dirs restricted to the batch ids
     * a reader is summing — window subtraction stays window-true. */
   private def tdCellDirs(stateDir: String, ids: Set[Long]): Seq[String] =
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-      .filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$stateDir/${Takedown.Sub}/$t/${DedupStream.Marker}"))
-      .flatMap { t =>
-        StreamFs.listNames(s"$stateDir/${Takedown.Sub}/$t/cells")
-          .filter(_.startsWith("batch="))
-          .filter(b => ids.contains(b.stripPrefix("batch=").toLong))
-          .map(b => s"$stateDir/${Takedown.Sub}/$t/cells/$b")
-      }
-      .filter(StreamFs.hasDataFiles)
+    BatchStore.takedownDirs(stateDir).flatMap { t =>
+      StreamFs.listNames(s"$t/cells").filter(_.startsWith("batch="))
+        .filter(b => ids.contains(BatchStore.batchId(b)))
+        .map(b => s"$t/cells/$b")
+    }.filter(StreamFs.hasDataFiles)
 
   /** Merge committed per-batch dirs older than the `keepLast` horizon
     * into one summed dir — [[EvalStream.compact]]'s linearity-as-
-    * maintenance, heartbeated lock and crash-safe root swap included.
-    * `keepLast ≥` the drift window preserves trailing-window reports
-    * exactly (spec-pinned). */
+    * maintenance, heartbeated lock and crash-safe root swap
+    * ([[BatchStore.compact]]) included. `keepLast ≥` the drift window
+    * preserves trailing-window reports exactly (spec-pinned). */
   def compact(spark: SparkSession, stateDir: String,
               keepLast: Int = 0): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val batches = committedDirs(stateDir).map(_.split('/').last)
-        .sortBy(_.stripPrefix("batch=").toLong)
-      val tds = StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-        .filter(_.startsWith("td="))
-        .filter(t => StreamFs.exists(
-          s"$stateDir/${Takedown.Sub}/$t/${DedupStream.Marker}"))
+    store.compact(stateDir) { stage =>
+      val batches = store.committed(stateDir)
+      val tds = BatchStore.takedownDirs(stateDir)
       val merge = batches.dropRight(keepLast)
       if (merge.length <= 1 && tds.isEmpty) return
-      val stage = stateDir + ".ctmp"
-      StreamFs.delete(stage)
       // takedowns FOLD physically: every written dir is the base+
       // correction sum for its batch ids; fully-cancelled cells vanish
       def fold(names: Seq[String], target: String): Unit =
@@ -208,36 +155,23 @@ object EmbedStream {
           .write.parquet(s"$stage/counts/$target")
       fold(merge, if (merge.nonEmpty) merge.last else "")
       batches.takeRight(keepLast).foreach(b => fold(Seq(b), b))
-      batches.foreach(b =>
-        StreamFs.createMarker(s"$stage/counts/$b/${DedupStream.Marker}"))
+      store.markAll(stage, batches)
       // td ids stay replay-recognizable; removed-id logs survive so the
       // resubmission guard keeps holding after the fold
       tds.foreach { t =>
-        val rm = s"$stateDir/${Takedown.Sub}/$t/removed"
-        if (StreamFs.exists(rm) && StreamFs.hasDataFiles(rm))
-          spark.read.parquet(rm).write
-            .parquet(s"$stage/${Takedown.Sub}/$t/removed")
-        else StreamFs.mkdirs(s"$stage/${Takedown.Sub}/$t")
-        StreamFs.createMarker(
-          s"$stage/${Takedown.Sub}/$t/${DedupStream.Marker}")
+        val staged = s"$stage/${BatchStore.TdSub}/${t.split('/').last}"
+        if (StreamFs.hasDataFiles(s"$t/removed"))
+          spark.read.parquet(s"$t/removed").write.parquet(s"$staged/removed")
+        else StreamFs.mkdirs(staged)
+        BatchStore.mark(staged)
       }
-      val old = stateDir + ".cold"
-      StreamFs.renameOrThrow(stateDir, old)
-      StreamFs.renameOrThrow(stage, stateDir)
-      StreamFs.delete(old)
     }
-
-  private def committedDirs(stateDir: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/counts").filter(_.startsWith("batch="))
-      .filter(b =>
-        StreamFs.exists(s"$stateDir/counts/$b/${DedupStream.Marker}"))
-      .map(b => s"$stateDir/counts/$b")
 
   /** Merged component sums over every committed batch (marker-only
     * tombstones excluded explicitly, never via the hidden-file
     * filter), committed takedown corrections folded in. */
   def readCounts(spark: SparkSession, stateDir: String): DataFrame =
-    sumWithTd(spark, stateDir, committedDirs(stateDir))
+    sumWithTd(spark, stateDir, store.dirs(stateDir, "counts"))
 
   /** Merged sums over the trailing `lastK` committed data dirs —
     * integer linearity makes the window a subset sum
@@ -250,9 +184,7 @@ object EmbedStream {
     // a committed zero-row batch counts as an empty window member
     // instead of shifting the window into history (round-14 ADVICE)
     sumWithTd(spark, stateDir,
-      committedDirs(stateDir)
-        .sortBy(_.split('/').last.stripPrefix("batch=").toLong)
-        .takeRight(lastK))
+      store.dirs(stateDir, "counts").takeRight(lastK))
   }
 
   /** The effective component sums of a batch-dir member set: base cells
@@ -263,8 +195,7 @@ object EmbedStream {
     * rebuild never emits them. */
   private def sumWithTd(spark: SparkSession, stateDir: String,
                         memberDirs: Seq[String]): DataFrame = {
-    val ids = memberDirs
-      .map(_.split('/').last.stripPrefix("batch=").toLong).toSet
+    val ids = memberDirs.map(BatchStore.batchId).toSet
     val base = memberDirs.filter(StreamFs.hasDataFiles)
     val tds = tdCellDirs(stateDir, ids)
     val parts = Seq(

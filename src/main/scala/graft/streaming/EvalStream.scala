@@ -23,8 +23,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * aggregate regardless of history, and the evaluation read aggregates
   * #batches · NDV(batch scores) tiny count rows.
   *
-  * Crash safety: per-batch dirs commit via [[DedupStream]]'s marker
-  * protocol (staged write → rename → `_GRAFT_COMMIT`); [[recover]]
+  * Crash safety: per-batch dirs commit via the [[BatchStore]] marker
+  * protocol (staged write → rename → commit marker); [[recover]]
   * sweeps marker-less orphans; replay of a committed batchId no-ops.
   *
   * Scale note (100 TB): per-batch state is bounded by the batch's score
@@ -35,6 +35,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * linearity, applied as maintenance (replace committed dirs with one
   * dir holding their sum). */
 object EvalStream {
+
+  private val store = new BatchStore("counts")
 
   /** Start the monitor stream: `scored` must carry
     * (score long, label boolean, decision boolean). */
@@ -53,37 +55,15 @@ object EvalStream {
   def applyMicroBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                       batchId: Long): Unit = {
     // compact/ingest exclusion enforced, not just documented (verdict #6)
-    CompactionLock.requireFree(stateDir, "EvalStream.applyMicroBatch")
-    recover(stateDir)
-    val dst = s"$stateDir/counts/batch=$batchId"
-    if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
-    DedupStream.writeAtomically(
-      EvalQueries.scoredCounts(
-        batch.select("score", "label", "decision")), dst, mark = true)
+    if (store.replayed(stateDir, batchId, "EvalStream.applyMicroBatch"))
+      return
+    store.write(stateDir, "counts", batchId, EvalQueries.scoredCounts(
+      batch.select("score", "label", "decision")))
   }
 
   /** Sweep marker-less (crashed mid-write) batch count dirs, and
     * complete or roll back an interrupted [[compact]] swap. */
-  def recover(stateDir: String): Unit = {
-    val cold = stateDir + ".cold"
-    val ctmp = stateDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(stateDir)) StreamFs.delete(cold) // new root live
-      else StreamFs.renameOrThrow(cold, stateDir) // crash between renames
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(stateDir))
-      StreamFs.delete(ctmp)
-    StreamFs.listNames(s"$stateDir/counts").filter(_.startsWith("batch="))
-      .filterNot(b =>
-        StreamFs.exists(s"$stateDir/counts/$b/${DedupStream.Marker}"))
-      .foreach(b => StreamFs.delete(s"$stateDir/counts/$b"))
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}").foreach { t =>
-      val p = s"$stateDir/${Takedown.Sub}/$t"
-      if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-          !StreamFs.exists(s"$p/${DedupStream.Marker}")))
-        StreamFs.delete(p)
-    }
-  }
+  def recover(stateDir: String): Unit = store.recover(stateDir)
 
   // ---- takedown: batch-grain count subtraction (the CmsStream fold) ----
 
@@ -94,30 +74,12 @@ object EvalStream {
     * stays committed (replays still no-op, and trailing windows keep
     * their TIMELINE — the removed batch becomes an EMPTY window member,
     * the committed-zero-row-batch convention, rather than shifting the
-    * window into history). Idempotent per takedownId; cost = one
-    * manifest write. */
+    * window into history). Idempotent per takedownId, committed under
+    * the [[CompactionLock]] like every takedown; cost = one manifest
+    * write. */
   def applyTakedown(spark: SparkSession, stateDir: String,
-                    removedBatchIds: Seq[Long], takedownId: Long): Unit = {
-    recover(stateDir)
-    val dst = s"$stateDir/${Takedown.Sub}/td=$takedownId"
-    if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
-    val tmp = dst + ".tmp"
-    StreamFs.delete(tmp)
-    StreamFs.writeAtomicString(s"$tmp/removed_batches",
-      removedBatchIds.distinct.sorted.mkString("\n"))
-    StreamFs.delete(dst)
-    StreamFs.renameOrThrow(tmp, dst)
-    StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
-  }
-
-  private def removedBatches(stateDir: String): Set[Long] =
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-      .filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$stateDir/${Takedown.Sub}/$t/${DedupStream.Marker}"))
-      .flatMap(t => StreamFs.readString(
-        s"$stateDir/${Takedown.Sub}/$t/removed_batches").toSeq)
-      .flatMap(_.split('\n')).filter(_.nonEmpty).map(_.toLong).toSet
+                    removedBatchIds: Seq[Long], takedownId: Long): Unit =
+    Takedown.applyBatchGrain(store, stateDir, removedBatchIds, takedownId)
 
   /** COMPACTION — the linearity the merge relies on IS the compaction:
     * rewrite committed per-batch count dirs into one dir holding their
@@ -129,26 +91,22 @@ object EvalStream {
     * across compaction (spec-pinned); only history older than the
     * horizon collapses. `keepLast = 0` merges everything (the pure
     * small-files pass — after it a trailing window degrades to
-    * lifetime, by the trailing-window semantics below). Same
-    * crash-safe root-swap + heartbeated [[CompactionLock]] protocol as
-    * [[DedupStream.compact]] / [[GraphStream.compact]]; run while the
-    * ingest is idle — enforced by [[applyMicroBatch]]'s guard. */
+    * lifetime, by the trailing-window semantics below). The
+    * crash-safe root-swap + heartbeated [[CompactionLock]] protocol of
+    * [[BatchStore.compact]]; run while the ingest is idle — enforced by
+    * [[applyMicroBatch]]'s guard. */
   def compact(spark: SparkSession, stateDir: String,
               keepLast: Int = 0): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val batches = committedDirs(stateDir).map(_.split('/').last)
-        .sortBy(_.stripPrefix("batch=").toLong)
+    store.compact(stateDir) { stage =>
+      val batches = store.committed(stateDir)
       val merge = batches.dropRight(keepLast)
-      val hasTd = removedBatches(stateDir).nonEmpty
+      val hasTd = Takedown.removedBatches(stateDir).nonEmpty
       if (merge.length <= 1 && !hasTd) return
       // takedowns FOLD here: removed batches' cells are simply not in
       // the merged sum (and not carried in the horizon), their ids stay
       // marker-only, and the staged root carries no takedown dirs
       val merged = sumDirs(spark, stateDir,
         dataDirsOf(stateDir, merge.map(b => s"$stateDir/counts/$b")))
-      val stage = stateDir + ".ctmp"
-      StreamFs.delete(stage)
       if (merge.nonEmpty) merged.write.parquet(s"$stage/counts/${merge.last}")
       // horizon dirs carry over with their data (small count tables —
       // one read+write each); merged ids become marker-only tombstones
@@ -157,29 +115,16 @@ object EvalStream {
         if (dataDirsOf(stateDir, Seq(src)).nonEmpty)
           spark.read.parquet(src).write.parquet(s"$stage/counts/$b")
       }
-      batches.foreach(b =>
-        StreamFs.createMarker(s"$stage/counts/$b/${DedupStream.Marker}"))
-      val old = stateDir + ".cold"
-      StreamFs.renameOrThrow(stateDir, old)
-      StreamFs.renameOrThrow(stage, stateDir)
-      StreamFs.delete(old)
+      store.markAll(stage, batches)
     }
 
-  /** Committed batch dirs — the TIMELINE membership (window positions,
-    * compaction markers). Takedown-removed ids stay members here; only
-    * [[dataDirsOf]] drops their data. */
-  private def committedDirs(stateDir: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/counts").filter(_.startsWith("batch="))
-      .filter(b =>
-        StreamFs.exists(s"$stateDir/counts/$b/${DedupStream.Marker}"))
-      .map(b => s"$stateDir/counts/$b")
-
-  /** The readable subset of a dir list: data files present AND not
-    * removed by a committed takedown (batch-grain subtraction). */
+  /** The readable subset of a committed dir list (the TIMELINE
+    * membership — takedown-removed ids stay members, so windows keep
+    * their positions): data files present AND not removed by a
+    * committed takedown (batch-grain subtraction). */
   private def dataDirsOf(stateDir: String, dirs: Seq[String]): Seq[String] = {
-    val removed = removedBatches(stateDir)
-    dirs.filterNot(d =>
-        removed.contains(d.split('/').last.stripPrefix("batch=").toLong))
+    val removed = Takedown.removedBatches(stateDir)
+    dirs.filterNot(d => removed.contains(BatchStore.batchId(d)))
       .filter(StreamFs.hasDataFiles)
   }
 
@@ -189,7 +134,7 @@ object EvalStream {
     * ADVICE). */
   def readCounts(spark: SparkSession, stateDir: String): DataFrame =
     sumDirs(spark, stateDir,
-      dataDirsOf(stateDir, committedDirs(stateDir)))
+      dataDirsOf(stateDir, store.dirs(stateDir, "counts")))
 
   /** Merged counts over the LAST `lastK` committed data dirs by batch
     * id — count linearity makes a trailing window a SUBSET sum over
@@ -208,9 +153,7 @@ object EvalStream {
     // further into history (round-14 ADVICE)
     sumDirs(spark, stateDir,
       dataDirsOf(stateDir,
-        committedDirs(stateDir)
-          .sortBy(_.split('/').last.stripPrefix("batch=").toLong)
-          .takeRight(lastK)))
+        store.dirs(stateDir, "counts").takeRight(lastK)))
   }
 
   private def sumDirs(spark: SparkSession, stateDir: String,

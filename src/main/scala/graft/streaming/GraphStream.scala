@@ -9,7 +9,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 /** STREAMING kNN-GRAPH MAINTENANCE — the graph twin of [[AnnStream]]:
   * keep a searchable kNN graph current as vectors arrive, without ever
   * re-reading the committed corpus. Same batch-dir commit protocol
-  * (marker files, replay no-op, crash sweep via [[recover]]).
+  * ([[BatchStore]]: marker files, replay no-op, crash sweep via
+  * [[recover]]).
   *
   *  - [[init]] persists the cell centroids and the hash-bucket stride
   *    from a bootstrap corpus — fixed meta, so candidate generation
@@ -56,6 +57,14 @@ object GraphStream {
 
   private val kNN = SimilarityQueries.knnK
 
+  /** A batch id is committed exactly when its NODES dir carries the
+    * marker — the single batch-level commit point (edges/rings are
+    * written first, unmarked; round-12 advice: a per-kind marker let a
+    * crash between the edges and nodes writes expose edges from an
+    * uncommitted batch that [[recover]] could not sweep). `meta/` sits
+    * beside the batch sub-tables. */
+  private[streaming] val store = new BatchStore("nodes", "edges", "rings")
+
   private def withNorm(df: DataFrame): DataFrame =
     df.withColumn("norm", sqrt(dotProduct(col("e"), col("e"))))
 
@@ -75,16 +84,16 @@ object GraphStream {
     val cents = v.filter(col("vec_id") % stride === 1)
       .select(col("vec_id").as("cell"), col("e").as("ce"),
         col("norm").as("cn"))
-    DedupStream.writeAtomically(cents, s"$indexDir/meta/centroids",
+    BatchStore.writeDir(s"$indexDir/meta/centroids", cents,
       mark = true)
     import spark.implicits._
-    DedupStream.writeAtomically(Seq(stride).toDF("stride"),
-      s"$indexDir/meta/stride", mark = true)
+    BatchStore.writeDir(s"$indexDir/meta/stride", Seq(stride).toDF("stride"),
+      mark = true)
   }
 
   private def committedMeta(indexDir: String): Boolean =
-    StreamFs.exists(s"$indexDir/meta/centroids/${DedupStream.Marker}") &&
-      StreamFs.exists(s"$indexDir/meta/stride/${DedupStream.Marker}")
+    BatchStore.isCommitted(s"$indexDir/meta/centroids") &&
+      BatchStore.isCommitted(s"$indexDir/meta/stride")
 
   /** Start the ingest stream: `vectors` must carry
     * (vec_id long, embedding array). [[init]] must have run. */
@@ -109,24 +118,12 @@ object GraphStream {
           lit(0L).as("hbkt"), array().cast("array<double>").as("e"),
           lit(0.0).as("norm"))), Seq("vec_id"))
 
-  /** A batch id is committed exactly when its NODES dir carries the
-    * marker — the single batch-level commit point (edges/rings are
-    * written first, unmarked; round-12 advice: a per-kind marker let a
-    * crash between the edges and nodes writes expose edges from an
-    * uncommitted batch that [[recover]] could not sweep). */
-  private def committed(indexDir: String, batchName: String): Boolean =
-    StreamFs.exists(s"$indexDir/nodes/$batchName/${DedupStream.Marker}")
-
   private def readBatches(spark: SparkSession, indexDir: String,
       kind: String): Option[DataFrame] = {
     // marker-only dirs (post-compaction id tombstones) are excluded
     // EXPLICITLY — the read never leans on Spark's hidden-file filter
-    // to skip a dir holding only _GRAFT_COMMIT (round-13 ADVICE)
-    val dirs = StreamFs.listNames(s"$indexDir/nodes")
-      .filter(_.startsWith("batch="))
-      .filter(b => committed(indexDir, b) &&
-        StreamFs.hasDataFiles(s"$indexDir/$kind/$b"))
-      .map(b => s"$indexDir/$kind/$b")
+    // to skip a dir holding only the marker (round-13 ADVICE)
+    val dirs = store.dataDirs(indexDir, kind)
     if (dirs.isEmpty) None
     // drop the synthetic batch= partition column — the live view is the
     // UNION of batches; which batch contributed a row is irrelevant
@@ -140,10 +137,8 @@ object GraphStream {
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       indexDir: String, batchId: Long): Unit = {
     // compact/ingest exclusion enforced, not just documented (verdict #6)
-    CompactionLock.requireFree(indexDir, "GraphStream.applyMicroBatch")
-    recover(indexDir)
-    val nodesDst = s"$indexDir/nodes/batch=$batchId"
-    if (StreamFs.exists(s"$nodesDst/${DedupStream.Marker}")) return // replay
+    if (store.replayed(indexDir, batchId, "GraphStream.applyMicroBatch"))
+      return
     require(committedMeta(indexDir),
       s"GraphStream.init has not run for $indexDir")
     val cents = broadcast(spark.read.parquet(s"$indexDir/meta/centroids"))
@@ -205,52 +200,18 @@ object GraphStream {
       .join(mem.withColumnRenamed("vec_id", "dst"), Seq("hbkt", "p"))
       .select("src", "dst")
     // edges/rings first, UNMARKED; the nodes marker is the single
-    // batch-level commit point (see [[committed]]) — a crash after the
+    // batch-level commit point (see [[store]]) — a crash after the
     // edges write leaves an unmarked-batch edges dir that readers ignore
     // and recover() sweeps
-    writeBatch(edges, s"$indexDir/edges/batch=$batchId", mark = false)
-    writeBatch(rings, s"$indexDir/rings/batch=$batchId", mark = false)
-    writeBatch(newNodes, nodesDst, mark = true)
-  }
-
-  private def writeBatch(df: DataFrame, dst: String, mark: Boolean): Unit = {
-    val tmp = dst + ".tmp"
-    StreamFs.delete(tmp)
-    df.write.mode("overwrite").parquet(tmp)
-    StreamFs.delete(dst)
-    StreamFs.renameOrThrow(tmp, dst)
-    if (mark) StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
+    store.write(indexDir, "edges", batchId, edges)
+    store.write(indexDir, "rings", batchId, rings)
+    store.write(indexDir, "nodes", batchId, newNodes)
   }
 
   /** Sweep batch dirs whose batch never committed (no NODES marker) and
     * stale temp dirs, and complete or roll back an interrupted
     * [[compact]] swap. Safe to call any time. */
-  def recover(indexDir: String): Unit = {
-    // compaction swap recovery first: the root itself may be mid-rename
-    // (the DedupStream.compact protocol verbatim)
-    val cold = indexDir + ".cold"
-    val ctmp = indexDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(indexDir)) StreamFs.delete(cold) // new root live
-      else StreamFs.renameOrThrow(cold, indexDir) // crash between renames
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(indexDir))
-      StreamFs.delete(ctmp)
-    Seq("nodes", "edges", "rings").foreach { kind =>
-      StreamFs.listNames(s"$indexDir/$kind").foreach { n =>
-        val p = s"$indexDir/$kind/$n"
-        if (n.endsWith(".tmp")) StreamFs.delete(p)
-        else if (n.startsWith("batch=") && !committed(indexDir, n))
-          StreamFs.delete(p)
-      }
-    }
-    StreamFs.listNames(s"$indexDir/${Takedown.Sub}").foreach { t =>
-      val p = s"$indexDir/${Takedown.Sub}/$t"
-      if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-          !StreamFs.exists(s"$p/${DedupStream.Marker}")))
-        StreamFs.delete(p)
-    }
-  }
+  def recover(indexDir: String): Unit = store.recover(indexDir)
 
   /** TAKEDOWN over the graph index — removal-only tombstone (every
     * vector is a node unconditionally; no re-election exists): removed
@@ -295,8 +256,8 @@ object GraphStream {
     * dirs (the replay no-op check is exactly "the nodes marker exists");
     * meta/ is carried over verbatim. Crash-safe via the root-level
     * rename-aside swap + the heartbeated [[CompactionLock]]
-    * ([[DedupStream.compact]]'s protocol; [[recover]] completes or
-    * rolls back an interrupted swap). CONTRACT: run while the ingest
+    * ([[BatchStore.compact]]; [[recover]] completes or rolls back an
+    * interrupted swap). CONTRACT: run while the ingest
     * stream is idle — and enforced: [[applyMicroBatch]] throws while
     * the lock is live.
     *
@@ -305,13 +266,9 @@ object GraphStream {
     * cost a deployment already pays for the batch build, amortized over
     * however many micro-batches ran since the last compaction. */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    CompactionLock.withLock(indexDir) {
+    store.compact(indexDir) { stage =>
       import graft.ops.SimilarityQueries
-      recover(indexDir)
-      val batches = StreamFs.listNames(s"$indexDir/nodes")
-        .filter(_.startsWith("batch="))
-        .filter(b => committed(indexDir, b))
-        .sortBy(_.stripPrefix("batch=").toLong)
+      val batches = store.committed(indexDir)
       if (batches.isEmpty) return
       val target = batches.last
       // all three consumers below (node rewrite, refine, rings) read the
@@ -325,7 +282,7 @@ object GraphStream {
       // rebuild-over-survivors exactly); without takedowns the live
       // graph IS that set (monotone-candidates argument), no regen cost
       val live =
-        if (Takedown.committedDirs(indexDir).nonEmpty)
+        if (BatchStore.takedownDirs(indexDir).nonEmpty)
           candidateEdges(nodes).select("src", "dst")
         else readGraph(spark, indexDir).select("src", "dst")
       val rings = fullRings(nodes).localCheckpoint() // ring write + init
@@ -338,23 +295,16 @@ object GraphStream {
           SimilarityQueries.nndKInner)
         .filter(col("rank") <= kNN)
         .select("src", "dst", "cosine")
-      val stage = indexDir + ".ctmp"
-      StreamFs.delete(stage)
       nodes.write.parquet(s"$stage/nodes/$target")
       refined.write.parquet(s"$stage/edges/$target")
       rings.write.parquet(s"$stage/rings/$target")
       Seq("centroids", "stride").foreach { m =>
         spark.read.parquet(s"$indexDir/meta/$m")
           .write.parquet(s"$stage/meta/$m")
-        StreamFs.createMarker(s"$stage/meta/$m/${DedupStream.Marker}")
+        BatchStore.mark(s"$stage/meta/$m")
       }
       // marker-only dirs keep every committed id recognizable on replay
-      batches.foreach(b =>
-        StreamFs.createMarker(s"$stage/nodes/$b/${DedupStream.Marker}"))
-      val old = indexDir + ".cold"
-      StreamFs.renameOrThrow(indexDir, old)
-      StreamFs.renameOrThrow(stage, indexDir)
-      StreamFs.delete(old)
+      store.markAll(stage, batches)
     }
 
   /** Hash-ring long links over the FULL membership: k successors per

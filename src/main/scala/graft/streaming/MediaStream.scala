@@ -48,7 +48,7 @@ case class MediaSig(doc_id: Long, payload: Array[Byte],
   * Storage layout, marker commit protocol, idempotent replay, crash
   * sweep, compaction ([[DedupStream.compact]] — the rewrite is
   * schema-agnostic) and the [[CompactionLock]] ingest guard are
-  * [[DedupStream]]'s verbatim: docs/batch=N (kept payloads + their
+  * [[DedupStream]]'s [[BatchStore]] layout: docs/batch=N (kept payloads + their
   * fingerprints) and index/batch=N (every processed doc's band rows),
   * corpus marker as the single commit point.
   *
@@ -61,6 +61,8 @@ case class MediaSig(doc_id: Long, payload: Array[Byte],
   * is in-row (`bit_count`), no second join, and committed payloads are
   * never re-decoded. */
 object MediaStream {
+
+  private def store = DedupStream.store
 
   private val cap = MediaQueries.maxBandDf
 
@@ -170,11 +172,9 @@ object MediaStream {
     * Idempotent per `batchId` via the corpus commit marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       corpusDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(corpusDir, "MediaStream.applyMicroBatch")
-    DedupStream.recover(corpusDir) // same layout → same orphan sweep
-    if (StreamFs.exists(
-        s"$corpusDir/docs/batch=$batchId/${DedupStream.Marker}"))
-      return // replay
+    // same layout → same ingest guard and orphan sweep
+    if (store.replayed(corpusDir, batchId, "MediaStream.applyMicroBatch"))
+      return
     val sigs = signed(spark, batch).localCheckpoint() // decode ONCE
     val bands = bandRows(sigs).localCheckpoint() // 4 consumers
     val dropped = droppedIds(spark, bands, corpusDir)
@@ -187,24 +187,20 @@ object MediaStream {
     // (kept docs only; its marker is the commit point)
     // arrival_seq: the true-arrival-order witness key — see
     // DedupStream.applyMicroBatch
-    DedupStream.writeAtomically(
+    store.write(corpusDir, "index", batchId,
       bands.select("modality", "chunk", "key", "fp", "doc_id")
-        .withColumn("arrival_seq", lit(batchId)),
-      s"$corpusDir/index/batch=$batchId", mark = false)
-    DedupStream.writeAtomically(
+        .withColumn("arrival_seq", lit(batchId)))
+    store.write(corpusDir, "drops", batchId,
       sigs.join(dropped, Seq("doc_id"), "left_semi")
         .select("doc_id", "payload", "modality", "fp")
-        .withColumn("arrival_seq", lit(batchId)),
-      s"$corpusDir/drops/batch=$batchId", mark = false)
-    DedupStream.writeAtomically(
+        .withColumn("arrival_seq", lit(batchId)))
+    store.write(corpusDir, "counts", batchId,
       sigs.join(dropped.withColumn("__hit", lit(1)), Seq("doc_id"), "left")
         .groupBy("modality")
         .agg(count(lit(1)).as("n_processed"),
-          count(col("__hit")).as("n_dropped")),
-      s"$corpusDir/counts/batch=$batchId", mark = false)
-    DedupStream.writeAtomically(
-      kept.select("doc_id", "payload", "modality", "fp"),
-      s"$corpusDir/docs/batch=$batchId", mark = true)
+          count(col("__hit")).as("n_dropped")))
+    store.write(corpusDir, "docs", batchId,
+      kept.select("doc_id", "payload", "modality", "fp"))
   }
 
   /** DRY-RUN gate: the verdicts `applyMicroBatch` would reach for
@@ -226,8 +222,7 @@ object MediaStream {
   /** The kept (near-dup-free) media corpus so far — committed batches
     * only, marker-only tombstones excluded explicitly. */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "docs")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "docs")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"),
@@ -242,8 +237,7 @@ object MediaStream {
   /** The committed (modality, chunk, key, fp, doc_id) band index —
     * every processed document of every committed batch. */
   def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "index")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "index")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(lit("").as("modality"), lit(0).as("chunk"),
@@ -256,12 +250,6 @@ object MediaStream {
   }
 
   // ---- per-batch gate counts + drift ---------------------------------
-
-  private def countDirsAll(corpusDir: String): Seq[String] =
-    StreamFs.listNames(s"$corpusDir/counts").filter(_.startsWith("batch="))
-      .filter(b => StreamFs.exists(
-        s"$corpusDir/docs/$b/${DedupStream.Marker}"))
-      .map(b => s"$corpusDir/counts/$b")
 
   private def sumCounts(spark: SparkSession, corpusDir: String,
                         dirs: Seq[String]): DataFrame =
@@ -277,8 +265,7 @@ object MediaStream {
   /** Lifetime per-modality gate tally — counts ADD, so this reads the
     * ≤2-row committed count tables, never the corpus or the payloads. */
   def readCounts(spark: SparkSession, corpusDir: String): DataFrame =
-    sumCounts(spark, corpusDir,
-      countDirsAll(corpusDir).filter(StreamFs.hasDataFiles))
+    sumCounts(spark, corpusDir, store.dataDirs(corpusDir, "counts"))
 
   /** Trailing-`lastK` tally — window membership over ALL committed
     * batch ids first, data-file filter second (a committed zero-row
@@ -287,9 +274,7 @@ object MediaStream {
                        lastK: Int): DataFrame = {
     require(lastK > 0, s"window must be positive, got $lastK")
     sumCounts(spark, corpusDir,
-      countDirsAll(corpusDir)
-        .sortBy(_.split('/').last.stripPrefix("batch=").toLong)
-        .takeRight(lastK)
+      store.dirs(corpusDir, "counts").takeRight(lastK)
         .filter(StreamFs.hasDataFiles))
   }
 

@@ -29,9 +29,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Storage layout, marker-file commit protocol, idempotent replay,
   * crash-orphan sweep and the filesystem contract are exactly
-  * [[DedupStream]]'s (docs/batch=N + index/batch=N, staged write +
-  * `_GRAFT_COMMIT` marker on the corpus dir as the commit point, all I/O
-  * through [[StreamFs]]).
+  * [[DedupStream]]'s (docs/batch=N + index/batch=N, the
+  * [[BatchStore]] protocol with the corpus dir as the commit point).
   *
   * Scale notes (100 TB): per batch, ONE equi-join of the batch's ~4 band
   * rows/doc against the band-keyed index (bucketed by (band, key) at
@@ -40,6 +39,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * is never rescanned.
   */
 object NearDupStream {
+
+  private def store = DedupStream.store
 
   private[streaming] val sigAgreeMin = DedupQueries.minhashK * 2 / 3 // 8 of 12
 
@@ -59,11 +60,9 @@ object NearDupStream {
     * per `batchId` via the corpus commit marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame, corpusDir: String,
                       batchId: Long): Unit = {
-    // same layout → same compact(), so the same ingest guard (verdict #6)
-    CompactionLock.requireFree(corpusDir, "NearDupStream.applyMicroBatch")
-    DedupStream.recover(corpusDir) // same layout → same orphan sweep
-    if (StreamFs.exists(s"$corpusDir/docs/batch=$batchId/${DedupStream.Marker}"))
-      return // replay
+    // same layout → same compact(), ingest guard and orphan sweep
+    if (store.replayed(corpusDir, batchId, "NearDupStream.applyMicroBatch"))
+      return
     val sigs = DedupQueries.minhashSigsOf(batch)
       .select(col("doc_id"),
         array((0 until DedupQueries.minhashK).map(k => col(s"mh$k")): _*)
@@ -108,26 +107,21 @@ object NearDupStream {
       // (kept docs only; its marker is the commit point)
       // arrival_seq: the true-arrival-order witness key — see
       // DedupStream.applyMicroBatch
-      DedupStream.writeAtomically(
+      store.write(corpusDir, "index", batchId,
         bands.select("doc_id", "sig", "band", "key")
-          .withColumn("arrival_seq", lit(batchId)),
-        s"$corpusDir/index/batch=$batchId", mark = false)
-      DedupStream.writeAtomically(
+          .withColumn("arrival_seq", lit(batchId)))
+      store.write(corpusDir, "drops", batchId,
         batch.join(dropped, Seq("doc_id"), "left_semi")
           .select("doc_id", "text")
-          .withColumn("arrival_seq", lit(batchId)),
-        s"$corpusDir/drops/batch=$batchId", mark = false)
-      DedupStream.writeAtomically(
-        kept.select("doc_id", "text"),
-        s"$corpusDir/docs/batch=$batchId", mark = true)
+          .withColumn("arrival_seq", lit(batchId)))
+      store.write(corpusDir, "docs", batchId, kept.select("doc_id", "text"))
     } finally { bands.unpersist(); () }
   }
 
   /** The kept (near-dup-free) corpus so far — committed batches only,
     * committed takedowns applied. */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "docs")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "docs")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"),
@@ -142,8 +136,7 @@ object NearDupStream {
     * document of every committed batch (read by path; no unbounded
     * In-list, see DedupStream.readIndex). */
   def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "index")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "index")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"),

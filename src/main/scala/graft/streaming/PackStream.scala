@@ -30,7 +30,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the corpus-side gates own the removal itself. */
 object PackStream {
 
-  private val Marker = DedupStream.Marker
+  /** `place` carries the commit marker; `counts` is written first. */
+  private val store = new BatchStore("place", "counts")
 
   /** Start the ingest stream: `docs` must carry
     * (doc_id long, text string). */
@@ -49,12 +50,9 @@ object PackStream {
     * Idempotent per `batchId` via the placement marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       stateDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(stateDir, "PackStream.applyMicroBatch")
-    recover(stateDir)
-    val dst = s"$stateDir/place/batch=$batchId"
-    if (StreamFs.exists(s"$dst/$Marker")) return // replay
-    val offset = committedDirs(stateDir, "counts")
-      .filter(StreamFs.hasDataFiles) match {
+    if (store.replayed(stateDir, batchId, "PackStream.applyMicroBatch"))
+      return
+    val offset = store.dataDirs(stateDir, "counts") match {
       case Nil => 0L
       case dirs => spark.read.parquet(dirs: _*)
         .agg(coalesce(sum("n_tokens"), lit(0L))).collect()(0).getLong(0)
@@ -62,44 +60,20 @@ object PackStream {
     val placed = PrepQueries
       .packOfFrom(batch.select("doc_id", "text"), offset)
     // counts first (unmarked), placement last — its marker commits both
-    DedupStream.writeAtomically(
+    store.write(stateDir, "counts", batchId,
       placed.agg(count(lit(1)).as("n_docs"),
-        coalesce(sum("n_tokens"), lit(0L)).as("n_tokens")),
-      s"$stateDir/counts/batch=$batchId", mark = false)
-    DedupStream.writeAtomically(placed, dst, mark = true)
+        coalesce(sum("n_tokens"), lit(0L)).as("n_tokens")))
+    store.write(stateDir, "place", batchId, placed)
   }
 
   /** Sweep marker-less batch dirs (either sub) and stale temps; finish
     * or roll back an interrupted [[compact]] swap. */
-  def recover(stateDir: String): Unit = {
-    val cold = stateDir + ".cold"
-    val ctmp = stateDir + ".ctmp"
-    if (StreamFs.exists(cold)) {
-      if (StreamFs.exists(stateDir)) StreamFs.delete(cold)
-      else StreamFs.renameOrThrow(cold, stateDir)
-    }
-    if (StreamFs.exists(ctmp) && !CompactionLock.heldLive(stateDir))
-      StreamFs.delete(ctmp)
-    Seq("place", "counts").foreach { sub =>
-      StreamFs.listNames(s"$stateDir/$sub").filter(_.startsWith("batch="))
-        .filterNot(b => StreamFs.exists(s"$stateDir/place/$b/$Marker"))
-        .foreach(b => StreamFs.delete(s"$stateDir/$sub/$b"))
-      StreamFs.listNames(s"$stateDir/$sub").filter(_.endsWith(".tmp"))
-        .foreach(n => StreamFs.delete(s"$stateDir/$sub/$n"))
-    }
-  }
-
-  private def committedDirs(stateDir: String, sub: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/place").filter(_.startsWith("batch="))
-      .filter(b => StreamFs.exists(s"$stateDir/place/$b/$Marker"))
-      .map(b => s"$stateDir/$sub/$b")
-      .filter(d => StreamFs.exists(d))
+  def recover(stateDir: String): Unit = store.recover(stateDir)
 
   /** The committed placement so far — one row per ingested doc, the
     * [[PrepQueries.sequencePack]] schema. */
   def readPlacement(spark: SparkSession, stateDir: String): DataFrame = {
-    val dirs = committedDirs(stateDir, "place")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(stateDir, "place")
     if (dirs.isEmpty)
       spark.range(0).select(col("id").as("doc_id"),
         col("id").as("n_tokens"), col("id").as("start"),
@@ -113,34 +87,22 @@ object PackStream {
 
   /** COMPACTION — merge all committed placement rows into the highest
     * committed batch dir and the totals into one summed row; earlier
-    * ids survive as marker-only tombstones (replay no-op). */
+    * ids survive as marker-only tombstones (replay no-op). The
+    * [[BatchStore.compact]] swap. */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val batches = StreamFs.listNames(s"$stateDir/place")
-        .filter(_.startsWith("batch="))
-        .filter(b => StreamFs.exists(s"$stateDir/place/$b/$Marker"))
-        .sortBy(_.stripPrefix("batch=").toLong)
+    store.compact(stateDir) { stage =>
+      val batches = store.committed(stateDir)
       if (batches.length <= 1) return
       val target = batches.last
-      val stage = stateDir + ".ctmp"
-      StreamFs.delete(stage)
       readPlacement(spark, stateDir)
         .write.parquet(s"$stage/place/$target")
-      val countDirs = committedDirs(stateDir, "counts")
-        .filter(StreamFs.hasDataFiles)
+      val countDirs = store.dataDirs(stateDir, "counts")
       if (countDirs.nonEmpty)
         spark.read.parquet(countDirs: _*)
           .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
             coalesce(sum("n_tokens"), lit(0L)).as("n_tokens"))
           .write.parquet(s"$stage/counts/$target")
-      StreamFs.createMarker(s"$stage/place/$target/$Marker")
-      batches.init.foreach(b =>
-        StreamFs.createMarker(s"$stage/place/$b/$Marker"))
-      val old = stateDir + ".cold"
-      StreamFs.renameOrThrow(stateDir, old)
-      StreamFs.renameOrThrow(stage, stateDir)
-      StreamFs.delete(old)
+      store.markAll(stage, batches)
     }
 
   // ---- registered face --------------------------------------------------

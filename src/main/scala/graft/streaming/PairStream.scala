@@ -46,7 +46,8 @@ case class PairSig(doc_id: Long, format: String, width: Long,
   * `claims/batch=N` (novel text-hash rows), `index/batch=N` (every
   * image's band rows), `counts/batch=N` (≤7-row pair-stage tally),
   * `verdicts/batch=N` (per-pair verdict rows). Crash sweep, replay
-  * no-op and the [[CompactionLock]] guard follow [[CurationStream]].
+  * no-op, the [[CompactionLock]] guard and the compaction swap are the
+  * [[BatchStore]] protocol, as in [[CurationStream]].
   *
   * Scale notes (100 TB): decode is the map-only cost a media pipeline
   * pays by existing, paid ONCE here (localCheckpoint) instead of per
@@ -56,7 +57,7 @@ case class PairSig(doc_id: Long, format: String, width: Long,
   * not the corpus. */
 object PairStream {
 
-  private val Marker = DedupStream.Marker
+  private val store = new BatchStore("verdicts", "claims", "index", "counts")
 
   /** Start the ingest stream: `docs` must carry
     * (doc_id long, text string, payload binary|null). */
@@ -69,9 +70,6 @@ object PairStream {
         applyMicroBatch(spark, batch, stateDir, batchId)
       }
       .start()
-
-  private def committed(stateDir: String, b: String): Boolean =
-    StreamFs.exists(s"$stateDir/verdicts/$b/$Marker")
 
   /** ONE real decode per payload → (doc_id, format, width, height,
     * dhash), the map-only kernel. */
@@ -157,9 +155,8 @@ object PairStream {
     * bands, gate, commit verdicts/counts. Idempotent per `batchId`. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       stateDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(stateDir, "PairStream.applyMicroBatch")
-    recover(stateDir)
-    if (committed(stateDir, s"batch=$batchId")) return // replay
+    if (store.replayed(stateDir, batchId, "PairStream.applyMicroBatch"))
+      return
     // ---- text side: the CurationStream claim protocol verbatim
     val scored = CurationQueries.scoredDocs(
         batch.select(col("doc_id"), col("text")))
@@ -212,59 +209,30 @@ object PairStream {
         // hash to ANY surviving holder — including a text-only doc the
         // old layout recorded nowhere — and recompute the stateless
         // verdict from the persisted facts without re-reading text.
-        DedupStream.writeAtomically(
+        store.write(stateDir, "claims", batchId,
           withCanon.select("content_hash", "doc_id", "n_tokens",
               "pred_lang", "quality", "is_canonical")
-            .withColumn("arrival_seq", lit(batchId)),
-          s"$stateDir/claims/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(
+            .withColumn("arrival_seq", lit(batchId)))
+        store.write(stateDir, "index", batchId,
           bands.select("chunk", "key", "dhash", "doc_id")
-            .withColumn("arrival_seq", lit(batchId)),
-          s"$stateDir/index/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(
-          MediaQueries.pairFunnelCounts(verdicts),
-          s"$stateDir/counts/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(verdicts,
-          s"$stateDir/verdicts/batch=$batchId", mark = true)
+            .withColumn("arrival_seq", lit(batchId)))
+        store.write(stateDir, "counts", batchId,
+          MediaQueries.pairFunnelCounts(verdicts))
+        store.write(stateDir, "verdicts", batchId, verdicts)
       } finally { withCanon.unpersist(); () }
     } finally { scored.unpersist(); () }
   }
 
   /** Sweep crash debris — claims/index/counts without a committed
-    * verdicts twin, stale temps. */
-  def recover(stateDir: String): Unit = {
-    Seq("verdicts", "claims", "index", "counts").foreach { sub =>
-      StreamFs.listNames(s"$stateDir/$sub").filter(_.startsWith("batch="))
-        .foreach { b =>
-          if (!committed(stateDir, b)) StreamFs.delete(s"$stateDir/$sub/$b")
-        }
-      StreamFs.listNames(s"$stateDir/$sub").filter(_.endsWith(".tmp"))
-        .foreach(n => StreamFs.delete(s"$stateDir/$sub/$n"))
-    }
-    StreamFs.listNames(s"$stateDir/${Takedown.Sub}").foreach { t =>
-      val p = s"$stateDir/${Takedown.Sub}/$t"
-      if (t.endsWith(".tmp") || (t.startsWith("td=") &&
-          !StreamFs.exists(s"$p/$Marker")))
-        StreamFs.delete(p)
-    }
-  }
-
-  private def committedDirs(stateDir: String, sub: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/$sub").filter(_.startsWith("batch="))
-      .filter(b => committed(stateDir, b))
-      .map(b => s"$stateDir/$sub/$b")
-      .filter(StreamFs.hasDataFiles)
-
-  private def committedDirsAll(stateDir: String, sub: String): Seq[String] =
-    StreamFs.listNames(s"$stateDir/$sub").filter(_.startsWith("batch="))
-      .filter(b => committed(stateDir, b))
-      .map(b => s"$stateDir/$sub/$b")
+    * verdicts twin, stale temps, uncommitted takedowns — and finish or
+    * roll back an interrupted [[compact]] swap. */
+  def recover(stateDir: String): Unit = store.recover(stateDir)
 
   /** The committed image band index (every processed image) — committed
     * takedowns applied: a removed image's perceptual bands are derived
     * data and stop witnessing the moment the tombstone commits. */
   private def readIndex(spark: SparkSession, stateDir: String): DataFrame = {
-    val dirs = committedDirs(stateDir, "index")
+    val dirs = store.dataDirs(stateDir, "index")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(lit(0).as("chunk"), col("id").as("key"),
@@ -284,12 +252,12 @@ object PairStream {
     * claims yet. */
   private def readClaims(spark: SparkSession,
                          stateDir: String): Option[DataFrame] = {
-    val dirs = committedDirs(stateDir, "claims")
+    val dirs = store.dataDirs(stateDir, "claims")
     if (dirs.isEmpty) return None
     val base = spark.read.option("basePath", s"$stateDir/claims")
       .parquet(dirs: _*).drop("batch")
-    Some((readTd(spark, stateDir, "removed"),
-        readTd(spark, stateDir, "promoted_claims")) match {
+    Some((Takedown.readSub(spark, stateDir, "removed"),
+        Takedown.readSub(spark, stateDir, "promoted_claims")) match {
       case (None, _) => base
       case (Some(rm), promo) =>
         val r = rm.select("doc_id").distinct()
@@ -305,27 +273,16 @@ object PairStream {
     })
   }
 
-  private def readTd(spark: SparkSession, stateDir: String,
-                     sub: String): Option[DataFrame] = {
-    val dirs = StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-      .filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$stateDir/${Takedown.Sub}/$t/$Marker"))
-      .map(t => s"$stateDir/${Takedown.Sub}/$t/$sub")
-      .filter(d => StreamFs.exists(d) && StreamFs.hasDataFiles(d))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
-
   /** Every committed pair verdict so far — the stream's data output,
     * committed takedowns applied: removed docs gone, corrected verdicts
     * (claim re-election on the caption side + near-dup re-election on
     * the image side, one pass) replacing their originals. */
   def readVerdicts(spark: SparkSession, stateDir: String): DataFrame = {
     val base = spark.read.option("basePath", s"$stateDir/verdicts")
-      .parquet(committedDirs(stateDir, "verdicts"): _*)
+      .parquet(store.dataDirs(stateDir, "verdicts"): _*)
       .drop("batch")
-    (readTd(spark, stateDir, "removed"),
-        readTd(spark, stateDir, "corrected")) match {
+    (Takedown.readSub(spark, stateDir, "removed"),
+        Takedown.readSub(spark, stateDir, "corrected")) match {
       case (None, _) => base
       case (Some(rm), corr) =>
         val r = rm.select("doc_id").distinct()
@@ -370,10 +327,7 @@ object PairStream {
     * |removals| + touched claims/bands. */
   def applyTakedown(spark: SparkSession, stateDir: String,
                     removed: DataFrame, takedownId: Long): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val dst = s"$stateDir/${Takedown.Sub}/td=$takedownId"
-      if (StreamFs.exists(s"$dst/$Marker")) return // replay
+    store.commitTakedown(stateDir, takedownId) { tmp =>
       val r = removed.select("doc_id").distinct().localCheckpoint()
       // claims / verdicts / index stay parquet-backed: every probe
       // below re-scans them map-side filtered by removal-proportional
@@ -438,15 +392,10 @@ object PairStream {
             .localCheckpoint()
           if (c.isEmpty) None else Some(c)
         }
-      val tmp = dst + ".tmp"
-      StreamFs.delete(tmp)
       r.write.parquet(s"$tmp/removed")
       if (!promotedClaims.isEmpty)
         promotedClaims.write.parquet(s"$tmp/promoted_claims")
       corrected.foreach(_.write.parquet(s"$tmp/corrected"))
-      StreamFs.delete(dst)
-      StreamFs.renameOrThrow(tmp, dst)
-      StreamFs.createMarker(s"$dst/$Marker")
     }
 
   /** COMPACTION — the pair gate's physical takedown fold
@@ -457,41 +406,26 @@ object PairStream {
     * zero), counts collapsed under the sum (ingest history, takedowns
     * deliberately don't touch them), the staged root carrying no td
     * dirs, earlier ids surviving as marker-only tombstones. Same
-    * heartbeated lock and crash-safe root swap as every other gate. */
+    * heartbeated lock and crash-safe root swap as every other gate
+    * ([[BatchStore.compact]]). */
   def compact(spark: SparkSession, stateDir: String): Unit =
-    CompactionLock.withLock(stateDir) {
-      recover(stateDir)
-      val batches = StreamFs.listNames(s"$stateDir/verdicts")
-        .filter(_.startsWith("batch="))
-        .filter(b => committed(stateDir, b))
-        .sortBy(_.stripPrefix("batch=").toLong)
-      val tds = StreamFs.listNames(s"$stateDir/${Takedown.Sub}")
-        .filter(_.startsWith("td="))
-        .filter(t => StreamFs.exists(
-          s"$stateDir/${Takedown.Sub}/$t/$Marker"))
+    store.compact(stateDir) { stage =>
+      val batches = store.committed(stateDir)
       if (batches.isEmpty) return // removal-only td, nothing to fold
-      if (batches.length <= 1 && tds.isEmpty) return
+      if (batches.length <= 1 && BatchStore.takedownDirs(stateDir).isEmpty)
+        return
       val target = batches.last
-      val stage = stateDir + ".ctmp"
-      StreamFs.delete(stage)
       readVerdicts(spark, stateDir)
         .write.parquet(s"$stage/verdicts/$target")
       readClaims(spark, stateDir).foreach(
         _.write.parquet(s"$stage/claims/$target"))
       readIndex(spark, stateDir)
         .write.parquet(s"$stage/index/$target")
-      val countDirs = committedDirsAll(stateDir, "counts")
-        .filter(StreamFs.hasDataFiles)
+      val countDirs = store.dataDirs(stateDir, "counts")
       if (countDirs.nonEmpty)
         sumCounts(spark, stateDir, countDirs)
           .write.parquet(s"$stage/counts/$target")
-      StreamFs.createMarker(s"$stage/verdicts/$target/$Marker")
-      batches.init.foreach(b =>
-        StreamFs.createMarker(s"$stage/verdicts/$b/$Marker"))
-      val old = stateDir + ".cold"
-      StreamFs.renameOrThrow(stateDir, old)
-      StreamFs.renameOrThrow(stage, stateDir)
-      StreamFs.delete(old)
+      store.markAll(stage, batches)
     }
 
   private def sumCounts(spark: SparkSession, stateDir: String,
@@ -511,7 +445,7 @@ object PairStream {
     * never the corpus — no re-decode per refresh. */
   def pairFunnelLive(spark: SparkSession, stateDir: String): DataFrame =
     MediaQueries.pairFunnelFromCounts(sumCounts(spark, stateDir,
-      committedDirs(stateDir, "counts")))
+      store.dataDirs(stateDir, "counts")))
 
   /** PAIR FUNNEL DRIFT — per stage, lifetime vs trailing-`lastK` pair
     * shares with the delta (the [[CurationStream.funnelDrift]] shape;
@@ -523,9 +457,7 @@ object PairStream {
       .select(col("stage_idx"), col("stage"),
         col("n_pairs").as("n_life"), col("pair_share").as("share_life"))
     val win = MediaQueries.pairFunnelFromCounts(sumCounts(spark, stateDir,
-        committedDirsAll(stateDir, "counts")
-          .sortBy(_.split('/').last.stripPrefix("batch=").toLong)
-          .takeRight(lastK)
+        store.dirs(stateDir, "counts").takeRight(lastK)
           .filter(StreamFs.hasDataFiles)))
       .select(col("stage_idx"), col("n_pairs").as("n_window"),
         col("pair_share").as("share_window"))

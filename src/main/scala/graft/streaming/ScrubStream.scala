@@ -57,9 +57,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * physical [[compact]] fold.
   *
   * Storage layout, marker commit protocol, idempotent replay and crash
-  * sweep ([[DedupStream.recover]], takedown debris included) and the
-  * [[CompactionLock]] ingest guard are [[DedupStream]]'s verbatim;
-  * [[compact]] is this gate's own fold because corrected documents
+  * sweep (takedown debris included) and the [[CompactionLock]] ingest
+  * guard are [[DedupStream]]'s [[BatchStore]] layout; [[compact]] is
+  * this gate's own fold because corrected documents
   * REPLACE their originals (the [[PairStream]] corrected-rows
   * semantics) rather than unioning in as the whole-doc gates' promoted
   * quarantine rows do.
@@ -77,6 +77,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (the physical rewrite is [[compact]]'s job, amortized across
   * takedowns). */
 object ScrubStream {
+
+  private def store = DedupStream.store
 
   /** Start the ingest stream: `docs` must carry
     * (doc_id long, text string). */
@@ -96,11 +98,9 @@ object ScrubStream {
     * Idempotent per `batchId` via the docs commit marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       corpusDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(corpusDir, "ScrubStream.applyMicroBatch")
-    DedupStream.recover(corpusDir) // same layout → same orphan sweep
-    if (StreamFs.exists(
-        s"$corpusDir/docs/batch=$batchId/${DedupStream.Marker}"))
-      return // replay
+    // same layout → same ingest guard and orphan sweep
+    if (store.replayed(corpusDir, batchId, "ScrubStream.applyMicroBatch"))
+      return
     val spans = PrepQueries.firstOccurrence(
       PrepQueries.spansOf(batch.select("doc_id", "text")))
       .withColumnRenamed("keep_span", "first_in_batch")
@@ -125,50 +125,26 @@ object ScrubStream {
         // commit point; a crash between leaves orphan index/drops dirs
         // recover() sweeps. Index rows carry their owning first
         // occurrence; kept = first_in_batch ∧ unseen is unique per h.
-        DedupStream.writeAtomically(
+        store.write(corpusDir, "index", batchId,
           marked.filter(col("keep_span")).select("h", "doc_id")
-            .withColumn("arrival_seq", lit(batchId)),
-          s"$corpusDir/index/batch=$batchId", mark = false)
+            .withColumn("arrival_seq", lit(batchId)))
         // quarantine: the FULL span table of every doc that lost ≥ 1
         // span — restitution reassembles corrected text from these
         // rows, so no takedown ever re-reads a payload
-        DedupStream.writeAtomically(
+        store.write(corpusDir, "drops", batchId,
           marked.join(
               marked.filter(!col("keep_span")).select("doc_id").distinct(),
               Seq("doc_id"), "left_semi")
             .select("doc_id", "span_idx", "span_text", "h", "keep_span")
-            .withColumn("arrival_seq", lit(batchId)),
-          s"$corpusDir/drops/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(
+            .withColumn("arrival_seq", lit(batchId)))
+        store.write(corpusDir, "docs", batchId,
           PrepQueries.scrubAssemble(
-            marked.select("doc_id", "span_idx", "span_text", "keep_span")),
-          s"$corpusDir/docs/batch=$batchId", mark = true)
+            marked.select("doc_id", "span_idx", "span_text", "keep_span")))
       } finally { marked.unpersist(); () }
     } finally { spans.unpersist(); () }
   }
 
   // ---- takedown-aware readers -----------------------------------------
-
-  private def committedDataDirs(corpusDir: String,
-                                sub: String): Seq[String] =
-    DedupStream.committedDirs(corpusDir, sub).filter(StreamFs.hasDataFiles)
-
-  /** Committed takedown sub-tables (removed / promoted_index /
-    * corrected), unioned across td dirs. */
-  private def readTd(spark: SparkSession, corpusDir: String,
-                     sub: String): Option[DataFrame] = {
-    val dirs = StreamFs.listNames(s"$corpusDir/${Takedown.Sub}")
-      .filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(
-        s"$corpusDir/${Takedown.Sub}/$t/${DedupStream.Marker}"))
-      .map(t => s"$corpusDir/${Takedown.Sub}/$t/$sub")
-      .filter(d => StreamFs.exists(d) && StreamFs.hasDataFiles(d))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
-
-  private def removedAll(spark: SparkSession,
-                         corpusDir: String): Option[DataFrame] =
-    readTd(spark, corpusDir, "removed").map(_.select("doc_id").distinct())
 
   /** The trimmed corpus so far: (doc_id, n_spans, n_dropped,
     * text_clean) — one row per surviving ingested document, committed
@@ -176,7 +152,7 @@ object ScrubStream {
     * replacing their originals, the LATEST correction per doc winning
     * (stacked takedowns touch a doc once per affected class). */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = committedDataDirs(corpusDir, "docs")
+    val dirs = store.dataDirs(corpusDir, "docs")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"),
@@ -185,7 +161,7 @@ object ScrubStream {
       else
         spark.read.option("basePath", s"$corpusDir/docs").parquet(dirs: _*)
           .select("doc_id", "n_spans", "n_dropped", "text_clean")
-    (removedAll(spark, corpusDir), correctedLatest(spark, corpusDir)) match {
+    (Takedown.removedIds(spark, corpusDir), correctedLatest(spark, corpusDir)) match {
       case (None, _) => base
       case (Some(r), corr) =>
         val pruned = base.join(broadcast(r), Seq("doc_id"), "left_anti")
@@ -206,7 +182,7 @@ object ScrubStream {
     * current ownership view). */
   private def correctedLatest(spark: SparkSession,
                               corpusDir: String): Option[DataFrame] =
-    readTd(spark, corpusDir, "corrected").map { c =>
+    Takedown.readSub(spark, corpusDir, "corrected").map { c =>
       c.withColumn("__rk", row_number().over(
           Window.partitionBy(col("doc_id")).orderBy(col("td_seq").desc)))
         .filter(col("__rk") === 1).drop("__rk", "td_seq")
@@ -219,7 +195,7 @@ object ScrubStream {
     * a from-scratch ingest of the survivors would. */
   private[streaming] def readIndexFull(spark: SparkSession,
                                        corpusDir: String): DataFrame = {
-    val dirs = committedDataDirs(corpusDir, "index")
+    val dirs = store.dataDirs(corpusDir, "index")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("h"), col("id").as("doc_id"),
@@ -227,11 +203,11 @@ object ScrubStream {
       else
         spark.read.option("basePath", s"$corpusDir/index").parquet(dirs: _*)
           .select("h", "doc_id", "arrival_seq")
-    removedAll(spark, corpusDir) match {
+    Takedown.removedIds(spark, corpusDir) match {
       case None => base
       case Some(r) =>
         val pruned = base.join(broadcast(r), Seq("doc_id"), "left_anti")
-        readTd(spark, corpusDir, "promoted_index") match {
+        Takedown.readSub(spark, corpusDir, "promoted_index") match {
           case None => pruned
           // a promoted owner removed by a LATER takedown prunes too
           case Some(p) => pruned.unionByName(
@@ -254,13 +230,13 @@ object ScrubStream {
     * CURRENT owner is removed, and it owns that class). */
   private def readDropsView(spark: SparkSession,
                             corpusDir: String): Option[DataFrame] = {
-    val dirs = committedDataDirs(corpusDir, "drops")
+    val dirs = store.dataDirs(corpusDir, "drops")
     if (dirs.isEmpty) return None
     val base = spark.read.option("basePath", s"$corpusDir/drops")
       .parquet(dirs: _*)
       .select("doc_id", "span_idx", "span_text", "h", "keep_span",
         "arrival_seq")
-    Some(removedAll(spark, corpusDir) match {
+    Some(Takedown.removedIds(spark, corpusDir) match {
       case None => base
       case Some(r) => base.join(broadcast(r), Seq("doc_id"), "left_anti")
     })
@@ -275,10 +251,7 @@ object ScrubStream {
     * is map-side filtered by a removal-proportional broadcast. */
   def applyTakedown(spark: SparkSession, corpusDir: String,
                     removed: DataFrame, takedownId: Long): Unit =
-    CompactionLock.withLock(corpusDir) {
-      DedupStream.recover(corpusDir)
-      val dst = s"$corpusDir/${Takedown.Sub}/td=$takedownId"
-      if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
+    store.commitTakedown(corpusDir, takedownId) { tmp =>
       val r = removed.select("doc_id").distinct().localCheckpoint()
       val idxFull = readIndexFull(spark, corpusDir)
       // span classes whose CURRENT owner is removed — the affected set
@@ -325,17 +298,12 @@ object ScrubStream {
           if (c.isEmpty) None else Some(c)
         }
       }
-      val tmp = dst + ".tmp"
-      StreamFs.delete(tmp)
       r.write.parquet(s"$tmp/removed")
       promoted.foreach(_.write.parquet(s"$tmp/promoted_index"))
       corrected.foreach(_.write.parquet(s"$tmp/corrected"))
-      StreamFs.delete(dst)
-      StreamFs.renameOrThrow(tmp, dst)
-      StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
     }
 
-  /** COMPACTION — [[DedupStream.compact]]'s rename-aside protocol with
+  /** COMPACTION — the [[BatchStore.compact]] rename-aside swap with
     * this gate's own fold (corrected docs REPLACE originals; the
     * whole-doc fold would keep the pre-restitution text): docs =
     * [[readCorpus]], index = [[readIndexFull]], drops =
@@ -343,32 +311,17 @@ object ScrubStream {
     * batch dir; earlier ids stay as marker-only dirs; the staged root
     * carries no takedown dirs. */
   def compact(spark: SparkSession, corpusDir: String): Unit =
-    CompactionLock.withLock(corpusDir) {
-      DedupStream.recover(corpusDir)
-      val committedBatches = StreamFs.listNames(s"$corpusDir/docs")
-        .filter(_.startsWith("batch="))
-        .filter(b => StreamFs.exists(
-          s"$corpusDir/docs/$b/${DedupStream.Marker}"))
-        .sortBy(_.stripPrefix("batch=").toLong)
-      val hasTakedowns = Takedown.committedDirs(corpusDir).nonEmpty
+    store.compact(corpusDir) { stage =>
+      val committedBatches = store.committed(corpusDir)
+      val hasTakedowns = BatchStore.takedownDirs(corpusDir).nonEmpty
       if (committedBatches.isEmpty) return
       if (committedBatches.length <= 1 && !hasTakedowns) return
       val target = committedBatches.last
-      val stage = corpusDir + ".ctmp"
-      StreamFs.delete(stage)
       readCorpus(spark, corpusDir).write.parquet(s"$stage/docs/$target")
       readIndexFull(spark, corpusDir).write.parquet(s"$stage/index/$target")
       readDropsView(spark, corpusDir)
         .foreach(_.write.parquet(s"$stage/drops/$target"))
-      StreamFs.createMarker(s"$stage/docs/$target/${DedupStream.Marker}")
-      committedBatches.init.foreach { b =>
-        StreamFs.mkdirs(s"$stage/index/$b")
-        StreamFs.createMarker(s"$stage/docs/$b/${DedupStream.Marker}")
-      }
-      val old = corpusDir + ".cold"
-      StreamFs.renameOrThrow(corpusDir, old)
-      StreamFs.renameOrThrow(stage, corpusDir)
-      StreamFs.delete(old)
+      store.markAll(stage, committedBatches)
     }
 
   // ---- registered faces -----------------------------------------------

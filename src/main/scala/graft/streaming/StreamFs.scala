@@ -6,8 +6,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Filesystem facade for the streaming commit protocols
-  * ([[DedupStream]] / [[NearDupStream]] / [[Scd2Stream]]), routed through
+/** Filesystem facade for the streaming commit protocols — the batch-dir
+  * stores' [[BatchStore]], [[Scd2Stream]]'s history swap and the
+  * [[CompactionLock]] — routed through
   * `org.apache.hadoop.fs.FileContext` instead of `java.io.File` so the
   * rename/marker contract holds on every Hadoop-reachable store (local,
   * HDFS, object stores via their connectors), not just the local POSIX
@@ -68,7 +69,7 @@ object StreamFs {
     * files). Readers exclude marker-only batch dirs (post-compaction
     * id tombstones) from `spark.read.parquet` paths EXPLICITLY with
     * this, rather than leaning on Spark's hidden-file filter to skip a
-    * dir that contains only `_GRAFT_COMMIT` (round-13 ADVICE: a marker
+    * dir that contains only the commit marker (round-13 ADVICE: a marker
     * rename, a non-Spark reader, or a file-index behavior change must
     * not break the read). A legitimately committed EMPTY batch (zero
     * part files) is also excluded — there is nothing to read. */

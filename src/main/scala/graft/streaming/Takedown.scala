@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * selection, not deletion) precisely so step 2 has the payloads to
   * promote. Idempotent per `takedownId`: the td-dir marker is the single
   * commit point and the replay check; an interrupted call leaves an
-  * unmarked td dir that [[DedupStream.recover]] sweeps.
+  * unmarked td dir that [[BatchStore.recover]] sweeps.
   *
   * The witness rule replays the TRUE arrival order: every index/drops
   * row records `arrival_seq` (the committing batch id, monotone per
@@ -55,8 +55,6 @@ import org.apache.spark.sql.functions._
   * [[expandExactClass]] computes from the quarantine in one
   * removal-proportional probe. */
 object Takedown {
-
-  private[streaming] val Sub = "takedown"
 
   /** Which gate's claim semantics govern re-election. */
   sealed trait Gate
@@ -83,26 +81,19 @@ object Takedown {
     case object Graph extends Gate
   }
 
-  /** Committed takedown dirs (marker = committed). */
-  private[streaming] def committedDirs(corpusDir: String): Seq[String] =
-    StreamFs.listNames(s"$corpusDir/$Sub").filter(_.startsWith("td="))
-      .filter(t => StreamFs.exists(s"$corpusDir/$Sub/$t/${DedupStream.Marker}"))
-      .map(t => s"$corpusDir/$Sub/$t")
-
-  private def subDirs(corpusDir: String, name: String): Seq[String] =
-    committedDirs(corpusDir).map(d => s"$d/$name")
-      .filter(d => StreamFs.exists(d) && StreamFs.hasDataFiles(d))
-
-  private def readSub(spark: SparkSession, corpusDir: String,
-                      name: String): Option[DataFrame] = {
-    val dirs = subDirs(corpusDir, name)
+  /** Table `name` of every committed takedown dir, unioned (None when
+    * no committed takedown wrote one). */
+  private[streaming] def readSub(spark: SparkSession, corpusDir: String,
+                                 name: String): Option[DataFrame] = {
+    val dirs = BatchStore.takedownDirs(corpusDir).map(d => s"$d/$name")
+      .filter(StreamFs.hasDataFiles)
     if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
   /** All removed doc_ids across committed takedowns (None = no takedown
     * has ever run — readers stay plan-identical to the pre-takedown
     * engine). */
-  private def removedIds(spark: SparkSession,
+  private[streaming] def removedIds(spark: SparkSession,
                          corpusDir: String): Option[DataFrame] =
     readSub(spark, corpusDir, "removed").map(_.select("doc_id").distinct())
 
@@ -171,8 +162,7 @@ object Takedown {
     * rows — what re-election promotes from). */
   private[streaming] def readDrops(spark: SparkSession,
                                    corpusDir: String): Option[DataFrame] = {
-    val dirs = DedupStream.committedDirs(corpusDir, "drops")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = DedupStream.store.dataDirs(corpusDir, "drops")
     if (dirs.isEmpty) None
     else Some(view(spark,
       corpusDir, spark.read.option("basePath", s"$corpusDir/drops")
@@ -231,22 +221,35 @@ object Takedown {
     * replay (the marker no-ops it); runs under the compaction lock like
     * any table-maintenance pass. */
   def apply(spark: SparkSession, corpusDir: String, removed: DataFrame,
-            gate: Gate, takedownId: Long): Unit =
-    CompactionLock.withLock(corpusDir) {
-      DedupStream.recover(corpusDir)
-      val dst = s"$corpusDir/$Sub/td=$takedownId"
-      if (StreamFs.exists(s"$dst/${DedupStream.Marker}")) return // replay
+            gate: Gate, takedownId: Long): Unit = {
+    val store = gate match {
+      case Gate.Ann => AnnStream.store
+      case Gate.Graph => GraphStream.store
+      case _ => DedupStream.store
+    }
+    store.commitTakedown(corpusDir, takedownId) { tmp =>
       val r = removed.select("doc_id").distinct().localCheckpoint()
       val (promoDocs, promoIndex) = promotions(spark, corpusDir, r, gate)
-      val tmp = dst + ".tmp"
-      StreamFs.delete(tmp)
       r.write.parquet(s"$tmp/removed")
       promoDocs.foreach(_.write.parquet(s"$tmp/promoted_docs"))
       promoIndex.foreach(_.write.parquet(s"$tmp/promoted_index"))
-      StreamFs.delete(dst)
-      StreamFs.renameOrThrow(tmp, dst)
-      StreamFs.createMarker(s"$dst/${DedupStream.Marker}")
     }
+  }
+
+  /** Commit a BATCH-GRAIN takedown (the linear monitors'
+    * [[CmsStream.applyTakedown]] / [[EvalStream.applyTakedown]]): one
+    * `removed_batches` manifest, no table write. */
+  private[streaming] def applyBatchGrain(store: BatchStore, stateDir: String,
+      removedBatchIds: Seq[Long], takedownId: Long): Unit =
+    store.commitTakedown(stateDir, takedownId)(tmp =>
+      StreamFs.writeAtomicString(s"$tmp/removed_batches",
+        removedBatchIds.distinct.sorted.mkString("\n")))
+
+  /** Batch ids removed by every committed batch-grain takedown. */
+  private[streaming] def removedBatches(stateDir: String): Set[Long] =
+    BatchStore.takedownDirs(stateDir)
+      .flatMap(d => StreamFs.readString(s"$d/removed_batches").toSeq)
+      .flatMap(_.split('\n')).filter(_.nonEmpty).map(_.toLong).toSet
 
   /** (promoted docs rows, promoted index rows) for this removal set —
     * None when nothing flips (no takedown subdir written). */

@@ -30,7 +30,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Storage layout, marker commit protocol, idempotent replay, crash
   * sweep, compaction ([[DedupStream.compact]], schema-agnostic) and
-  * the [[CompactionLock]] ingest guard are [[DedupStream]]'s verbatim.
+  * the [[CompactionLock]] ingest guard are [[DedupStream]]'s
+  * [[BatchStore]] layout.
   *
   * Scale notes (100 TB): canonicalization is one codegen'd map pass;
   * per batch ONE equi-join of the batch's canonicals against the
@@ -39,6 +40,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object UrlStream {
 
   import graft.functions.TextFunctions.md5Long
+
+  private def store = DedupStream.store
 
   /** Start the ingest stream: `docs` must carry
     * (doc_id long, url string). */
@@ -57,11 +60,9 @@ object UrlStream {
     * Idempotent per `batchId` via the corpus commit marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame,
                       corpusDir: String, batchId: Long): Unit = {
-    CompactionLock.requireFree(corpusDir, "UrlStream.applyMicroBatch")
-    DedupStream.recover(corpusDir) // same layout → same orphan sweep
-    if (StreamFs.exists(
-        s"$corpusDir/docs/batch=$batchId/${DedupStream.Marker}"))
-      return // replay
+    // same layout → same ingest guard and orphan sweep
+    if (store.replayed(corpusDir, batchId, "UrlStream.applyMicroBatch"))
+      return
     val all = batch
       .withColumn("canonical_url",
         call_function("url_canonicalize", col("url")))
@@ -93,24 +94,20 @@ object UrlStream {
         // recover() sweeps
         // arrival_seq: the true-arrival-order witness key — see
         // DedupStream.applyMicroBatch
-        DedupStream.writeAtomically(
+        store.write(corpusDir, "index", batchId,
           novel.select("curl_hash", "canonical_url", "doc_id")
-            .withColumn("arrival_seq", lit(batchId)),
-          s"$corpusDir/index/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(
+            .withColumn("arrival_seq", lit(batchId)))
+        store.write(corpusDir, "drops", batchId,
           all.join(novel.select("doc_id"), Seq("doc_id"), "left_anti")
             .select("doc_id", "url", "canonical_url", "curl_hash")
-            .withColumn("arrival_seq", lit(batchId)),
-          s"$corpusDir/drops/batch=$batchId", mark = false)
+            .withColumn("arrival_seq", lit(batchId)))
         // per-batch gate tally (1 row × 1 row assembly) — the drift
         // monitor subset-sums these, never the corpus
-        DedupStream.writeAtomically(
+        store.write(corpusDir, "counts", batchId,
           all.agg(count(lit(1)).as("n_processed"))
-            .crossJoin(novel.agg(count(lit(1)).as("n_admitted"))),
-          s"$corpusDir/counts/batch=$batchId", mark = false)
-        DedupStream.writeAtomically(
-          novel.select("doc_id", "url", "canonical_url"),
-          s"$corpusDir/docs/batch=$batchId", mark = true)
+            .crossJoin(novel.agg(count(lit(1)).as("n_admitted"))))
+        store.write(corpusDir, "docs", batchId,
+          novel.select("doc_id", "url", "canonical_url"))
       } finally { novel.unpersist(); () }
     } finally { canon.unpersist(); all.unpersist(); () }
   }
@@ -118,8 +115,7 @@ object UrlStream {
   /** The admitted (canonical-unique) corpus so far — committed
     * takedowns applied. */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "docs")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "docs")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"), lit("").as("url"),
@@ -134,8 +130,7 @@ object UrlStream {
     * takedowns applied (a removed canonical's claim passes to the
     * promoted representative's row). */
   def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "index")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "index")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("curl_hash"),
@@ -148,12 +143,6 @@ object UrlStream {
   }
 
   // ---- per-batch gate counts + drift ---------------------------------
-
-  private def countDirsAll(corpusDir: String): Seq[String] =
-    StreamFs.listNames(s"$corpusDir/counts").filter(_.startsWith("batch="))
-      .filter(b => StreamFs.exists(
-        s"$corpusDir/docs/$b/${DedupStream.Marker}"))
-      .map(b => s"$corpusDir/counts/$b")
 
   private def sumCounts(spark: SparkSession, corpusDir: String,
                         dirs: Seq[String]): DataFrame =
@@ -176,13 +165,11 @@ object UrlStream {
                    lastK: Int): DataFrame = {
     require(lastK > 0, s"window must be positive, got $lastK")
     val life = sumCounts(spark, corpusDir,
-      countDirsAll(corpusDir).filter(StreamFs.hasDataFiles))
+      store.dataDirs(corpusDir, "counts"))
       .select(col("n_processed").as("n_life"),
         col("n_admitted").as("n_admitted_life"))
     val win = sumCounts(spark, corpusDir,
-      countDirsAll(corpusDir)
-        .sortBy(_.split('/').last.stripPrefix("batch=").toLong)
-        .takeRight(lastK)
+      store.dirs(corpusDir, "counts").takeRight(lastK)
         .filter(StreamFs.hasDataFiles))
       .select(col("n_processed").as("n_window"),
         col("n_admitted").as("n_admitted_window"))

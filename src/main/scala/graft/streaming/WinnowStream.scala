@@ -29,8 +29,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Storage layout, marker-file commit protocol, idempotent replay and
   * crash-orphan sweep are exactly [[DedupStream]]'s (docs/batch=N +
-  * index/batch=N, staged write + `_GRAFT_COMMIT` marker on the docs dir
-  * as the commit point, all I/O through [[StreamFs]]).
+  * index/batch=N, the [[BatchStore]] protocol with the docs dir as the
+  * commit point).
   *
   * Scale notes (100 TB): the probe is a broadcast SEMI-join of the
   * ever-growing h-keyed index against the batch's own distinct
@@ -44,6 +44,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * BASELINE.md's round-11 table.
   */
 object WinnowStream {
+
+  private def store = DedupStream.store
 
   /** Start the ingest stream: `docs` must carry (doc_id long, text string). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
@@ -62,11 +64,9 @@ object WinnowStream {
     * marker. */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame, corpusDir: String,
                       batchId: Long): Unit = {
-    // same layout → same compact() + Takedown, so the same ingest guard
-    CompactionLock.requireFree(corpusDir, "WinnowStream.applyMicroBatch")
-    DedupStream.recover(corpusDir) // same layout → same orphan sweep
-    if (StreamFs.exists(s"$corpusDir/docs/batch=$batchId/${DedupStream.Marker}"))
-      return // replay
+    // same layout → same compact() + Takedown, ingest guard and sweep
+    if (store.replayed(corpusDir, batchId, "WinnowStream.applyMicroBatch"))
+      return
     val fp = TextQueries.winnowFingerprintsOf(batch)
       .select("doc_id", "h").persist()
     try {
@@ -103,21 +103,17 @@ object WinnowStream {
       // recount as pure index arithmetic, never re-reading text (the
       // round-16 probe measured the re-fingerprint leg at 143 s for a
       // 50-doc removal on a 500k-doc corpus — all of it avoidable)
-      DedupStream.writeAtomically(
+      store.write(corpusDir, "index", batchId,
         fp.groupBy("doc_id", "h").agg(count(lit(1)).as("cnt"))
-          .withColumn("arrival_seq", lit(batchId)),
-        s"$corpusDir/index/batch=$batchId", mark = false)
+          .withColumn("arrival_seq", lit(batchId)))
       // drops QUARANTINE (full rows): a later [[Takedown]] re-counts a
       // dropped doc's shared-fingerprint verdict from this text when the
       // witnesses that dropped it are removed — selection, not deletion
-      DedupStream.writeAtomically(
+      store.write(corpusDir, "drops", batchId,
         batch.join(dropped, Seq("doc_id"), "left_semi")
           .select("doc_id", "text")
-          .withColumn("arrival_seq", lit(batchId)),
-        s"$corpusDir/drops/batch=$batchId", mark = false)
-      DedupStream.writeAtomically(
-        kept.select("doc_id", "text"),
-        s"$corpusDir/docs/batch=$batchId", mark = true)
+          .withColumn("arrival_seq", lit(batchId)))
+      store.write(corpusDir, "docs", batchId, kept.select("doc_id", "text"))
     } finally { fp.unpersist(); () }
   }
 
@@ -125,8 +121,7 @@ object WinnowStream {
     * takedowns applied ([[Takedown.view]]: removed docs gone, re-counted
     * promoted docs unioned in). */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "docs")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "docs")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"),
@@ -145,8 +140,7 @@ object WinnowStream {
     * multiplicity of the pair (the takedown recount's exact n_fp/n_sh
     * weights). */
   def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = DedupStream.committedDirs(corpusDir, "index")
-      .filter(StreamFs.hasDataFiles)
+    val dirs = store.dataDirs(corpusDir, "index")
     val base =
       if (dirs.isEmpty)
         spark.range(0).select(col("id").as("doc_id"), col("id").as("h"),

@@ -112,26 +112,9 @@ object BpeQueries {
     * word-TYPE table (Heaps-bounded: ~1M types even at 100 TB corpus
     * scale, ≪ corpus rows), so full-width shuffles waste far more on task
     * scheduling than they gain in parallelism — 8 checkpointed iterations
-    * × ~4 stages × 32 tasks of a few hundred rows each. Right-size via
-    * `spark.graft.bpe.partitions` (default 4; raise toward the cluster
-    * width only when the type table itself is large). */
-  private def bpePartitions(s: SparkSession): String =
-    s.conf.getOption("spark.graft.bpe.partitions").getOrElse("4")
-
-  /** Checkpoint cadence for the training loop
-    * (`spark.graft.bpe.checkpointEvery`, default 1 = eager per round).
-    * MEASURED, not assumed (r17 in-JVM A/B at sf0.1, min-of-3
-    * interleaved): every=1 → 9.2 s over the 4 bpe faces, every=2 →
-    * 10.9 s, every=4 → 19.9 s, every=8 → 47.7 s. Each round's state has
-    * TWO consumers (pair-count argmax + rewrite), so every uncheckpointed
-    * round re-executes its crossJoin + 5-window rewrite once per
-    * consumer and the recompute compounds per block — the job-launch
-    * latency an amortized checkpoint saves never catches up. Verdict
-    * item 1's "evaluate dropping the per-round eager checkpoint" is
-    * hereby evaluated: keep it. */
-  private def bpeCheckpointEvery(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.bpe.checkpointEvery")
-      .map(_.toInt).getOrElse(1)
+    * × ~4 stages × 32 tasks of a few hundred rows each. Raise toward
+    * the cluster width only when the type table itself is large. */
+  private val bpePartitions = "4"
 
   /** The trained symbol table: every word type fully encoded by the
     * [[bpeMerges]] learned merges — (word, freq, pos, sym, nxt). */
@@ -145,7 +128,7 @@ object BpeQueries {
     // session-conf scope cannot race another query.
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, bpePartitions(s))
+    s.conf.set(key, bpePartitions)
     // AQE is OFF inside the scoped training region (r17): every round's
     // shuffle is already fixed at the right-sized bpe.partitions width
     // over the Heaps-bounded type table, so adaptive replanning buys
@@ -166,12 +149,16 @@ object BpeQueries {
         .toDF("word", "freq", "pos", "sym")
         .withColumn("nxt", lead(col("sym"), 1).over(wOrd))
         .localCheckpoint(true)
-      val every = bpeCheckpointEvery(s)
-      for (i <- 1 to bpeMerges) {
-        state = mergeStep(state)
-        if (i % every == 0 || i == bpeMerges)
-          state = state.localCheckpoint(true)
-      }
+      // eager checkpoint after EVERY round. MEASURED, not assumed (r17
+      // in-JVM A/B at sf0.1, min-of-3 interleaved, of a checkpoint every
+      // N rounds): N=1 → 9.2 s over the 4 bpe faces, N=2 → 10.9 s,
+      // N=4 → 19.9 s, N=8 → 47.7 s. Each round's state has TWO consumers
+      // (pair-count argmax + rewrite), so every uncheckpointed round
+      // re-executes its crossJoin + 5-window rewrite once per consumer
+      // and the recompute compounds per block — the job-launch latency
+      // an amortized checkpoint saves never catches up
+      for (_ <- 1 to bpeMerges)
+        state = mergeStep(state).localCheckpoint(true)
       state
     } finally {
       s.conf.set(key, prev)

@@ -671,11 +671,8 @@ object SimilarityQueries {
     * sf0.1), so per-round task-launch overhead exceeded per-task work.
     * Partition count now derives from the DATA (ceil(n/rows-per-part),
     * clamped to the session shuffle width), so small corpora iterate in
-    * few tasks and large ones still fan out to the cluster. Override via
-    * `spark.graft.iter.rowsPerPartition`. */
-  private def iterRowsPerPartition(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.iter.rowsPerPartition")
-      .map(_.toLong).getOrElse(4096L)
+    * few tasks and large ones still fan out to the cluster. */
+  private val iterRowsPerPartition = 4096L
 
   /** Shared PCA/ABTT substrate: the vec_id-spread checkpointed
     * (vec_id, e) table plus the exact component means and the total
@@ -693,7 +690,7 @@ object SimilarityQueries {
     val nRows = Tables.embeddings(s, dir).count()
     val parts = math.max(1L, math.min(
       s.sessionState.conf.numShufflePartitions.toLong,
-      (nRows + iterRowsPerPartition(s) - 1) / iterRowsPerPartition(s))).toInt
+      (nRows + iterRowsPerPartition - 1) / iterRowsPerPartition)).toInt
     val x = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .repartition(parts, col("vec_id"))
@@ -1599,20 +1596,17 @@ object SimilarityQueries {
     * `least`, no shuffles) — instead of the former collect-PLUS-eager-
     * checkpoint pair per round. The chain re-roots on a checkpoint every
     * N rounds, so re-execution per round is bounded by N−1
-    * cached-partition map passes. Local default 4 (a job launch costs
-    * orders of magnitude more than a map pass over the cached state
-    * here); set 1 on a cluster where re-reading the cached corpus N×
-    * outweighs N job launches. (A max_by global aggregate was measured
-    * WORSE than TakeOrdered here: its final agg needs an Exchange, which
-    * AQE runs as an extra stage-job per round — probe_r17 job counts.) */
-  private def kcenterCheckpointEvery(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.kcenter.checkpointEvery")
-      .map(_.toInt).getOrElse(4)
+    * cached-partition map passes. N = 4 (a job launch costs orders of
+    * magnitude more than a map pass over the cached state here); 1
+    * suits a cluster where re-reading the cached corpus N× outweighs N
+    * job launches. (A max_by global aggregate was measured WORSE than
+    * TakeOrdered here: its final agg needs an Exchange, which AQE runs
+    * as an extra stage-job per round — probe_r17 job counts.) */
+  private val kcenterCheckpointEvery = 4
 
   private def greedyKCenter(s: SparkSession, pts: DataFrame,
       k: Int): DataFrame = {
     import s.implicits._
-    val ckptEvery = kcenterCheckpointEvery(s)
     val first = pts.orderBy("vec_id").limit(1).collect()(0)
     def distTo(ce: Seq[Double], cn: Double) =
       lit(1.0) - cosine(col("e"), array(ce.map(lit): _*), col("norm"), lit(cn))
@@ -1629,7 +1623,7 @@ object SimilarityQueries {
         .withColumn("d",
           least(col("d"), distTo(c.getSeq[Double](1), c.getDouble(2))))
       sinceCkpt += 1
-      if (sinceCkpt >= ckptEvery && r < k) {
+      if (sinceCkpt >= kcenterCheckpointEvery && r < k) {
         d = d.localCheckpoint()
         sinceCkpt = 0
       }

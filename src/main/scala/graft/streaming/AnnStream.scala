@@ -4,7 +4,7 @@ import graft.ops.SimilarityQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING ANN INDEX MAINTENANCE — the ingestion face of the IVF-PQ
   * index ([[graft.ops.SimilarityQueries.annIvfPq]]'s layout), composed
@@ -88,13 +88,8 @@ object AnnStream {
     * (vec_id long, embedding array). [[init]] must have run. */
   def start(spark: SparkSession, vectors: DataFrame, indexDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    vectors.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, indexDir, batchId)
-      }
-      .start()
+    BatchStore.start(vectors, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, indexDir, _))
 
   /** One micro-batch: assign cells, PQ-code, append cell-partitioned.
     * Idempotent per `batchId` via the commit marker. */
@@ -235,9 +230,6 @@ object AnnStream {
 
   // ---- bench-only steady-state twin of SimilarityQueries.annIvfPq ------
 
-  private val prebuiltDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** BENCH-ONLY steady-state twin of
     * [[graft.ops.SimilarityQueries.annIvfPq]]: the registered query
     * honestly pays a full index rebuild per run to stay oracle-checkable;
@@ -248,14 +240,11 @@ object AnnStream {
     * (self-match excluded); AnnStreamSpec pins row-for-row equality with
     * the rebuild query. */
   def annIvfPqPrebuilt(s: SparkSession, dir: String): DataFrame = {
-    val idx = prebuiltDirs.getOrElseUpdate(dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft-ann-prebuilt")
-        .toString + "/index"
+    val idx = FaceState("ann-prebuilt", dir) { d =>
       val corpus = graft.Tables.embeddings(s, dir).select("vec_id", "embedding")
       init(s, corpus, d)
       applyMicroBatch(s, corpus, d, 0L)
-      d
-    })
+    }
     val q = graft.Tables.embeddings(s, dir)
       .filter(SimilarityQueries.queryPred())
       .select(col("vec_id").as("q_id"), col("embedding"))
@@ -265,11 +254,6 @@ object AnnStream {
         col("vec_id").as("neighbor"), col("adist"))
       .orderBy("q", "rank")
   }
-
-  /** Separate state cache for the takedown face — [[applyTakedown]]
-    * mutates, so it must never share [[annIvfPqPrebuilt]]'s index. */
-  private val takedownDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** REGISTERED + DuckDB-oracled — the ANN INDEX under takedown: train
     * meta on the full bootstrap, ingest the corpus in 4 batches, remove
@@ -284,8 +268,7 @@ object AnnStream {
     * (vector, meta) — AnnStreamSpec pins the index-level equality). */
   def takedownReplayAnn(s: SparkSession, dir: String): DataFrame = {
     val stride = Takedown.replayRemovalStride
-    val idx = takedownDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-ann-takedown") + "/index"
+    val idx = FaceState("ann-takedown", dir) { d =>
       val corpus = graft.Tables.embeddings(s, dir)
         .select("vec_id", "embedding").localCheckpoint()
       init(s, corpus, d)
@@ -294,8 +277,7 @@ object AnnStream {
       applyTakedown(s, d,
         corpus.filter(col("vec_id") % stride === 0).select("vec_id"),
         takedownId = 0L)
-      d
-    })
+    }
     val q = graft.Tables.embeddings(s, dir)
       .filter(SimilarityQueries.queryPred() && col("vec_id") % stride =!= 0)
       .select(col("vec_id").as("q_id"), col("embedding"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The batch-dir commit protocol every marker-committed streaming state
   * store shares — the idempotent, batch-id-keyed sink of the Structured
@@ -174,6 +175,18 @@ object BatchStore {
   /** [[stage]] `df` as the parquet dir `dst`. */
   def writeDir(dst: String, df: DataFrame, mark: Boolean): Unit =
     stage(dst, mark)(df.write.mode("overwrite").parquet(_))
+
+  /** Start `input` as a micro-batch stream whose sink hands each batch
+    * and its id to `apply` — every store's `start`. */
+  def start(input: DataFrame, checkpoint: String, triggerMs: Long)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .trigger(Trigger.ProcessingTime(triggerMs))
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        apply(batch, batchId)
+      }
+      .start()
 
   /** Committed takedown dirs, ascending by name. */
   def takedownDirs(root: String): Seq[String] =

@@ -4,7 +4,7 @@ import graft.functions.TextFunctions.tokens
 import graft.ops.ProfileQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming Count–Min sketch — the sketch family's STREAMING face,
   * making the mergeability that [[graft.ops.ProfileQueries.cmsCells]]'s
@@ -41,13 +41,8 @@ object CmsStream {
   /** Start the sketch stream: `docs` must carry a `text` column. */
   def start(spark: SparkSession, docs: DataFrame, stateDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, stateDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, stateDir, _))
 
   /** One micro-batch: tokenize, aggregate this batch's d×w cells, commit
     * them under `cells/batch=N`. Idempotent per `batchId`. */
@@ -128,29 +123,22 @@ object CmsStream {
 
   // ---- registered takedown face -----------------------------------------
 
-  /** Same staleness assumption and orphan story as the other bench
-    * states (GraphStream note); own cache because [[applyTakedown]]
-    * mutates. */
-  private val takedownStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled — the sketch under batch-grain
-    * takedown: 4 deterministic batches (doc_id mod 4), batch 1 removed;
+    * takedown: 4 deterministic batches (doc_id mod 4) on the face's
+    * own [[FaceState]] dir, batch 1 removed;
     * the post-takedown estimates of the SURVIVORS' top-K tokens must
     * equal the one-shot vocab_cms chain over the surviving docs — the
     * linearity claim ("exclusion IS subtraction") graded end to end by
     * the driver, not only spec-pinned. */
   def takedownReplayCms(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.TextFunctions.tokens
-    val st = takedownStateDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-cms-takedown") + "/state"
+    val st = FaceState("cms-takedown", dir) { d =>
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "text").localCheckpoint()
       (0 until 4).foreach(i => applyMicroBatch(s,
         docs.filter(pmod(col("doc_id"), lit(4)) === i), d, i.toLong))
       applyTakedown(s, d, Seq(1L), takedownId = 0L)
-      d
-    })
+    }
     val toks = graft.Tables.documents(s, dir)
       .filter(col("doc_id") % 4 =!= 1)
       .select(explode(tokens(col("text"))).as("token"))

@@ -4,7 +4,7 @@ import graft.ops.CurationQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Ingest-time CURATION — the flagship text pipeline
   * ([[CurationQueries.curationPipeline]]: too_short → non_en →
@@ -52,13 +52,8 @@ object CurationStream {
     * text string). */
   def start(spark: SparkSession, docs: DataFrame, stateDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, stateDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, stateDir, _))
 
   /** One micro-batch: score, claim hashes, gate, commit. Idempotent
     * per `batchId`. */
@@ -306,21 +301,14 @@ object CurationStream {
 
   // ---- registered deterministic face -------------------------------------
 
-  /** Process-lifetime state cache keyed by corpus dir — the
-    * [[EvalStream.streamedDirs]] staleness assumption and orphan story
-    * (verify/bench-only; immutable testdata). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Deterministic 4-batch ingest: batch i = the i-th CONTIGUOUS
     * doc_id quartile, so batches arrive in nondecreasing id order and
     * first-arrival canonicality coincides exactly with the batch
     * operator's corpus-wide min-doc_id rule — the live funnel is then
     * the curation_funnel oracle's own SQL, replayed against the
-    * streaming path. */
+    * streaming path. Built once per JVM by [[FaceState]]. */
   private def curationState(s: SparkSession, dir: String): String =
-    streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-curation-stream") + "/state"
+    FaceState("curation-stream", dir) { d =>
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "text").localCheckpoint()
       val n = docs.count()
@@ -328,13 +316,7 @@ object CurationStream {
       (0 until 4).foreach(i => applyMicroBatch(s,
         docs.filter(col("doc_id") >= i * span &&
           col("doc_id") < (i + 1) * span), d, i.toLong))
-      d
-    })
-
-  /** Separate state cache for the takedown face — applyTakedown
-    * mutates, so it must never share [[curationState]]'s ingest. */
-  private val takedownDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    }
 
   /** REGISTERED + DuckDB-oracled — the curation monitor under takedown:
     * the deterministic 4-quartile ingest, then a takedown of every
@@ -345,8 +327,7 @@ object CurationStream {
     * surviving twin and flips its verdict to the stateless outcome, or
     * the rows diverge. */
   def takedownReplayCuration(s: SparkSession, dir: String): DataFrame = {
-    val st = takedownDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-curation-takedown") + "/state"
+    val st = FaceState("curation-takedown", dir) { d =>
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "text").localCheckpoint()
       // min/max-derived quartiles (the Takedown.quartiles convention) —
@@ -360,8 +341,7 @@ object CurationStream {
         docs.filter(col("doc_id") %
           Takedown.replayRemovalStride === 0).select("doc_id"),
         takedownId = 0L)
-      d
-    })
+    }
     readVerdicts(s, st)
       .select("doc_id", "n_tokens", "pred_lang", "quality",
         "is_canonical", "keep", "reject_reason")

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** INGESTION-TIME streaming dedup — the streaming face of
   * [[graft.ops.DedupQueries.dedupIncremental]]: each micro-batch of
@@ -44,13 +44,8 @@ object DedupStream {
   /** Start the ingest stream: `docs` must carry (doc_id long, text string). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, corpusDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, corpusDir, _))
 
   /** One micro-batch: within-batch dedup (min doc_id per hash wins, the
     * same canonical rule as the batch operators), anti-probe of the

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming EMBEDDING-CENTROID DRIFT monitor — the embedding-modality
   * member of the monitor family ([[EvalStream]] watches gate scores;
@@ -54,13 +54,8 @@ object EmbedStream {
     * embedding array<float|double>). */
   def start(spark: SparkSession, vecs: DataFrame, stateDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    vecs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, stateDir, batchId)
-      }
-      .start()
+    BatchStore.start(vecs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, stateDir, _))
 
   /** One micro-batch: collapse to the component-sum table, commit under
     * `counts/batch=N`. Idempotent per `batchId`. */
@@ -262,28 +257,19 @@ object EmbedStream {
 
   // ---- registered deterministic face -------------------------------------
 
-  /** Process-lifetime monitor-state cache keyed by corpus dir — same
-    * staleness assumption and orphan story as
-    * [[EvalStream.streamedDirs]] (bench/verify-only; immutable
-    * testdata; leaked temp dirs reaped by the
-    * [[StreamFs.benchTempDir]] shutdown hook). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** The deterministic 4-batch monitor state: batch i holds the
     * vectors with vec_id ≡ i (mod 4), so the trailing-2 window is
     * exactly `vec_id % 4 IN (2, 3)` — a DuckDB-expressible predicate,
     * making the registered face oracle-checkable end to end (the
-    * [[EvalStream.highNdvState]] scheme). */
+    * [[EvalStream.highNdvState]] scheme). Built once per JVM by
+    * [[FaceState]]. */
   private def embedState(s: SparkSession, dir: String): String =
-    streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-embed-stream") + "/state"
+    FaceState("embed-stream", dir) { d =>
       val vecs = graft.Tables.embeddings(s, dir)
         .select("vec_id", "label", "embedding").localCheckpoint()
       (0 until 4).foreach(i => applyMicroBatch(s,
         vecs.filter(pmod(col("vec_id"), lit(4)) === i), d, i.toLong))
-      d
-    })
+    }
 
   /** REGISTERED drift face (DuckDB-oracled): per-label trailing-2-of-4
     * vs lifetime centroid drift over the deterministic [[embedState]].
@@ -293,11 +279,6 @@ object EmbedStream {
   def embeddingDriftQuery(s: SparkSession, dir: String): DataFrame =
     embeddingDriftLive(s, embedState(s, dir), lastK = 2)
 
-  /** Separate state cache for the takedown face — [[applyTakedown]]
-    * mutates, so it must never share [[embedState]]'s ingest. */
-  private val takedownStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled — the centroid monitor under DOC-GRAIN
     * takedown: the deterministic 4-batch ingest, then a takedown of
     * every [[Takedown.replayRemovalStride]]-th vec_id (batch = vec_id
@@ -306,8 +287,7 @@ object EmbedStream {
     * integer-micro sums — lifetime AND trailing-window legs both, or
     * the subtraction missed (or double-counted) mass. */
   def takedownReplayEmbed(s: SparkSession, dir: String): DataFrame = {
-    val st = takedownStateDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-embed-takedown") + "/state"
+    val st = FaceState("embed-takedown", dir) { d =>
       val vecs = graft.Tables.embeddings(s, dir)
         .select("vec_id", "label", "embedding").localCheckpoint()
       (0 until 4).foreach(i => applyMicroBatch(s,
@@ -318,8 +298,7 @@ object EmbedStream {
             pmod(col("vec_id"), lit(4)).cast("long").as("batch"),
             col("label"), col("embedding")),
         takedownId = 0L)
-      d
-    })
+    }
     embeddingDriftLive(s, st, lastK = 2)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.EvalQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming GATE-EVAL — the monitoring face of the eval family
   * ([[graft.ops.EvalQueries]]): a production curation gate drifts as the
@@ -42,13 +42,8 @@ object EvalStream {
     * (score long, label boolean, decision boolean). */
   def start(spark: SparkSession, scored: DataFrame, stateDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    scored.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, stateDir, batchId)
-      }
-      .start()
+    BatchStore.start(scored, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, stateDir, _))
 
   /** One micro-batch: collapse the batch to its count table, commit it
     * under `counts/batch=N`. Idempotent per `batchId`. */
@@ -259,14 +254,6 @@ object EvalStream {
 
   // ---- bench-only live face ---------------------------------------------
 
-  /** Process-lifetime cache keyed by corpus DIR, no content
-    * fingerprint — a corpus regenerated in place serves stale monitor
-    * state for the JVM lifetime. Bench-only (immutable testdata), and
-    * race-leaked temp dirs are reaped by the [[StreamFs.benchTempDir]]
-    * shutdown hook (round-13 ADVICE). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** BENCH-ONLY: the live gate report against a committed monitor state
     * built once per sf dir by ingesting the high-NDV gate's scored rows
     * in 4 micro-batches (warmup pays the scoring + ingest); timed passes
@@ -282,21 +269,19 @@ object EvalStream {
     * DuckDB-expressible predicate (`score % 4 IN (2, 3)`) and the face
     * can be oracled, not just spec-pinned. */
   private def highNdvState(s: SparkSession, dir: String): String =
-    streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-eval-stream") + "/state"
+    FaceState("eval-stream", dir) { d =>
       val scored = graft.ops.CurationQueries.highNdvScored(s, dir)
         .localCheckpoint()
       (0 until 4).foreach(i => applyMicroBatch(s,
         scored.filter(pmod(col("score"), lit(4)) === i), d, i.toLong))
-      d
-    })
+    }
 
   /** REGISTERED drift face (DuckDB-oracled): trailing-2-of-4-batch vs
     * lifetime report over the deterministic [[highNdvState]] — the
     * window is exactly the rows with `score % 4 IN (2, 3)`, which is
     * what the oracle recomputes with the same shared eval arithmetic
     * ([[EvalQueries.gateEvalDriftSql]]). The monitor state is built
-    * once per (JVM, dir) — Verify sees the deterministic report, Bench
+    * once per (JVM, dir) by [[FaceState]] — Verify sees the deterministic report, Bench
     * times the dashboard-refresh cost (two subset sums + two tails). */
   def gateEvalDriftQuery(s: SparkSession, dir: String): DataFrame =
     gateEvalDrift(s, highNdvState(s, dir), "highndv", lastK = 2)
@@ -324,11 +309,6 @@ object EvalStream {
     calibrationDrift(s, highNdvState(s, dir), "highndv",
       calibrationLiveBinWidth, lastK = 2)
 
-  /** Separate state cache for the takedown face — [[applyTakedown]]
-    * mutates, so it must never share [[highNdvState]]'s ingest. */
-  private val takedownStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled — the gate monitor under BATCH-GRAIN
     * takedown: the deterministic 4-batch ingest (score mod 4), batch 1
     * removed; the post-takedown drift report must equal the oracle's
@@ -338,15 +318,13 @@ object EvalStream {
     * Count-subtraction-by-exclusion graded end to end by the driver,
     * not only spec-pinned. */
   def takedownReplayEval(s: SparkSession, dir: String): DataFrame = {
-    val st = takedownStateDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-eval-takedown") + "/state"
+    val st = FaceState("eval-takedown", dir) { d =>
       val scored = graft.ops.CurationQueries.highNdvScored(s, dir)
         .localCheckpoint()
       (0 until 4).foreach(i => applyMicroBatch(s,
         scored.filter(pmod(col("score"), lit(4)) === i), d, i.toLong))
       applyTakedown(s, d, Seq(1L), takedownId = 0L)
-      d
-    })
+    }
     gateEvalDrift(s, st, "highndv", lastK = 2)
   }
 }

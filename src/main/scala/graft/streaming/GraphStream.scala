@@ -4,7 +4,7 @@ import graft.ops.SimilarityQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** STREAMING kNN-GRAPH MAINTENANCE — the graph twin of [[AnnStream]]:
   * keep a searchable kNN graph current as vectors arrive, without ever
@@ -99,13 +99,8 @@ object GraphStream {
     * (vec_id long, embedding array). [[init]] must have run. */
   def start(spark: SparkSession, vectors: DataFrame, indexDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    vectors.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, indexDir, batchId)
-      }
-      .start()
+    BatchStore.start(vectors, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, indexDir, _))
 
   /** The committed node table (vec_id, cell, hbkt, e, norm) — committed
     * takedowns applied: a removed doc's raw embedding is the most direct
@@ -389,49 +384,35 @@ object GraphStream {
 
   // ---- bench-only steady-state face -------------------------------------
 
-  /** Process-lifetime cache keyed by corpus DIR with no content
-    * fingerprint: a corpus regenerated IN PLACE at the same path would
-    * serve the old run's index for the JVM's lifetime. Acceptable for
-    * a bench-only face (the bench JVM reads immutable testdata);
-    * losers of a first-call race leak only a temp dir, which the
-    * [[StreamFs.benchTempDir]] shutdown hook reaps (round-13 ADVICE). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def buildStreamedIndex(s: SparkSession, dir: String): String = {
-    val d = StreamFs.benchTempDir("graft-graph-stream") + "/index"
+  /** Ingest `dir`'s corpus into the index `d` in 4 micro-batches. */
+  private def buildStreamedIndex(s: SparkSession, dir: String,
+                                 d: String): Unit = {
     val corpus = graft.Tables.embeddings(s, dir)
       .select("vec_id", "embedding")
     init(s, corpus, d)
     (0 until 4).foreach(i => applyMicroBatch(s,
       corpus.filter(pmod(col("vec_id"), lit(4)) === i), d, i.toLong))
-    d
   }
 
   /** BENCH-ONLY: search over the STREAMED graph index — built lazily
-    * once per sf dir by ingesting the corpus in 4 micro-batches (the
-    * warmup pass pays it); timed passes report the live-index search
-    * cost. GraphStreamSpec pins the index's batch-count invariance and
-    * its recall floor. This face deliberately stays UNCOMPACTED — it is
-    * the pre-maintenance number whose gap to
+    * once per sf dir ([[FaceState]]) by ingesting the corpus in 4
+    * micro-batches (the warmup pass pays it); timed passes report the
+    * live-index search cost. GraphStreamSpec pins the index's
+    * batch-count invariance and its recall floor. This face deliberately
+    * stays UNCOMPACTED — it is the pre-maintenance number whose gap to
     * [[annGraphSearchCompacted]] / the prebuilt face quantifies the
     * small-file + unpruned-ring tax [[compact]] removes. */
   def annGraphSearchStreamed(s: SparkSession, dir: String): DataFrame =
     searchLive(s, dir,
-      streamedDirs.getOrElseUpdate(dir, buildStreamedIndex(s, dir)))
-
-  /** Same staleness assumption and orphan story as [[streamedDirs]]. */
-  private val compactedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+      FaceState("graph-stream", dir)(buildStreamedIndex(s, dir, _)))
 
   /** BENCH-ONLY: the same 4-micro-batch streamed index AFTER one
     * [[compact]] pass (warmup pays build + compaction) — the number a
     * deployment that runs its maintenance window pays per search.
     * GraphStreamSpec pins post-compaction recall ≥ pre-compaction. */
   def annGraphSearchCompacted(s: SparkSession, dir: String): DataFrame =
-    searchLive(s, dir, compactedDirs.getOrElseUpdate(dir, {
-      val d = buildStreamedIndex(s, dir)
+    searchLive(s, dir, FaceState("graph-compacted", dir) { d =>
+      buildStreamedIndex(s, dir, d)
       compact(s, d)
-      d
-    }))
+    })
 }

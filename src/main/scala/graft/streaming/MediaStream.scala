@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.MediaQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** [[MediaStream]]'s typed fingerprint row — top-level (not nested in
   * the object) so the Encoder's generated code can construct it inside
@@ -70,13 +70,8 @@ object MediaStream {
     * (doc_id long, payload binary). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, corpusDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, corpusDir, _))
 
   /** Sniff + REAL decode + modality-matched 60-bit fingerprint — the
     * map-only kernel, one iterator pass per partition. */
@@ -309,57 +304,40 @@ object MediaStream {
       .orderBy("modality") // 2 rows — a global order is free
   }
 
-  /** Process-lifetime state for the drift face: the textured corpus
-    * ingested in 4 CONTIGUOUS doc_id-quartile batches (id-ordered, so
-    * the per-batch verdicts are the batch faces' own — the oracle
-    * recomputes each quartile's tally from the dedup_media/dedup_audio
-    * pair SQL). Separate from [[mediaGateProbe]]'s stride-batched
-    * state on purpose: this face's oracle needs id-ordered batches. */
-  private val driftDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled: trailing-2-of-4 quartile batches vs
-    * lifetime drop rate by modality. Bench times the dashboard refresh
-    * (the ≤2-row count reads), not the ingest (warmup pays it once). */
+    * lifetime drop rate by modality. The textured corpus is ingested in
+    * 4 CONTIGUOUS doc_id-quartile batches (id-ordered, so the per-batch
+    * verdicts are the batch faces' own — the oracle recomputes each
+    * quartile's tally from the dedup_media/dedup_audio pair SQL), a
+    * state separate from [[mediaGateProbe]]'s stride-batched one on
+    * purpose: this face's oracle needs id-ordered batches. Bench times
+    * the dashboard refresh (the ≤2-row count reads), not the ingest
+    * (warmup pays it once). */
   def mediaGateDriftQuery(s: SparkSession, dir: String): DataFrame = {
     val media = MediaQueries.texturedMediaTable(s, dir)
-    val st = driftDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-media-drift") + "/corpus"
-      val m = media.localCheckpoint()
-      val (lo, hi) = m.agg(min("doc_id"), max("doc_id")).collect()
-        .headOption.map(r => (r.getLong(0), r.getLong(1))).getOrElse((0L, 0L))
-      val span = hi - lo + 1
-      (0 until 4).foreach(i => applyMicroBatch(s,
-        m.filter(col("doc_id") >= lo + i * span / 4 &&
-          col("doc_id") < lo + (i + 1) * span / 4 + (if (i == 3) 1 else 0)),
-        d, i.toLong))
-      d
-    })
+    val st = FaceState("media-drift", dir) { d =>
+      Takedown.quartiles(media.localCheckpoint()).zipWithIndex.foreach {
+        case (b, i) => applyMicroBatch(s, b, d, i.toLong)
+      }
+    }
     mediaGateDrift(s, st, lastK = 2)
   }
 
   // ---- bench-only steady-state face ---------------------------------
 
-  /** Process-lifetime cache, same staleness assumption and shutdown-
-    * hook orphan story as the other bench states (GraphStream note). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** BENCH-ONLY: the ingest gate's steady-state cost — state built once
-    * per sf dir by ingesting 3 of 4 id-strides of the textured
-    * multimodal corpus (warmup pays decode + ingest), then timed passes
-    * run [[gateProbe]] for the held-out stride: decode + fingerprint +
-    * band probe against the committed index, the per-batch number a
-    * crawl pipeline pays at the gate. MediaStreamSpec pins gateProbe ≡
+    * per sf dir ([[FaceState]]) by ingesting 3 of 4 id-strides of the
+    * textured multimodal corpus (warmup pays decode + ingest), then timed
+    * passes run [[gateProbe]] for the held-out stride: decode +
+    * fingerprint + band probe against the committed index, the per-batch
+    * number a crawl pipeline pays at the gate. MediaStreamSpec pins gateProbe ≡
     * the ingest's own verdicts and stream ≡ batch overall. */
   def mediaGateProbe(s: SparkSession, dir: String): DataFrame = {
     val media = MediaQueries.texturedMediaTable(s, dir)
-    val st = streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-media-stream") + "/corpus"
+    val st = FaceState("media-stream", dir) { d =>
       (0 until 3).foreach(i => applyMicroBatch(s,
         media.filter(pmod(col("doc_id"), lit(4)) === i), d, i.toLong))
-      d
-    })
+    }
     gateProbe(s, media.filter(pmod(col("doc_id"), lit(4)) === 3), st)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.DedupQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** INGESTION-TIME streaming NEAR-dup filtering — the streaming face of
   * [[graft.ops.DedupQueries.dedupIncrementalLsh]], completing
@@ -47,13 +47,8 @@ object NearDupStream {
   /** Start the ingest stream: `docs` must carry (doc_id long, text string). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, corpusDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, corpusDir, _))
 
   /** One micro-batch: sign, band, probe (index ∪ earlier-in-batch), keep
     * the novel documents; index EVERY document's band rows. Idempotent

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.PrepQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** INCREMENTAL SEQUENCE PACKING — the streaming face of
   * [[PrepQueries.sequencePack]]: a long-lived ingest extends the
@@ -37,13 +37,8 @@ object PackStream {
     * (doc_id long, text string). */
   def start(spark: SparkSession, docs: DataFrame, stateDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, stateDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, stateDir, _))
 
   /** One micro-batch: read the committed running offset, place this
     * batch's docs from it, commit placement + the batch's 1-row total.
@@ -107,27 +102,20 @@ object PackStream {
 
   // ---- registered face --------------------------------------------------
 
-  /** Same staleness assumption and orphan story as the other bench
-    * states (GraphStream note). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled: the committed placement after the
-    * deterministic 4-quartile id-ordered ingest — EXACTLY
+    * deterministic 4-quartile id-ordered ingest ([[FaceState]]) — EXACTLY
     * [[PrepQueries.sequencePack]], so the face shares that operator's
     * oracle SQL verbatim. Bench times the committed-placement read
     * (the dashboard/packer-restart cost); the batch face re-tokenizes
     * the corpus per refresh. */
   def sequencePackStream(s: SparkSession, dir: String): DataFrame = {
-    val st = streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-pack-stream") + "/state"
+    val st = FaceState("pack-stream", dir) { d =>
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "text").localCheckpoint()
       Takedown.quartiles(docs).zipWithIndex.foreach { case (b, i) =>
         applyMicroBatch(s, b, d, i.toLong)
       }
-      d
-    })
+    }
     readPlacement(s, st).orderBy("doc_id")
   }
 }

@@ -4,7 +4,7 @@ import graft.ops.{CurationQueries, MediaQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** [[PairStream]]'s typed image-signature row — top-level so the
   * Encoder constructs it inside whole-stage codegen (the MediaSig
@@ -63,13 +63,8 @@ object PairStream {
     * (doc_id long, text string, payload binary|null). */
   def start(spark: SparkSession, docs: DataFrame, stateDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, stateDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, stateDir, _))
 
   /** ONE real decode per payload → (doc_id, format, width, height,
     * dhash), the map-only kernel. */
@@ -473,33 +468,22 @@ object PairStream {
 
   // ---- registered deterministic faces ---------------------------------
 
-  /** Process-lifetime state cache (verify/bench only; immutable
-    * testdata — the EvalStream staleness assumption). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Deterministic 4-quartile id-ordered ingest of the full document
     * corpus with image payloads attached where they exist (doc_id % 3
     * != 1 — the textured corpus's image slice); text-only docs flow
     * through the claim stage so caption canonicality matches the batch
     * face's corpus-wide rule exactly. */
   private def pairState(s: SparkSession, dir: String): String =
-    streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-pair-stream") + "/state"
+    FaceState("pair-stream", dir) { d =>
       val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
         .join(MediaQueries.texturedMediaTable(s, dir)
           .filter(col("doc_id") % 3 =!= 1), Seq("doc_id"), "left")
         .select("doc_id", "text", "payload")
         .localCheckpoint()
-      val (lo, hi) = docs.agg(min("doc_id"), max("doc_id")).collect()
-        .headOption.map(r => (r.getLong(0), r.getLong(1))).getOrElse((0L, 0L))
-      val span = hi - lo + 1
-      (0 until 4).foreach(i => applyMicroBatch(s,
-        docs.filter(col("doc_id") >= lo + i * span / 4 &&
-          col("doc_id") < lo + (i + 1) * span / 4 + (if (i == 3) 1 else 0)),
-        d, i.toLong))
-      d
-    })
+      Takedown.quartiles(docs).zipWithIndex.foreach { case (b, i) =>
+        applyMicroBatch(s, b, d, i.toLong)
+      }
+    }
 
   /** REGISTERED live pair-funnel face (DuckDB-oracled): the streaming
     * monitor's funnel over the deterministic id-ordered ingest — the
@@ -510,11 +494,6 @@ object PairStream {
   def multimodalFunnelLive(s: SparkSession, dir: String): DataFrame =
     pairFunnelLive(s, pairState(s, dir))
 
-  /** Separate state cache for the takedown face — [[applyTakedown]]
-    * mutates, so it must never share [[pairState]]'s ingest. */
-  private val takedownStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled — the PAIR gate under takedown: the
     * deterministic 4-quartile pair ingest, then a takedown of every
     * [[Takedown.replayRemovalStride]]-th doc_id; the post-takedown
@@ -523,8 +502,7 @@ object PairStream {
     * survivors alike) and image near-dup re-election in one correction
     * pass, or the rows diverge. */
   def takedownReplayPairs(s: SparkSession, dir: String): DataFrame = {
-    val st = takedownStateDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-pair-takedown") + "/state"
+    val st = FaceState("pair-takedown", dir) { d =>
       val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
         .join(MediaQueries.texturedMediaTable(s, dir)
           .filter(col("doc_id") % 3 =!= 1), Seq("doc_id"), "left")
@@ -537,8 +515,7 @@ object PairStream {
         docs.filter(col("doc_id") %
           Takedown.replayRemovalStride === 0).select("doc_id"),
         takedownId = 0L)
-      d
-    })
+    }
     readVerdicts(s, st)
       .select("doc_id", "format", "width", "height", "pred_lang",
         "quality", "keep", "reject_reason")

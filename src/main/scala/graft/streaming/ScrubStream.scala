@@ -4,7 +4,7 @@ import graft.ops.PrepQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** INGESTION-TIME exact-span scrub — the streaming face of
   * [[graft.ops.PrepQueries.dedupSpanScrub]] (C4's span dedup, Raffel et
@@ -84,13 +84,8 @@ object ScrubStream {
     * (doc_id long, text string). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, corpusDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, corpusDir, _))
 
   /** One micro-batch: split, mark batch-first spans, anti-probe the
     * index, emit trimmed docs, commit novel span hashes (owner-
@@ -326,35 +321,22 @@ object ScrubStream {
 
   // ---- registered faces -----------------------------------------------
 
-  /** Same staleness assumption and orphan story as the other bench
-    * states (GraphStream note). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled: the trimmed corpus after ingesting
     * the documents table in 4 CONTIGUOUS id-range batches — id-ordered,
     * so the output is EXACTLY [[graft.ops.PrepQueries.dedupSpanScrub]]
     * and the face shares that operator's oracle SQL verbatim. State
-    * builds once per (JVM, dir); Verify sees the deterministic corpus,
+    * builds once per (JVM, dir) ([[FaceState]]); Verify sees the deterministic corpus,
     * Bench times the committed-corpus read. */
   def dedupSpanScrubStream(s: SparkSession, dir: String): DataFrame = {
-    val st = streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-scrub-stream") + "/corpus"
+    val st = FaceState("scrub-stream", dir) { d =>
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "text").localCheckpoint()
       Takedown.quartiles(docs).zipWithIndex.foreach { case (b, i) =>
         applyMicroBatch(s, b, d, i.toLong)
       }
-      d
-    })
+    }
     readCorpus(s, st).orderBy("doc_id")
   }
-
-  /** Separate state cache for the takedown face — [[applyTakedown]]
-    * mutates, so it must never share [[dedupSpanScrubStream]]'s
-    * ingest. */
-  private val takedownStateDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** REGISTERED + DuckDB-oracled — the span gate under takedown: the
     * deterministic 4-quartile ingest, then a takedown of every
@@ -364,8 +346,7 @@ object ScrubStream {
     * restituted to the earliest surviving holders, or the rows
     * diverge. */
   def takedownReplayScrub(s: SparkSession, dir: String): DataFrame = {
-    val st = takedownStateDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-scrub-takedown") + "/corpus"
+    val st = FaceState("scrub-takedown", dir) { d =>
       val docs = graft.Tables.documents(s, dir)
         .select("doc_id", "text").localCheckpoint()
       Takedown.quartiles(docs).zipWithIndex.foreach { case (b, i) =>
@@ -375,8 +356,7 @@ object ScrubStream {
         docs.filter(col("doc_id") %
           Takedown.replayRemovalStride === 0).select("doc_id"),
         takedownId = 0L)
-      d
-    })
+    }
     readCorpus(s, st).orderBy("doc_id")
   }
 }

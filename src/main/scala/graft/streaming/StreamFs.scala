@@ -25,7 +25,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * atomic rename (POSIX, HDFS); on stores that don't, the batch-dir
   * protocols do not trust rename visibility — commit is a marker FILE
   * created after the data is in place, and readers/recovery treat any
-  * unmarked directory as uncommitted debris.
+  * unmarked directory as uncommitted debris. The stream faces' local
+  * temp state dirs are not this facade's concern: [[FaceState]] owns
+  * them.
   */
 object StreamFs {
 
@@ -172,24 +174,6 @@ object StreamFs {
   def touchAt(p: String, mtimeMs: Long): Unit = {
     val path = new Path(p)
     fc(path).setTimes(path, mtimeMs, -1L)
-  }
-
-  /** Create a process-lifetime LOCAL temp dir for the bench-only
-    * streamed-state faces, registered for recursive deletion at JVM
-    * exit — concurrent first calls that lose a cache race would
-    * otherwise leak an orphan dir for good (round-13 ADVICE). Lives
-    * here (not on the Hadoop facade): bench state is always local. */
-  def benchTempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      try {
-        val walk = java.nio.file.Files.walk(d)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      } catch { case _: Exception => () }
-    }))
-    d.toString
   }
 
   /** Modification time in epoch millis, when the path exists. */

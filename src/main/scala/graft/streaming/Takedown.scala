@@ -489,14 +489,6 @@ object Takedown {
   private[graft] val replayRemovalStride = 13L
   private[graft] val replayUrlRemovalStride = 11L
 
-  /** Process-lifetime state cache keyed by (gate, sf dir) — the
-    * [[UrlStream]] staleness assumption and orphan story (verify/bench
-    * only; immutable testdata). Each face gets its OWN corpus dir:
-    * takedown mutates state, so sharing another face's cached ingest
-    * would poison it. */
-  private val replayDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-
   /** 4 contiguous doc_id-quartile batches (id-ordered, so stream ≡
     * one-shot verdicts — the CurationStream convention). min/max-based,
     * so sparse or offset id spaces still ingest every doc (the
@@ -509,29 +501,20 @@ object Takedown {
       col("doc_id") < lo + (i + 1) * span / 4 + (if (i == 3) 1 else 0)))
   }
 
+  /** The `kind` gate's replay state over `dir`, on its own
+    * [[FaceState]] dir: `ingest` commits each quartile batch to it,
+    * then every `stride`-th doc_id is taken down. */
   private def replayState(s: SparkSession, dir: String, kind: String,
       docs: DataFrame, stride: Long, gate: Gate)(
-      ingest: (DataFrame, Long) => Unit): String =
-    replayDirs.getOrElseUpdate((kind, dir), {
+      ingest: (DataFrame, String, Long) => Unit): String =
+    FaceState(s"takedown-$kind", dir) { d =>
       val docsCp = docs.localCheckpoint()
       quartiles(docsCp).zipWithIndex.foreach { case (b, i) =>
-        ingest(b, i.toLong)
+        ingest(b, d, i.toLong)
       }
-      val d = replayDirsBase(kind, dir)
       apply(s, d, docsCp.filter(col("doc_id") % stride === 0)
         .select("doc_id"), gate, takedownId = 0L)
-      d
-    })
-
-  // the ingest closure needs the dir before getOrElseUpdate returns it;
-  // keyed by (kind, INPUT dir) like replayDirs itself — a kind-only key
-  // would silently replay the first dir's temp corpus when a second
-  // scale dir runs in the same JVM (round-15 ADVICE)
-  private val pendingDirs =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private[streaming] def replayDirsBase(kind: String, dir: String): String =
-    pendingDirs.getOrElseUpdate((kind, dir),
-      StreamFs.benchTempDir(s"graft-takedown-$kind") + "/corpus")
+    }
 
   /** REGISTERED + DuckDB-oracled — the EXACT gate under takedown:
     * ingest `documents` through [[DedupStream]] in 4 id-ordered
@@ -543,8 +526,7 @@ object Takedown {
   def takedownReplayExact(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
     val st = replayState(s, dir, "exact", docs, replayRemovalStride,
-      Gate.Exact)((b, i) =>
-      DedupStream.applyMicroBatch(s, b, replayDirsBase("exact", dir), i))
+      Gate.Exact)(DedupStream.applyMicroBatch(s, _, _, _))
     DedupStream.readCorpus(s, st).select("doc_id", "content_hash")
       .orderBy("doc_id")
   }
@@ -558,8 +540,7 @@ object Takedown {
   def takedownReplay(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
     val st = replayState(s, dir, "neardup", docs, replayRemovalStride,
-      Gate.NearDup)((b, i) =>
-      NearDupStream.applyMicroBatch(s, b, replayDirsBase("neardup", dir), i))
+      Gate.NearDup)(NearDupStream.applyMicroBatch(s, _, _, _))
     NearDupStream.readCorpus(s, st).select("doc_id").orderBy("doc_id")
   }
 
@@ -573,8 +554,7 @@ object Takedown {
     val urls = graft.ops.TextQueries.urlNormalize(s, dir)
       .select("doc_id", "url")
     val st = replayState(s, dir, "url", urls, replayUrlRemovalStride,
-      Gate.Url)((b, i) =>
-      UrlStream.applyMicroBatch(s, b, replayDirsBase("url", dir), i))
+      Gate.Url)(UrlStream.applyMicroBatch(s, _, _, _))
     UrlStream.readCorpus(s, st).orderBy("doc_id")
   }
 
@@ -588,8 +568,7 @@ object Takedown {
   def takedownReplayWinnow(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
     val st = replayState(s, dir, "winnow", docs, replayRemovalStride,
-      Gate.Winnow)((b, i) =>
-      WinnowStream.applyMicroBatch(s, b, replayDirsBase("winnow", dir), i))
+      Gate.Winnow)(WinnowStream.applyMicroBatch(s, _, _, _))
     WinnowStream.readCorpus(s, st).select("doc_id").orderBy("doc_id")
   }
 

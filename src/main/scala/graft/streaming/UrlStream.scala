@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** INGESTION-TIME URL dedup — the streaming face of
   * [[graft.ops.DedupQueries.dedupUrl]], and the LAST dedup family to
@@ -47,13 +47,8 @@ object UrlStream {
     * (doc_id long, url string). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, corpusDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, corpusDir, _))
 
   /** One micro-batch: canonicalize, within-batch dedup (min doc_id per
     * canonical), anti-probe the index, admit first-seen canonicals.
@@ -197,11 +192,6 @@ object UrlStream {
 
   // ---- registered face ------------------------------------------------
 
-  /** Same staleness assumption and orphan story as the other bench
-    * states (GraphStream note). */
-  private val streamedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** REGISTERED + DuckDB-oracled: the admitted corpus after ingesting
     * the synthetic URL table in 4 CONTIGUOUS id-range batches
     * (id-ordered, so kept ≡ `doc_id = min(doc_id) over canonical` —
@@ -212,21 +202,14 @@ object UrlStream {
     readCorpus(s, urlState(s, dir)).orderBy("doc_id")
 
   /** The deterministic 4-quartile ingest state, built once per
-    * (JVM, dir) — shared by [[dedupUrlStream]] and
+    * (JVM, dir) by [[FaceState]] — shared by [[dedupUrlStream]] and
     * [[urlGateDriftQuery]]. */
   private def urlState(s: SparkSession, dir: String): String =
-    streamedDirs.getOrElseUpdate(dir, {
-      val d = StreamFs.benchTempDir("graft-url-stream") + "/corpus"
+    FaceState("url-stream", dir) { d =>
       val urls = graft.ops.TextQueries.urlNormalize(s, dir)
         .select("doc_id", "url").localCheckpoint()
-      val (lo, hi) = urls.agg(min("doc_id"), max("doc_id")).collect()
-        .headOption.map(r => (r.getLong(0), r.getLong(1))).getOrElse((0L, 0L))
-      val span = hi - lo + 1
-      (0 until 4).foreach { i =>
-        val b = urls.filter(col("doc_id") >= lo + i * span / 4 &&
-          col("doc_id") < lo + (i + 1) * span / 4 + (if (i == 3) 1 else 0))
+      Takedown.quartiles(urls).zipWithIndex.foreach { case (b, i) =>
         applyMicroBatch(s, b, d, i.toLong)
       }
-      d
-    })
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.TextQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** INGESTION-TIME streaming winnow dedup — the streaming face of
   * [[graft.ops.TextQueries.winnowIngest]], completing the ingest-filter
@@ -50,13 +50,8 @@ object WinnowStream {
   /** Start the ingest stream: `docs` must carry (doc_id long, text string). */
   def start(spark: SparkSession, docs: DataFrame, corpusDir: String,
             checkpoint: String, triggerMs: Long = 200L): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, corpusDir, batchId)
-      }
-      .start()
+    BatchStore.start(docs, checkpoint, triggerMs)(
+      applyMicroBatch(spark, _, corpusDir, _))
 
   /** One micro-batch: fingerprint, probe (index ∪ earlier-in-batch),
     * keep docs below the half-shared threshold; index EVERY document's

@@ -179,18 +179,9 @@ object AnnStream {
 
   /** The live coded corpus (committed batches only, committed takedowns
     * applied): (vec_id, cell, codes). */
-  def readCoded(spark: SparkSession, indexDir: String): DataFrame = {
-    val dirs = store.dataDirs(indexDir, "coded")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("vec_id"),
-          lit(0L).as("cell"), array().cast("array<int>").as("codes"))
-      else
-        spark.read.option("basePath", s"$indexDir/coded").parquet(dirs: _*)
-          .select(col("vec_id"), col("cell").cast("long").as("cell"),
-            col("codes"))
-    Takedown.removedView(spark, indexDir, base, Seq("vec_id"))
-  }
+  def readCoded(spark: SparkSession, indexDir: String): DataFrame =
+    Takedown.removedView(spark, indexDir, store.read(spark, indexDir,
+      "coded", "vec_id BIGINT, cell BIGINT, codes ARRAY<INT>"), Seq("vec_id"))
 
   /** IVF-PQ search over the live index for arbitrary query vectors
     * (q_id, embedding) → (q_id, rank, vec_id, adist). `excludeSelf`

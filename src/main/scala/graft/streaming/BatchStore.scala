@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** The batch-dir commit protocol every marker-committed streaming state
   * store shares — the idempotent, batch-id-keyed sink of the Structured
@@ -25,8 +27,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    `.cold`, all under the lock; [[BatchStore.recover]] completes or
   *    rolls back a swap interrupted between the two renames.
   *
+  * Readers see only committed batches — the consistent-prefix read: a
+  * store reads a sub-table through the typed [[read]] (or [[scan]] for
+  * the whole stored rows) and cuts trailing windows with [[window]].
   * Each store declares only its layout — the commit sub-table and the
-  * others — and keeps its own fold and read logic. All I/O goes through
+  * others — and keeps its own fold, takedown view and aggregation over
+  * those reads. All I/O goes through
   * [[StreamFs]]; the root swap alone wants atomic directory renames (on
   * an object store run compaction through a transactional table
   * format), the ingest and takedown commits do not. */
@@ -55,7 +61,60 @@ final class BatchStore(commitSub: String, otherSubs: String*) {
     * (post-compaction tombstones) excluded explicitly, never via
     * Spark's hidden-file filter. */
   def dataDirs(root: String, sub: String): Seq[String] =
-    committed(root).map(b => s"$root/$sub/$b").filter(StreamFs.hasDataFiles)
+    subDirs(root, sub).filter(StreamFs.hasDataFiles)
+
+  private def subDirs(root: String, sub: String): Seq[String] =
+    committed(root).map(b => s"$root/$sub/$b")
+
+  /** The committed rows of `sub` as exactly the columns of `schema`, a
+    * DDL string such as `"doc_id BIGINT, text STRING"` (stored columns
+    * are cast to it): every committed dir holding data files is read,
+    * and a store that has committed none reads as an empty frame of
+    * `schema` rather than throwing. */
+  def read(spark: SparkSession, root: String, sub: String,
+           schema: String): DataFrame =
+    read(spark, root, sub, schema, subDirs(root, sub))
+
+  /** [[read]] over a subset of the committed dirs of `sub` — a
+    * [[window]], or the members a takedown leaves. */
+  def read(spark: SparkSession, root: String, sub: String, schema: String,
+           dirs: Seq[String]): DataFrame = {
+    val st = StructType.fromDDL(schema)
+    load(spark, root, sub, dirs).fold(
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), st))(
+      _.select(st.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*))
+  }
+
+  /** The committed rows of `sub` with every stored column, None when no
+    * committed dir holds data — for the folds that rewrite whatever
+    * schema a gate stored, and the readers that must tell "nothing
+    * committed" apart. */
+  def scan(spark: SparkSession, root: String, sub: String): Option[DataFrame] =
+    load(spark, root, sub, subDirs(root, sub))
+
+  /** Marker-only dirs (post-compaction tombstones) and zero-row batches
+    * are excluded explicitly, never via Spark's hidden-file filter; the
+    * `batch=N` path column is dropped — a read is the union of batches. */
+  private def load(spark: SparkSession, root: String, sub: String,
+                   dirs: Seq[String]): Option[DataFrame] = {
+    val data = dirs.filter(StreamFs.hasDataFiles)
+    if (data.isEmpty) None
+    else Some(spark.read.option("basePath", s"$root/$sub")
+      .parquet(data: _*).drop("batch"))
+  }
+
+  /** The trailing window of the last `lastK` committed dirs of `sub`.
+    * Membership is decided over ALL committed ids first and the data
+    * files are filtered second, by [[read]]: a committed zero-row batch
+    * or a takedown-removed batch is an EMPTY window member, never a
+    * shift of the window further into history. With fewer committed
+    * ids than `lastK` the window is everything so far, and after a
+    * compaction it holds the fold's marker-only ids — a drift consumer
+    * compacts with a horizon of at least `lastK`. */
+  def window(root: String, sub: String, lastK: Int): Seq[String] = {
+    require(lastK > 0, s"window must be positive, got $lastK")
+    dirs(root, sub).takeRight(lastK)
+  }
 
   /** The ingest entry guard: refuse while a live compaction holds the
     * root, sweep crash debris, and report whether `batchId` already
@@ -123,6 +182,19 @@ final class BatchStore(commitSub: String, otherSubs: String*) {
   def markAll(stage: String, batches: Seq[String]): Unit =
     batches.foreach(b => mark(s"$stage/$commitSub/$b"))
 
+  /** Record in a compaction stage that `batches` were folded into one
+    * dir, on top of the live root's record: their rows lost the batch
+    * grain, so a batch-grain takedown must refuse them ([[folded]]). */
+  def recordFold(root: String, stage: String, batches: Seq[String]): Unit =
+    StreamFs.writeAtomicString(s"$stage/$FoldRecord",
+      (folded(root) ++ batches.map(batchId)).toSeq.sorted.mkString("\n"))
+
+  /** Batch ids a compaction folded ([[recordFold]]); empty for a store
+    * whose compactions predate the record. */
+  def folded(root: String): Set[Long] =
+    StreamFs.readString(s"$root/$FoldRecord").toSeq
+      .flatMap(_.split('\n')).filter(_.nonEmpty).map(_.toLong).toSet
+
   /** Commit takedown `td=<takedownId>` under the root's lock: recover,
     * no-op a replay, else `write` the takedown's tables into the stage
     * dir it is handed, rename in, mark. */
@@ -139,6 +211,8 @@ object BatchStore {
 
   /** Leading '_' → invisible to parquet reads, like _SUCCESS. */
   private val Marker = "_GRAFT_COMMIT"
+  /** The fold record at the store root, beside the sub-tables. */
+  private val FoldRecord = "_GRAFT_FOLDED"
   private val StageSuffix = ".ctmp"
   private val ColdSuffix = ".cold"
 

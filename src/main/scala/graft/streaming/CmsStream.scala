@@ -84,7 +84,9 @@ object CmsStream {
     * highest-id batch dir (the same linearity the read uses), leave
     * earlier committed ids as marker-only tombstones, and fold
     * takedowns physically: removed batches' cells are simply not in the
-    * sum, and the staged root carries no takedown dirs. */
+    * sum, and the staged root carries no takedown dirs. Every folded id
+    * is recorded, so a later takedown of one is refused
+    * ([[Takedown.applyBatchGrain]]). */
   def compact(spark: SparkSession, stateDir: String): Unit =
     store.compact(stateDir) { stage =>
       val all = store.committed(stateDir)
@@ -93,21 +95,15 @@ object CmsStream {
       readSketch(spark, stateDir) // the takedown-aware merged cells
         .write.parquet(s"$stage/cells/${all.last}")
       store.markAll(stage, all)
+      store.recordFold(stateDir, stage, all)
     }
 
   /** The merged sketch over every committed, non-removed batch: cells
     * ADD (and, for takedowns, un-add by exclusion). */
-  def readSketch(spark: SparkSession, stateDir: String): DataFrame = {
-    val removed = Takedown.removedBatches(stateDir)
-    val dirs = store.dataDirs(stateDir, "cells")
-      .filterNot(d => removed.contains(BatchStore.batchId(d)))
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").cast("int").as("j"),
-        col("id").as("bucket"), col("id").as("cell"))
-    else
-      spark.read.option("basePath", s"$stateDir/cells").parquet(dirs: _*)
-        .groupBy("j", "bucket").agg(sum("cell").as("cell"))
-  }
+  def readSketch(spark: SparkSession, stateDir: String): DataFrame =
+    store.read(spark, stateDir, "cells", "j INT, bucket BIGINT, cell BIGINT",
+        Takedown.batchGrainDirs(stateDir, store.dirs(stateDir, "cells")))
+      .groupBy("j", "bucket").agg(sum("cell").as("cell"))
 
   /** CMS point-frequency estimates for `probe` (a `token` column)
     * against the committed sketch: min over the d row cells, 0 for a

@@ -133,7 +133,7 @@ object CurationStream {
       readClaims(spark, stateDir).foreach(
         _.write.parquet(s"$stage/claims/$target"))
       // counts COLLAPSE under the sum, not just concatenate
-      sumCounts(spark, stateDir, store.dataDirs(stateDir, "counts"))
+      sumCounts(spark, stateDir, store.dirs(stateDir, "counts"))
         .write.parquet(s"$stage/counts/$target")
       store.markAll(stage, batches)
     }
@@ -142,9 +142,9 @@ object CurationStream {
     * committed takedowns applied: removed docs gone, re-elected claim
     * owners carrying their CORRECTED (stateless-outcome) verdicts. */
   def readVerdicts(spark: SparkSession, stateDir: String): DataFrame = {
-    val base = spark.read.option("basePath", s"$stateDir/verdicts")
-      .parquet(store.dataDirs(stateDir, "verdicts"): _*)
-      .drop("batch")
+    val base = store.read(spark, stateDir, "verdicts", "doc_id BIGINT, " +
+      "content_hash STRING, n_tokens BIGINT, pred_lang STRING, quality DOUBLE, " +
+      "is_canonical BOOLEAN, keep BOOLEAN, reject_reason STRING")
     (Takedown.readSub(spark, stateDir, "removed"),
         Takedown.readSub(spark, stateDir, "corrected")) match {
       case (None, _) => base
@@ -170,10 +170,8 @@ object CurationStream {
     * has a representative stay rejected). None ⇔ no committed claims. */
   private def readClaims(spark: SparkSession,
                          stateDir: String): Option[DataFrame] = {
-    val dirs = store.dataDirs(stateDir, "claims")
-    if (dirs.isEmpty) return None
-    val base = spark.read.parquet(dirs: _*)
-      .select("content_hash", "doc_id")
+    val base = store.scan(spark, stateDir, "claims")
+      .getOrElse(return None).select("content_hash", "doc_id")
     Some((Takedown.readSub(spark, stateDir, "removed"),
         Takedown.readSub(spark, stateDir, "corrected")) match {
       case (None, _) => base
@@ -234,14 +232,10 @@ object CurationStream {
 
   private def sumCounts(spark: SparkSession, stateDir: String,
                         dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty) // every window member was a zero-row batch
-      spark.range(0).select(col("id").cast("int").as("stage_idx"),
-        lit("").as("stage"), col("id").as("n_docs"),
-        col("id").as("n_tokens"))
-    else
-      spark.read.option("basePath", s"$stateDir/counts").parquet(dirs: _*)
-        .groupBy("stage_idx", "stage")
-        .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
+    store.read(spark, stateDir, "counts",
+        "stage_idx INT, stage STRING, n_docs BIGINT, n_tokens BIGINT", dirs)
+      .groupBy("stage_idx", "stage")
+      .agg(sum("n_docs").as("n_docs"), sum("n_tokens").as("n_tokens"))
 
   /** The LIVE funnel — the batch funnel arithmetic
     * ([[CurationQueries.funnelFromCounts]]) over the summed committed
@@ -251,23 +245,16 @@ object CurationStream {
     * tables per batch dir, never the corpus. */
   def funnelLive(spark: SparkSession, stateDir: String): DataFrame =
     CurationQueries.funnelFromCounts(sumCounts(spark, stateDir,
-      store.dataDirs(stateDir, "counts")))
+      store.dirs(stateDir, "counts")))
 
   /** Trailing-`lastK`-batch funnel — the same tail over the subset sum
-    * ([[EvalStream.readCountsWindow]]'s semantics: fewer dirs than the
-    * window degrades to lifetime; a full [[compact]] collapses batch
+    * of a [[BatchStore.window]] (a full [[compact]] collapses batch
     * boundaries, so a drift consumer compacts on a horizon or accepts
     * the documented degradation). */
   def funnelWindow(spark: SparkSession, stateDir: String,
-                   lastK: Int): DataFrame = {
-    require(lastK > 0, s"window must be positive, got $lastK")
-    // window membership over ALL committed batch ids first, data-file
-    // filter second — a committed zero-row batch is an empty window
-    // member, not a shift of the window into history (round-14 ADVICE)
+                   lastK: Int): DataFrame =
     CurationQueries.funnelFromCounts(sumCounts(spark, stateDir,
-      store.dirs(stateDir, "counts").takeRight(lastK)
-        .filter(StreamFs.hasDataFiles)))
-  }
+      store.window(stateDir, "counts", lastK)))
 
   /** FUNNEL DRIFT — "did a gate's share of the intake move on RECENT
     * data?": the question a curation operator actually watches (a

@@ -140,13 +140,6 @@ object DedupStream {
       if (committedBatches.isEmpty) return
       if (committedBatches.length <= 1 && !hasTakedowns) return
       val target = committedBatches.last
-      // read ONLY dirs with data files (a re-compaction sees the prior
-      // pass's marker-only tombstones; Spark's hidden-file filter is
-      // not the contract — round-13 ADVICE); the MARKER enumeration
-      // below still covers every committed id
-      def readSub(sub: String): DataFrame =
-        spark.read.option("basePath", s"$corpusDir/$sub")
-          .parquet(store.dataDirs(corpusDir, sub): _*).drop("batch")
       // takedowns FOLD physically here: removed rows are anti-joined
       // out of every sub-table, promoted rows (staged by Takedown.apply
       // in the docs/index schemas) merge into docs/index, and the staged
@@ -155,26 +148,24 @@ object DedupStream {
       // rewrite is still schema-agnostic: all gate knowledge lives in
       // the td dirs' pre-shaped tables. An ALL-SWEPT base (every
       // committed dir marker-only after a takedown removed everything +
-      // a prior compact) has no parquet to read — parquet(Nil) throws —
-      // so the fold degrades to just the surviving promoted rows
+      // a prior compact) has no parquet to read, so the fold degrades
+      // to just the surviving promoted rows
       // (round-15 ADVICE).
       def foldSub(sub: String, promotedName: String): Unit =
-        if (store.dataDirs(corpusDir, sub).nonEmpty)
-          Takedown.view(spark, corpusDir, readSub(sub), sub)
-            .write.parquet(s"$stage/$sub/$target")
-        else
-          Takedown.promotedSurvivors(spark, corpusDir, promotedName)
-            .foreach(_.write.parquet(s"$stage/$sub/$target"))
+        store.scan(spark, corpusDir, sub)
+          .map(Takedown.view(spark, corpusDir, _, sub))
+          .orElse(Takedown.promotedSurvivors(spark, corpusDir, promotedName))
+          .foreach(_.write.parquet(s"$stage/$sub/$target"))
       foldSub("docs", "promoted_docs")
       foldSub("index", "promoted_index")
-      if (store.dataDirs(corpusDir, "drops").nonEmpty)
-        Takedown.view(spark, corpusDir, readSub("drops"), "drops")
-          .write.parquet(s"$stage/drops/$target")
+      store.scan(spark, corpusDir, "drops").foreach(
+        Takedown.view(spark, corpusDir, _, "drops")
+          .write.parquet(s"$stage/drops/$target"))
       // counts rows are ADDITIVE and ingest-time history: concatenate
       // (readers sum at read time; takedowns deliberately don't touch
       // them — see MediaStream.mediaGateDrift)
-      if (store.dataDirs(corpusDir, "counts").nonEmpty)
-        readSub("counts").write.parquet(s"$stage/counts/$target")
+      store.scan(spark, corpusDir, "counts").foreach(
+        _.write.parquet(s"$stage/counts/$target"))
       // marker-only dirs keep every committed id recognizable on replay
       store.markAll(stage, committedBatches)
     }
@@ -190,9 +181,8 @@ object DedupStream {
   /** The deduplicated corpus so far (committed batches only, committed
     * takedowns applied — [[Takedown.view]]). */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame =
-    Takedown.view(spark, corpusDir,
-      readCommitted(spark, corpusDir, "docs",
-        Seq("doc_id", "content_hash", "text")), "docs")
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "docs",
+      "doc_id BIGINT, content_hash STRING, text STRING"), "docs")
 
   /** The (content_hash, doc_id) index the probes run against. Only hashes
     * whose corpus twin committed count as "seen": the read lists exactly
@@ -202,25 +192,6 @@ object DedupStream {
     * directory listing is the same O(#batches) the old filter paid, paid
     * once, off the executor path. */
   def readIndex(spark: SparkSession, corpusDir: String): DataFrame =
-    Takedown.view(spark, corpusDir,
-      readCommitted(spark, corpusDir, "index",
-        Seq("content_hash", "doc_id", "arrival_seq")), "index")
-
-  private def readCommitted(spark: SparkSession, corpusDir: String,
-                            sub: String, cols: Seq[String]): DataFrame = {
-    // marker-only dirs (post-compaction id tombstones) excluded
-    // explicitly, not via Spark's hidden-file filter (round-13 ADVICE)
-    val dirs = store.dataDirs(corpusDir, sub)
-    if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      val schema = StructType(cols.map {
-        case "text" => StructField("text", StringType)
-        case "content_hash" => StructField("content_hash", StringType)
-        case c => StructField(c, LongType)
-      })
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      spark.read.option("basePath", s"$corpusDir/$sub").parquet(dirs: _*)
-        .select(cols.map(col): _*)
-  }
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "index",
+      "content_hash STRING, doc_id BIGINT, arrival_seq BIGINT"), "index")
 }

@@ -168,19 +168,12 @@ object EmbedStream {
   def readCounts(spark: SparkSession, stateDir: String): DataFrame =
     sumWithTd(spark, stateDir, store.dirs(stateDir, "counts"))
 
-  /** Merged sums over the trailing `lastK` committed data dirs —
-    * integer linearity makes the window a subset sum
-    * ([[EvalStream.readCountsWindow]]'s semantics, including the
-    * fewer-dirs-than-window degradation to lifetime). */
+  /** Merged sums over the trailing `lastK` committed batches
+    * ([[BatchStore.window]]) — integer linearity makes the window a
+    * subset sum. */
   def readCountsWindow(spark: SparkSession, stateDir: String,
-                       lastK: Int): DataFrame = {
-    require(lastK > 0, s"window must be positive, got $lastK")
-    // takeRight over ALL committed ids first, THEN drop data-less dirs:
-    // a committed zero-row batch counts as an empty window member
-    // instead of shifting the window into history (round-14 ADVICE)
-    sumWithTd(spark, stateDir,
-      store.dirs(stateDir, "counts").takeRight(lastK))
-  }
+                       lastK: Int): DataFrame =
+    sumWithTd(spark, stateDir, store.window(stateDir, "counts", lastK))
 
   /** The effective component sums of a batch-dir member set: base cells
     * plus the committed takedown corrections FOR THOSE BATCH IDS (so a
@@ -190,25 +183,15 @@ object EmbedStream {
     * rebuild never emits them. */
   private def sumWithTd(spark: SparkSession, stateDir: String,
                         memberDirs: Seq[String]): DataFrame = {
-    val ids = memberDirs.map(BatchStore.batchId).toSet
-    val base = memberDirs.filter(StreamFs.hasDataFiles)
-    val tds = tdCellDirs(stateDir, ids)
-    val parts = Seq(
-      if (base.isEmpty) None
-      else Some(spark.read.option("basePath", s"$stateDir/counts")
-        .parquet(base: _*).select("label", "dim", "s_micro", "n")),
-      if (tds.isEmpty) None
-      else Some(spark.read.parquet(tds: _*)
-        .select("label", "dim", "s_micro", "n"))).flatten
-    if (parts.isEmpty)
-      spark.range(0).select(col("id").cast("int").as("label"),
-        col("id").cast("int").as("dim"), col("id").as("s_micro"),
-        col("id").as("n"))
-    else
-      parts.reduce(_.unionByName(_))
-        .groupBy("label", "dim")
-        .agg(sum("s_micro").as("s_micro"), sum("n").as("n"))
-        .filter(col("n") =!= 0)
+    val base = store.read(spark, stateDir, "counts",
+      "label INT, dim INT, s_micro BIGINT, n BIGINT", memberDirs)
+    val tds = tdCellDirs(stateDir, memberDirs.map(BatchStore.batchId).toSet)
+    (if (tds.isEmpty) base
+     else base.unionByName(spark.read.parquet(tds: _*)
+       .select("label", "dim", "s_micro", "n")))
+      .groupBy("label", "dim")
+      .agg(sum("s_micro").as("s_micro"), sum("n").as("n"))
+      .filter(col("n") =!= 0)
   }
 
   /** The drift report over two component-sum tables: per label, the

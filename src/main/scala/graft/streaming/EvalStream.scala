@@ -95,70 +95,49 @@ object EvalStream {
     store.compact(stateDir) { stage =>
       val batches = store.committed(stateDir)
       val merge = batches.dropRight(keepLast)
-      val hasTd = Takedown.removedBatches(stateDir).nonEmpty
+      val hasTd = BatchStore.takedownDirs(stateDir).nonEmpty
       if (merge.length <= 1 && !hasTd) return
       // takedowns FOLD here: removed batches' cells are simply not in
       // the merged sum (and not carried in the horizon), their ids stay
       // marker-only, and the staged root carries no takedown dirs
-      val merged = sumDirs(spark, stateDir,
-        dataDirsOf(stateDir, merge.map(b => s"$stateDir/counts/$b")))
+      val merged = sumDirs(spark, stateDir, countDirs(stateDir, merge))
       if (merge.nonEmpty) merged.write.parquet(s"$stage/counts/${merge.last}")
       // horizon dirs carry over with their data (small count tables —
       // one read+write each); merged ids become marker-only tombstones
       batches.takeRight(keepLast).foreach { b =>
-        val src = s"$stateDir/counts/$b"
-        if (dataDirsOf(stateDir, Seq(src)).nonEmpty)
-          spark.read.parquet(src).write.parquet(s"$stage/counts/$b")
+        countDirs(stateDir, Seq(b)).filter(StreamFs.hasDataFiles).foreach(
+          spark.read.parquet(_).write.parquet(s"$stage/counts/$b"))
       }
       store.markAll(stage, batches)
+      store.recordFold(stateDir, stage, merge)
     }
 
-  /** The readable subset of a committed dir list (the TIMELINE
-    * membership — takedown-removed ids stay members, so windows keep
-    * their positions): data files present AND not removed by a
-    * committed takedown (batch-grain subtraction). */
-  private def dataDirsOf(stateDir: String, dirs: Seq[String]): Seq[String] = {
-    val removed = Takedown.removedBatches(stateDir)
-    dirs.filterNot(d => removed.contains(BatchStore.batchId(d)))
-      .filter(StreamFs.hasDataFiles)
-  }
+  /** The count dirs of committed batches `names` a takedown leaves. */
+  private def countDirs(stateDir: String, names: Seq[String]): Seq[String] =
+    Takedown.batchGrainDirs(stateDir, names.map(b => s"$stateDir/counts/$b"))
 
-  /** The merged count table over every committed batch: counts ADD.
-    * Marker-only dirs (post-compaction id tombstones) are excluded
-    * explicitly — never via Spark's hidden-file filter (round-13
-    * ADVICE). */
+  /** The merged count table over every committed batch: counts ADD. */
   def readCounts(spark: SparkSession, stateDir: String): DataFrame =
     sumDirs(spark, stateDir,
-      dataDirsOf(stateDir, store.dirs(stateDir, "counts")))
+      Takedown.batchGrainDirs(stateDir, store.dirs(stateDir, "counts")))
 
-  /** Merged counts over the LAST `lastK` committed data dirs by batch
-    * id — count linearity makes a trailing window a SUBSET sum over
-    * committed dirs, nothing re-reads scored rows. Early in stream
-    * life (fewer than `lastK` dirs) the window is everything so far —
-    * standard trailing-window semantics; the same degradation applies
-    * after a full compaction, so a drift consumer compacts with
+  /** Merged counts over the LAST `lastK` committed batches
+    * ([[BatchStore.window]]) — count linearity makes a trailing window a
+    * SUBSET sum over committed dirs, nothing re-reads scored rows. Early
+    * in stream life the window is everything so far — standard
+    * trailing-window semantics; the same degradation applies after a
+    * full compaction, so a drift consumer compacts with
     * `keepLast ≥ lastK` (see [[compact]]). */
   def readCountsWindow(spark: SparkSession, stateDir: String,
-                       lastK: Int): DataFrame = {
-    require(lastK > 0, s"window must be positive, got $lastK")
-    // window membership over ALL committed batch ids FIRST, data-file
-    // filter second: a committed zero-row batch (its parquet write
-    // produced no part-file) is an EMPTY window member — filtering it
-    // before takeRight would silently shift the window one batch
-    // further into history (round-14 ADVICE)
-    sumDirs(spark, stateDir,
-      dataDirsOf(stateDir,
-        store.dirs(stateDir, "counts").takeRight(lastK)))
-  }
+                       lastK: Int): DataFrame =
+    sumDirs(spark, stateDir, Takedown.batchGrainDirs(stateDir,
+      store.window(stateDir, "counts", lastK)))
 
   private def sumDirs(spark: SparkSession, stateDir: String,
                       dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").as("score"), lit(true).as("label"),
-        lit(true).as("decision"), col("id").as("n"))
-    else
-      spark.read.option("basePath", s"$stateDir/counts").parquet(dirs: _*)
-        .groupBy("score", "label", "decision").agg(sum("n").as("n"))
+    store.read(spark, stateDir, "counts",
+        "score BIGINT, label BOOLEAN, decision BOOLEAN, n BIGINT", dirs)
+      .groupBy("score", "label", "decision").agg(sum("n").as("n"))
 
   /** The LIVE gate report over everything scored so far — identical
     * arithmetic to the batch [[EvalQueries.gateEval]] by construction. */

@@ -107,24 +107,9 @@ object GraphStream {
     * derived data of all and leaves the node table the moment the
     * tombstone commits. */
   def readNodes(spark: SparkSession, indexDir: String): DataFrame =
-    Takedown.removedView(spark, indexDir,
-      readBatches(spark, indexDir, "nodes").getOrElse(
-        spark.range(0).select(col("id").as("vec_id"), lit(0L).as("cell"),
-          lit(0L).as("hbkt"), array().cast("array<double>").as("e"),
-          lit(0.0).as("norm"))), Seq("vec_id"))
-
-  private def readBatches(spark: SparkSession, indexDir: String,
-      kind: String): Option[DataFrame] = {
-    // marker-only dirs (post-compaction id tombstones) are excluded
-    // EXPLICITLY — the read never leans on Spark's hidden-file filter
-    // to skip a dir holding only the marker (round-13 ADVICE)
-    val dirs = store.dataDirs(indexDir, kind)
-    if (dirs.isEmpty) None
-    // drop the synthetic batch= partition column — the live view is the
-    // UNION of batches; which batch contributed a row is irrelevant
-    else Some(spark.read.option("basePath", s"$indexDir/$kind")
-      .parquet(dirs: _*).drop("batch"))
-  }
+    Takedown.removedView(spark, indexDir, store.read(spark, indexDir, "nodes",
+      "vec_id BIGINT, cell BIGINT, hbkt BIGINT, e ARRAY<DOUBLE>, norm DOUBLE"),
+      Seq("vec_id"))
 
   /** One micro-batch: key the new vectors, generate candidate edges
     * against committed ∪ batch nodes sharing a cell or a hash bucket,
@@ -353,9 +338,8 @@ object GraphStream {
     * argument in the object scaladoc; committed takedowns applied
     * (edges touching a removed id at either endpoint vanish). */
   def readGraph(spark: SparkSession, indexDir: String): DataFrame = {
-    val edges = readBatches(spark, indexDir, "edges").getOrElse(
-      return spark.range(0).select(col("id").as("src"),
-        lit(1).as("rank"), col("id").as("dst"), lit(0.0).as("cosine")))
+    val edges = store.read(spark, indexDir, "edges",
+      "src BIGINT, dst BIGINT, cosine DOUBLE")
     val w = Window.partitionBy(col("src"))
       .orderBy(col("cosine").desc, col("dst"))
     Takedown.removedView(spark, indexDir, edges, Seq("src", "dst"))
@@ -373,10 +357,8 @@ object GraphStream {
       indexDir: String): DataFrame = {
     val g = readGraph(spark, indexDir).select("src", "dst")
       .unionByName(Takedown.removedView(spark, indexDir,
-        readBatches(spark, indexDir, "rings")
-          .map(_.select("src", "dst"))
-          .getOrElse(spark.range(0).select(col("id").as("src"),
-            col("id").as("dst"))), Seq("src", "dst")))
+        store.read(spark, indexDir, "rings", "src BIGINT, dst BIGINT"),
+        Seq("src", "dst")))
     val edges = g.union(g.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().localCheckpoint()
     SimilarityQueries.searchOverGraph(spark, dir, edges)

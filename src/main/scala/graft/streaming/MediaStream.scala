@@ -216,62 +216,36 @@ object MediaStream {
 
   /** The kept (near-dup-free) media corpus so far — committed batches
     * only, marker-only tombstones excluded explicitly. */
-  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "docs")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"),
-          lit(Array.empty[Byte]).as("payload"), lit("").as("modality"),
-          col("id").as("fp"))
-      else
-        spark.read.option("basePath", s"$corpusDir/docs").parquet(dirs: _*)
-          .select("doc_id", "payload", "modality", "fp")
-    Takedown.view(spark, corpusDir, base, "docs")
-  }
+  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "docs",
+      "doc_id BIGINT, payload BINARY, modality STRING, fp BIGINT"), "docs")
 
   /** The committed (modality, chunk, key, fp, doc_id) band index —
     * every processed document of every committed batch. */
-  def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "index")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(lit("").as("modality"), lit(0).as("chunk"),
-          col("id").as("key"), col("id").as("fp"), col("id").as("doc_id"),
-          col("id").as("arrival_seq"))
-      else
-        spark.read.option("basePath", s"$corpusDir/index").parquet(dirs: _*)
-          .select("modality", "chunk", "key", "fp", "doc_id", "arrival_seq")
-    Takedown.view(spark, corpusDir, base, "index")
-  }
+  def readIndex(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "index",
+      "modality STRING, chunk INT, key BIGINT, fp BIGINT, doc_id BIGINT, " +
+        "arrival_seq BIGINT"), "index")
 
   // ---- per-batch gate counts + drift ---------------------------------
 
   private def sumCounts(spark: SparkSession, corpusDir: String,
                         dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty)
-      spark.range(0).select(lit("").as("modality"),
-        col("id").as("n_processed"), col("id").as("n_dropped"))
-    else
-      spark.read.option("basePath", s"$corpusDir/counts").parquet(dirs: _*)
-        .groupBy("modality")
-        .agg(sum("n_processed").as("n_processed"),
-          sum("n_dropped").as("n_dropped"))
+    store.read(spark, corpusDir, "counts",
+        "modality STRING, n_processed BIGINT, n_dropped BIGINT", dirs)
+      .groupBy("modality")
+      .agg(sum("n_processed").as("n_processed"),
+        sum("n_dropped").as("n_dropped"))
 
   /** Lifetime per-modality gate tally — counts ADD, so this reads the
     * ≤2-row committed count tables, never the corpus or the payloads. */
   def readCounts(spark: SparkSession, corpusDir: String): DataFrame =
-    sumCounts(spark, corpusDir, store.dataDirs(corpusDir, "counts"))
+    sumCounts(spark, corpusDir, store.dirs(corpusDir, "counts"))
 
-  /** Trailing-`lastK` tally — window membership over ALL committed
-    * batch ids first, data-file filter second (a committed zero-row
-    * batch is an empty window member; the round-14 ADVICE rule). */
+  /** Trailing-`lastK` tally over a [[BatchStore.window]]. */
   def readCountsWindow(spark: SparkSession, corpusDir: String,
-                       lastK: Int): DataFrame = {
-    require(lastK > 0, s"window must be positive, got $lastK")
-    sumCounts(spark, corpusDir,
-      store.dirs(corpusDir, "counts").takeRight(lastK)
-        .filter(StreamFs.hasDataFiles))
-  }
+                       lastK: Int): DataFrame =
+    sumCounts(spark, corpusDir, store.window(corpusDir, "counts", lastK))
 
   /** MEDIA GATE DRIFT — "did the image/audio near-dup drop rate spike
     * this crawl?": per modality, lifetime vs trailing-`lastK`-batch

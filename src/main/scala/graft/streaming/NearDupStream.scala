@@ -115,31 +115,15 @@ object NearDupStream {
 
   /** The kept (near-dup-free) corpus so far — committed batches only,
     * committed takedowns applied. */
-  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "docs")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"),
-          lit("").as("text")).limit(0)
-      else
-        spark.read.option("basePath", s"$corpusDir/docs").parquet(dirs: _*)
-          .select("doc_id", "text")
-    Takedown.view(spark, corpusDir, base, "docs")
-  }
+  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "docs",
+      "doc_id BIGINT, text STRING"), "docs")
 
   /** The committed (band, key, sig, doc_id) index — every processed
     * document of every committed batch (read by path; no unbounded
     * In-list, see DedupStream.readIndex). */
-  def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "index")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"),
-          array().cast("array<bigint>").as("sig"),
-          lit(0).as("band"), lit("").as("key"), col("id").as("arrival_seq"))
-      else
-        spark.read.option("basePath", s"$corpusDir/index").parquet(dirs: _*)
-          .select("doc_id", "sig", "band", "key", "arrival_seq")
-    Takedown.view(spark, corpusDir, base, "index")
-  }
+  def readIndex(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "index",
+      "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, key STRING, " +
+        "arrival_seq BIGINT"), "index")
 }

@@ -47,11 +47,8 @@ object PackStream {
                       stateDir: String, batchId: Long): Unit = {
     if (store.replayed(stateDir, batchId, "PackStream.applyMicroBatch"))
       return
-    val offset = store.dataDirs(stateDir, "counts") match {
-      case Nil => 0L
-      case dirs => spark.read.parquet(dirs: _*)
-        .agg(coalesce(sum("n_tokens"), lit(0L))).collect()(0).getLong(0)
-    }
+    val offset = store.scan(spark, stateDir, "counts").fold(0L)(
+      _.agg(coalesce(sum("n_tokens"), lit(0L))).collect()(0).getLong(0))
     val placed = PrepQueries
       .packOfFrom(batch.select("doc_id", "text"), offset)
     // counts first (unmarked), placement last — its marker commits both
@@ -67,18 +64,9 @@ object PackStream {
 
   /** The committed placement so far — one row per ingested doc, the
     * [[PrepQueries.sequencePack]] schema. */
-  def readPlacement(spark: SparkSession, stateDir: String): DataFrame = {
-    val dirs = store.dataDirs(stateDir, "place")
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").as("doc_id"),
-        col("id").as("n_tokens"), col("id").as("start"),
-        col("id").as("first_bin"), col("id").as("last_bin"),
-        col("id").as("n_bins"))
-    else spark.read.option("basePath", s"$stateDir/place")
-      .parquet(dirs: _*).drop("batch")
-      .select("doc_id", "n_tokens", "start", "first_bin", "last_bin",
-        "n_bins")
-  }
+  def readPlacement(spark: SparkSession, stateDir: String): DataFrame =
+    store.read(spark, stateDir, "place", "doc_id BIGINT, n_tokens BIGINT, " +
+      "start BIGINT, first_bin BIGINT, last_bin BIGINT, n_bins BIGINT")
 
   /** COMPACTION — merge all committed placement rows into the highest
     * committed batch dir and the totals into one summed row; earlier
@@ -91,12 +79,10 @@ object PackStream {
       val target = batches.last
       readPlacement(spark, stateDir)
         .write.parquet(s"$stage/place/$target")
-      val countDirs = store.dataDirs(stateDir, "counts")
-      if (countDirs.nonEmpty)
-        spark.read.parquet(countDirs: _*)
-          .agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
+      store.scan(spark, stateDir, "counts").foreach(
+        _.agg(coalesce(sum("n_docs"), lit(0L)).as("n_docs"),
             coalesce(sum("n_tokens"), lit(0L)).as("n_tokens"))
-          .write.parquet(s"$stage/counts/$target")
+          .write.parquet(s"$stage/counts/$target"))
       store.markAll(stage, batches)
     }
 

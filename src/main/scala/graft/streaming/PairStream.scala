@@ -226,18 +226,10 @@ object PairStream {
   /** The committed image band index (every processed image) — committed
     * takedowns applied: a removed image's perceptual bands are derived
     * data and stop witnessing the moment the tombstone commits. */
-  private def readIndex(spark: SparkSession, stateDir: String): DataFrame = {
-    val dirs = store.dataDirs(stateDir, "index")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(lit(0).as("chunk"), col("id").as("key"),
-          col("id").as("dhash"), col("id").as("doc_id"),
-          col("id").as("arrival_seq"))
-      else
-        spark.read.option("basePath", s"$stateDir/index").parquet(dirs: _*)
-          .select("chunk", "key", "dhash", "doc_id", "arrival_seq")
-    Takedown.removedView(spark, stateDir, base, Seq("doc_id"))
-  }
+  private def readIndex(spark: SparkSession, stateDir: String): DataFrame =
+    Takedown.removedView(spark, stateDir, store.read(spark, stateDir, "index",
+      "chunk INT, key BIGINT, dhash BIGINT, doc_id BIGINT, arrival_seq BIGINT"),
+      Seq("doc_id"))
 
   /** The committed claims view — EVERY processed doc's (content_hash,
     * doc_id, n_tokens, pred_lang, quality, is_canonical, arrival_seq),
@@ -247,10 +239,7 @@ object PairStream {
     * claims yet. */
   private def readClaims(spark: SparkSession,
                          stateDir: String): Option[DataFrame] = {
-    val dirs = store.dataDirs(stateDir, "claims")
-    if (dirs.isEmpty) return None
-    val base = spark.read.option("basePath", s"$stateDir/claims")
-      .parquet(dirs: _*).drop("batch")
+    val base = store.scan(spark, stateDir, "claims").getOrElse(return None)
     Some((Takedown.readSub(spark, stateDir, "removed"),
         Takedown.readSub(spark, stateDir, "promoted_claims")) match {
       case (None, _) => base
@@ -273,9 +262,9 @@ object PairStream {
     * (claim re-election on the caption side + near-dup re-election on
     * the image side, one pass) replacing their originals. */
   def readVerdicts(spark: SparkSession, stateDir: String): DataFrame = {
-    val base = spark.read.option("basePath", s"$stateDir/verdicts")
-      .parquet(store.dataDirs(stateDir, "verdicts"): _*)
-      .drop("batch")
+    val base = store.read(spark, stateDir, "verdicts", "doc_id BIGINT, " +
+      "format STRING, width BIGINT, height BIGINT, pred_lang STRING, " +
+      "quality DOUBLE, keep BOOLEAN, reject_reason STRING")
     (Takedown.readSub(spark, stateDir, "removed"),
         Takedown.readSub(spark, stateDir, "corrected")) match {
       case (None, _) => base
@@ -425,13 +414,10 @@ object PairStream {
 
   private def sumCounts(spark: SparkSession, stateDir: String,
                         dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").cast("int").as("stage_idx"),
-        lit("").as("stage"), col("id").as("n_pairs"))
-    else
-      spark.read.option("basePath", s"$stateDir/counts").parquet(dirs: _*)
-        .groupBy("stage_idx", "stage")
-        .agg(sum("n_pairs").as("n_pairs"))
+    store.read(spark, stateDir, "counts",
+        "stage_idx INT, stage STRING, n_pairs BIGINT", dirs)
+      .groupBy("stage_idx", "stage")
+      .agg(sum("n_pairs").as("n_pairs"))
 
   /** The LIVE pair funnel — the batch funnel arithmetic over the summed
     * committed counts (count linearity ⇒ ≡ the batch
@@ -440,20 +426,18 @@ object PairStream {
     * never the corpus — no re-decode per refresh. */
   def pairFunnelLive(spark: SparkSession, stateDir: String): DataFrame =
     MediaQueries.pairFunnelFromCounts(sumCounts(spark, stateDir,
-      store.dataDirs(stateDir, "counts")))
+      store.dirs(stateDir, "counts")))
 
   /** PAIR FUNNEL DRIFT — per stage, lifetime vs trailing-`lastK` pair
-    * shares with the delta (the [[CurationStream.funnelDrift]] shape;
-    * window over ALL committed ids first, data-file filter second). */
+    * shares with the delta (the [[CurationStream.funnelDrift]] shape
+    * over a [[BatchStore.window]]). */
   def pairFunnelDrift(spark: SparkSession, stateDir: String,
                       lastK: Int): DataFrame = {
-    require(lastK > 0, s"window must be positive, got $lastK")
     val life = pairFunnelLive(spark, stateDir)
       .select(col("stage_idx"), col("stage"),
         col("n_pairs").as("n_life"), col("pair_share").as("share_life"))
     val win = MediaQueries.pairFunnelFromCounts(sumCounts(spark, stateDir,
-        store.dirs(stateDir, "counts").takeRight(lastK)
-          .filter(StreamFs.hasDataFiles)))
+        store.window(stateDir, "counts", lastK)))
       .select(col("stage_idx"), col("n_pairs").as("n_window"),
         col("pair_share").as("share_window"))
     life.join(win, Seq("stage_idx"), "left")

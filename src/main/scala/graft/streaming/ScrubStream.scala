@@ -103,13 +103,9 @@ object ScrubStream {
     try {
       // hashes already committed by earlier batches: index ⋉ batch keys
       // (broadcast the BATCH side — bounded; the index is never moved)
-      val seen =
-        if (StreamFs.listNames(s"$corpusDir/index").nonEmpty)
-          readIndex(spark, corpusDir)
-            .join(broadcast(spans.select("h").distinct()), Seq("h"),
-              "left_semi")
-            .distinct()
-        else spark.range(0).select(col("id").as("h"))
+      val seen = readIndex(spark, corpusDir)
+        .join(broadcast(spans.select("h").distinct()), Seq("h"), "left_semi")
+        .distinct()
       val marked = spans
         .join(broadcast(seen.withColumn("__seen", lit(1))), Seq("h"), "left")
         .withColumn("keep_span",
@@ -147,15 +143,8 @@ object ScrubStream {
     * replacing their originals, the LATEST correction per doc winning
     * (stacked takedowns touch a doc once per affected class). */
   def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "docs")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"),
-          col("id").as("n_spans"), col("id").as("n_dropped"),
-          lit("").as("text_clean"))
-      else
-        spark.read.option("basePath", s"$corpusDir/docs").parquet(dirs: _*)
-          .select("doc_id", "n_spans", "n_dropped", "text_clean")
+    val base = store.read(spark, corpusDir, "docs",
+      "doc_id BIGINT, n_spans BIGINT, n_dropped BIGINT, text_clean STRING")
     (Takedown.removedIds(spark, corpusDir), correctedLatest(spark, corpusDir)) match {
       case (None, _) => base
       case (Some(r), corr) =>
@@ -190,14 +179,8 @@ object ScrubStream {
     * a from-scratch ingest of the survivors would. */
   private[streaming] def readIndexFull(spark: SparkSession,
                                        corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "index")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("h"), col("id").as("doc_id"),
-          col("id").as("arrival_seq"))
-      else
-        spark.read.option("basePath", s"$corpusDir/index").parquet(dirs: _*)
-          .select("h", "doc_id", "arrival_seq")
+    val base = store.read(spark, corpusDir, "index",
+      "h BIGINT, doc_id BIGINT, arrival_seq BIGINT")
     Takedown.removedIds(spark, corpusDir) match {
       case None => base
       case Some(r) =>
@@ -225,10 +208,7 @@ object ScrubStream {
     * CURRENT owner is removed, and it owns that class). */
   private def readDropsView(spark: SparkSession,
                             corpusDir: String): Option[DataFrame] = {
-    val dirs = store.dataDirs(corpusDir, "drops")
-    if (dirs.isEmpty) return None
-    val base = spark.read.option("basePath", s"$corpusDir/drops")
-      .parquet(dirs: _*)
+    val base = store.scan(spark, corpusDir, "drops").getOrElse(return None)
       .select("doc_id", "span_idx", "span_text", "h", "keep_span",
         "arrival_seq")
     Some(Takedown.removedIds(spark, corpusDir) match {

@@ -161,13 +161,9 @@ object Takedown {
   /** The quarantined dropped rows, takedown-applied (full gate-schema
     * rows — what re-election promotes from). */
   private[streaming] def readDrops(spark: SparkSession,
-                                   corpusDir: String): Option[DataFrame] = {
-    val dirs = DedupStream.store.dataDirs(corpusDir, "drops")
-    if (dirs.isEmpty) None
-    else Some(view(spark,
-      corpusDir, spark.read.option("basePath", s"$corpusDir/drops")
-        .parquet(dirs: _*), "drops"))
-  }
+                                   corpusDir: String): Option[DataFrame] =
+    DedupStream.store.scan(spark, corpusDir, "drops")
+      .map(view(spark, corpusDir, _, "drops"))
 
   /** Expand a removal set to its full EXACT content class (every
     * processed doc — kept or quarantined — sharing a removed doc's
@@ -238,15 +234,34 @@ object Takedown {
 
   /** Commit a BATCH-GRAIN takedown (the linear monitors'
     * [[CmsStream.applyTakedown]] / [[EvalStream.applyTakedown]]): one
-    * `removed_batches` manifest, no table write. */
+    * `removed_batches` manifest, no table write. An id a compaction
+    * folded ([[BatchStore.folded]]) is refused before anything commits:
+    * its rows now sit in one dir with other batches', so excluding that
+    * dir would remove every batch folded into it, and excluding a
+    * marker-only id would remove nothing. A batch that is still
+    * separate — inside a compaction's horizon, or committed after it —
+    * is taken down as before. */
   private[streaming] def applyBatchGrain(store: BatchStore, stateDir: String,
       removedBatchIds: Seq[Long], takedownId: Long): Unit =
-    store.commitTakedown(stateDir, takedownId)(tmp =>
-      StreamFs.writeAtomicString(s"$tmp/removed_batches",
-        removedBatchIds.distinct.sorted.mkString("\n")))
+    store.commitTakedown(stateDir, takedownId) { tmp =>
+      val ids = removedBatchIds.distinct.sorted
+      val folded = ids.filter(store.folded(stateDir))
+      require(folded.isEmpty, s"batch ids ${folded.mkString(", ")} of " +
+        s"$stateDir were folded by a compaction; take down a separate batch")
+      StreamFs.writeAtomicString(s"$tmp/removed_batches", ids.mkString("\n"))
+    }
+
+  /** The members of committed `dirs` a batch-grain takedown leaves:
+    * removed ids excluded — the exclusion IS the subtraction, by
+    * linearity — while they stay timeline members of a window. */
+  private[streaming] def batchGrainDirs(stateDir: String,
+                                        dirs: Seq[String]): Seq[String] = {
+    val removed = removedBatches(stateDir)
+    dirs.filterNot(d => removed(BatchStore.batchId(d)))
+  }
 
   /** Batch ids removed by every committed batch-grain takedown. */
-  private[streaming] def removedBatches(stateDir: String): Set[Long] =
+  private def removedBatches(stateDir: String): Set[Long] =
     BatchStore.takedownDirs(stateDir)
       .flatMap(d => StreamFs.readString(s"$d/removed_batches").toSeq)
       .flatMap(_.split('\n')).filter(_.nonEmpty).map(_.toLong).toSet

@@ -109,63 +109,41 @@ object UrlStream {
 
   /** The admitted (canonical-unique) corpus so far — committed
     * takedowns applied. */
-  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "docs")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"), lit("").as("url"),
-          lit("").as("canonical_url"))
-      else
-        spark.read.option("basePath", s"$corpusDir/docs").parquet(dirs: _*)
-          .select("doc_id", "url", "canonical_url")
-    Takedown.view(spark, corpusDir, base, "docs")
-  }
+  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "docs",
+      "doc_id BIGINT, url STRING, canonical_url STRING"), "docs")
 
   /** The committed (curl_hash, canonical_url, doc_id) index — committed
     * takedowns applied (a removed canonical's claim passes to the
     * promoted representative's row). */
-  def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "index")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("curl_hash"),
-          lit("").as("canonical_url"), col("id").as("doc_id"),
-          col("id").as("arrival_seq"))
-      else
-        spark.read.option("basePath", s"$corpusDir/index").parquet(dirs: _*)
-          .select("curl_hash", "canonical_url", "doc_id", "arrival_seq")
-    Takedown.view(spark, corpusDir, base, "index")
-  }
+  def readIndex(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "index",
+      "curl_hash BIGINT, canonical_url STRING, doc_id BIGINT, " +
+        "arrival_seq BIGINT"), "index")
 
   // ---- per-batch gate counts + drift ---------------------------------
 
   private def sumCounts(spark: SparkSession, corpusDir: String,
                         dirs: Seq[String]): DataFrame =
-    if (dirs.isEmpty)
-      spark.range(0).select(col("id").as("n_processed"),
-        col("id").as("n_admitted"))
-    else
-      spark.read.option("basePath", s"$corpusDir/counts").parquet(dirs: _*)
-        .agg(sum("n_processed").as("n_processed"),
-          sum("n_admitted").as("n_admitted"))
+    store.read(spark, corpusDir, "counts",
+        "n_processed BIGINT, n_admitted BIGINT", dirs)
+      .agg(sum("n_processed").as("n_processed"),
+        sum("n_admitted").as("n_admitted"))
+      .filter(col("n_processed").isNotNull) // no rows when none committed
 
   /** URL GATE DRIFT — "did the URL-dup admission rate move on recent
     * crawls?" (a collapsing admit rate = a feed started replaying; a
     * jump = a new domain came online): ONE row, lifetime vs
     * trailing-`lastK`-batch admit rates with the delta, subset sums
     * over the committed 1-row count tables ([[EvalStream.gateEvalDrift]]
-    * shape; window over ALL committed ids first, data-file filter
-    * second — the round-14 ADVICE rule). Corpus-size-independent. */
+    * shape over a [[BatchStore.window]]). Corpus-size-independent. */
   def urlGateDrift(spark: SparkSession, corpusDir: String,
                    lastK: Int): DataFrame = {
-    require(lastK > 0, s"window must be positive, got $lastK")
-    val life = sumCounts(spark, corpusDir,
-      store.dataDirs(corpusDir, "counts"))
+    val life = sumCounts(spark, corpusDir, store.dirs(corpusDir, "counts"))
       .select(col("n_processed").as("n_life"),
         col("n_admitted").as("n_admitted_life"))
     val win = sumCounts(spark, corpusDir,
-      store.dirs(corpusDir, "counts").takeRight(lastK)
-        .filter(StreamFs.hasDataFiles))
+      store.window(corpusDir, "counts", lastK))
       .select(col("n_processed").as("n_window"),
         col("n_admitted").as("n_admitted_window"))
     life.crossJoin(win) // 1 row × 1 row

@@ -115,17 +115,9 @@ object WinnowStream {
   /** The kept corpus so far — committed batches only, committed
     * takedowns applied ([[Takedown.view]]: removed docs gone, re-counted
     * promoted docs unioned in). */
-  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "docs")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"),
-          lit("").as("text")).limit(0)
-      else
-        spark.read.option("basePath", s"$corpusDir/docs").parquet(dirs: _*)
-          .select("doc_id", "text")
-    Takedown.view(spark, corpusDir, base, "docs")
-  }
+  def readCorpus(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "docs",
+      "doc_id BIGINT, text STRING"), "docs")
 
   /** The committed (doc_id, h, cnt, arrival_seq) fingerprint index —
     * every processed document of every committed batch, committed
@@ -134,15 +126,7 @@ object WinnowStream {
     * the moment the tombstone commits. `cnt` is the selected-position
     * multiplicity of the pair (the takedown recount's exact n_fp/n_sh
     * weights). */
-  def readIndex(spark: SparkSession, corpusDir: String): DataFrame = {
-    val dirs = store.dataDirs(corpusDir, "index")
-    val base =
-      if (dirs.isEmpty)
-        spark.range(0).select(col("id").as("doc_id"), col("id").as("h"),
-          col("id").as("cnt"), col("id").as("arrival_seq")).limit(0)
-      else
-        spark.read.option("basePath", s"$corpusDir/index").parquet(dirs: _*)
-          .select("doc_id", "h", "cnt", "arrival_seq")
-    Takedown.view(spark, corpusDir, base, "index")
-  }
+  def readIndex(spark: SparkSession, corpusDir: String): DataFrame =
+    Takedown.view(spark, corpusDir, store.read(spark, corpusDir, "index",
+      "doc_id BIGINT, h BIGINT, cnt BIGINT, arrival_seq BIGINT"), "index")
 }

@@ -72,18 +72,26 @@ class AnalyticsSpec extends SparkSpec {
 
   test("fuzzy dedup equals brute-force edit-ratio pairs on this corpus") {
     val fuzzy = DedupQueries.queries("dedup_fuzzy")(spark, sf)
-      .select("doc_a", "doc_b")
+      .select("doc_a", "doc_b").collect().toSeq
     val d = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"), length(col("text")).cast("double").as("n"))
     val a = d.select(col("doc_id").as("doc_a"), col("text").as("ta"), col("n").as("na"))
     val b = d.select(col("doc_id").as("doc_b"), col("text").as("tb"), col("n").as("nb"))
-    val brute = a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
-      .filter(levenshtein(col("ta"), col("tb")) <=
-        lit(DedupQueries.fuzzyMaxRatio) * greatest(col("na"), col("nb")))
-      .select("doc_a", "doc_b")
-    assert(fuzzy.exceptAll(brute).isEmpty,
+    // the documents file is one partition: 8 slices of one side spread
+    // the pair checks over the cores. The id order and the length gap (a
+    // lower bound of the edit distance) rule a pair out before
+    // levenshtein runs.
+    val maxEd = lit(DedupQueries.fuzzyMaxRatio) * greatest(col("na"), col("nb"))
+    val brute = a.repartition(8).crossJoin(b)
+      .filter(col("doc_a") < col("doc_b") &&
+        abs(col("na") - col("nb")) <= maxEd &&
+        levenshtein(col("ta"), col("tb")) <= maxEd)
+      .select("doc_a", "doc_b").collect().toSeq
+    // both pair lists are computed once; `diff` is a multiset difference,
+    // as exceptAll is
+    assert(fuzzy.diff(brute).isEmpty,
       "every blocked pair must satisfy the brute threshold")
-    assert(brute.exceptAll(fuzzy).isEmpty,
+    assert(brute.diff(fuzzy).isEmpty,
       "prefix blocking must not lose a true pair on this corpus")
   }
 

@@ -4,7 +4,8 @@ import java.io.File
 import java.nio.file.{Files, Path, Paths}
 
 import graft.ops.MediaQueries
-import graft.streaming.{CmsStream, CompactionLock, EvalStream, PairStream}
+import graft.streaming.{CmsStream, CompactionLock, EvalStream, PairStream,
+  StreamFs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,6 +68,46 @@ class BatchStoreSpec extends SparkSpec {
     }
     EvalStream.applyTakedown(spark, eval, Seq(0L), 0L)
     assert(EvalStream.readCounts(spark, eval).isEmpty)
+  }
+
+  test("batch-grain takedowns (Cms, Eval) refuse ids a compaction folded") {
+    import spark.implicits._
+    // nothing commits on a refusal: no td dir, not even a stage
+    def refused(d: String)(takedown: => Unit): Unit = {
+      intercept[IllegalArgumentException](takedown)
+      assert(StreamFs.listNames(s"$d/takedown").isEmpty, "a refusal commits nothing")
+    }
+    def sketch(d: String) = CmsStream.readSketch(spark, d).collect().toSet
+    val cms = freshDir()
+    (0L to 1L).foreach(b => CmsStream.applyMicroBatch(spark,
+      docs.filter(col("doc_id") % 2 === b), cms, b))
+    CmsStream.compact(spark, cms) // folds batch 0 into batch 1's dir
+    Seq(0L, 1L).foreach(b =>
+      refused(cms)(CmsStream.applyTakedown(spark, cms, Seq(b), 0L)))
+    val folded = sketch(cms)
+    CmsStream.applyMicroBatch(spark, docs, cms, 2L)
+    assert(sketch(cms) != folded)
+    CmsStream.applyTakedown(spark, cms, Seq(2L), 0L) // still separate
+    assert(sketch(cms) === folded)
+
+    def counts(d: String) = EvalStream.readCounts(spark, d).collect().toSet
+    val eval = freshDir()
+    (0L to 3L).foreach(b => EvalStream.applyMicroBatch(spark,
+      Seq((b, b % 2 == 0, true), (b + 10, false, b < 2)).toDF("score",
+        "label", "decision"), eval, b))
+    val before3 = counts(eval)
+    EvalStream.compact(spark, eval, keepLast = 1) // folds 0-2 into 2
+    assert(counts(eval) === before3)
+    Seq(0L, 2L).foreach(b =>
+      refused(eval)(EvalStream.applyTakedown(spark, eval, Seq(b, 3L), 0L)))
+    assert(counts(eval) === before3)
+    EvalStream.applyTakedown(spark, eval, Seq(3L), 0L) // the horizon batch
+    val without3 = counts(eval)
+    assert(without3 != before3 && without3.nonEmpty)
+    EvalStream.applyMicroBatch(spark,
+      Seq((4L, true, true)).toDF("score", "label", "decision"), eval, 4L)
+    EvalStream.applyTakedown(spark, eval, Seq(4L), 1L) // after the fold
+    assert(counts(eval) === without3)
   }
 
   test("only BatchStore names the commit marker and the swap dirs") {

@@ -116,10 +116,11 @@ class BatchStoreFaultSpec extends SparkSpec with BeforeAndAfterAll {
     "CmsStream" -> Store(_ => (),
       (d, b) => CmsStream.applyMicroBatch(spark, half(docs, "doc_id", b),
         d, b),
-      Some(d => CmsStream.applyTakedown(spark, d, Seq(1L), 0L)),
+      Some(d => CmsStream.applyTakedown(spark, d, Seq(2L), 0L)),
       d => CmsStream.compact(spark, d),
       CmsStream.recover,
-      d => render(CmsStream.readSketch(spark, d))),
+      d => render(CmsStream.readSketch(spark, d)),
+      d => CmsStream.applyMicroBatch(spark, docs, d, 2L)),
     "CurationStream" -> Store(_ => (),
       (d, b) => CurationStream.applyMicroBatch(spark,
         half(docs, "doc_id", b), d, b),
@@ -140,10 +141,11 @@ class BatchStoreFaultSpec extends SparkSpec with BeforeAndAfterAll {
     "EvalStream" -> Store(_ => (),
       (d, b) => EvalStream.applyMicroBatch(spark, half(scored, "score", b),
         d, b),
-      Some(d => EvalStream.applyTakedown(spark, d, Seq(1L), 0L)),
+      Some(d => EvalStream.applyTakedown(spark, d, Seq(2L), 0L)),
       d => EvalStream.compact(spark, d),
       EvalStream.recover,
-      d => render(EvalStream.readCounts(spark, d))),
+      d => render(EvalStream.readCounts(spark, d)),
+      d => EvalStream.applyMicroBatch(spark, scored, d, 2L)),
     "GraphStream" -> Store(
       d => GraphStream.init(spark, vecs.select("vec_id", "embedding"), d),
       (d, b) => GraphStream.applyMicroBatch(spark,
@@ -250,9 +252,11 @@ class BatchStoreFaultSpec extends SparkSpec with BeforeAndAfterAll {
       replayAlways = false)
     // mid takedown commit: the td dir renamed in, its marker pending
     st.takedown.foreach { td =>
-      val (_, r3) = crashAll(name, st, s2, r2, Seq("renamed"), td,
+      st.beforeTakedown(s2)
+      val pre = st.state(s2)
+      val (_, r3) = crashAll(name, st, s2, pre, Seq("renamed"), td,
         replayAlways = true)
-      assert(r3 != r2, s"$name: the takedown fixture must change the state")
+      assert(r3 != pre, s"$name: the takedown fixture must change the state")
     }
   }
 
@@ -288,14 +292,17 @@ object BatchStoreFaultSpec {
       extends RuntimeException(s"crash:$label")
 
   /** A store under test: `ingest(root, b)` commits fixture batch `b`,
-    * `takedown` removes part of the compacted state (the batch-grain
-    * monitors: batch 1, which holds the folded cells), `state` renders
-    * the public readers as sorted rows. */
+    * `takedown` removes part of the compacted state, `state` renders
+    * the public readers as sorted rows. The batch-grain monitors refuse
+    * to take down a batch a compaction folded, so their
+    * `beforeTakedown` commits batch 2 after the compaction and the
+    * takedown removes that batch. */
   private final case class Store(
       init: String => Unit,
       ingest: (String, Long) => Unit,
       takedown: Option[String => Unit],
       compact: String => Unit,
       recover: String => Unit,
-      state: String => Seq[String])
+      state: String => Seq[String],
+      beforeTakedown: String => Unit = _ => ())
 }

@@ -46,11 +46,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftSession {
   /** Session builder preconfigured for the graft engine: extensions
-    * registered, UTC, AQE, sane local shuffle parallelism. */
+    * registered, UTC, AQE, sane local shuffle parallelism, and `file:`
+    * paths on the process-free [[NioLocalFileSystem]] / [[NioLocalFs]]
+    * (Spark's file writes, the streaming checkpoint and every
+    * `StreamFs` protocol step).
+    *
+    * The `spark.hadoop.*` defaults apply only when this builder creates
+    * the SparkContext: against a running one (spark-shell prints "Using
+    * an existing Spark session; only runtime SQL configurations will take
+    * effect") the context's Hadoop configuration stays as it was. A
+    * filesystem the user names still wins, as a later `.config` on the
+    * returned builder or as a `spark.hadoop.fs.*` system property
+    * (`--conf`). */
   def builder(master: String = "local[*]", shufflePartitions: Int = 32)
       : org.apache.spark.sql.SparkSession.Builder =
     org.apache.spark.sql.SparkSession.builder()
       .master(master)
+      .config(LocalFsImpl, sys.props.getOrElse(LocalFsImpl,
+        classOf[NioLocalFileSystem].getName))
+      .config(LocalAbstractFsImpl, sys.props.getOrElse(LocalAbstractFsImpl,
+        classOf[NioLocalFs].getName))
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
@@ -64,6 +79,10 @@ object GraftSession {
       // (tfidf's MERGE hint) are untouched by AQE replanning.
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         "128m")
+
+  private val LocalFsImpl = "spark.hadoop.fs.file.impl"
+  private val LocalAbstractFsImpl = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+
   // NOTE: spark.sql.legacy.parquet.nanosAsLong is no longer preset here —
   // Tables.events turns it on at runtime only when it actually meets an
   // INT64 TIMESTAMP(NANOS) file (r7 verdict: no unconditional mutation).

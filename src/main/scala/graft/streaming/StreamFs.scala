@@ -12,11 +12,17 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `org.apache.hadoop.fs.FileContext` instead of `java.io.File` so the
   * rename/marker contract holds on every Hadoop-reachable store (local,
   * HDFS, object stores via their connectors), not just the local POSIX
-  * filesystem. Local behavior is unchanged: `file:` (and scheme-less)
-  * paths resolve to Hadoop's checksumming LocalFs, whose renames are the
-  * same atomic POSIX renames the protocols relied on before —
-  * FsContractSpec drives the full protocols through that wrapper to prove
-  * no `java.io.File` assumption remains.
+  * filesystem. Under a `GraftSession.builder` session, `file:` (and
+  * scheme-less) paths resolve to [[graft.NioLocalFs]]: Hadoop's
+  * checksumming LocalFs over a raw filesystem that sets modes and checks
+  * for symlinks through `java.nio` instead of spawning `chmod` and
+  * `readlink` (stock Hadoop does that without its native library: two
+  * `readlink` per rename, one `chmod` per created file or dir, each spawn
+  * costing milliseconds of every protocol step). Its renames are the same
+  * atomic POSIX renames the protocols relied on before, and each write
+  * still leaves its `.crc` sibling — FsContractSpec drives the full
+  * protocols through that wrapper to prove no `java.io.File` assumption
+  * remains.
   *
   * Durability notes: `hsync` is attempted on every protocol-metadata
   * write and ignored where a wrapper doesn't support it (checksummed

@@ -8,9 +8,11 @@ import scala.jdk.CollectionConverters._
 import graft.scd2.Scd2
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Structured Streaming wiring for the CDC → SCD2 pipeline (SURVEY.md §7.1
   * item 4) — the Spark-first restatement of the reference's NiFi flow:
@@ -60,7 +62,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Scale notes: history is only ever touched by a broadcast join against
   * the batch's key set, so micro-batch cost is O(batch) + one history
   * scan (plain) or O(history·k/B + batch) (bucketed), never a history
-  * shuffle.
+  * shuffle. The bucketed apply collects each batch to the driver, so its
+  * driver memory is O(batch): streams bound their batches through the
+  * source's admission control (e.g. `graft-cdc`'s `maxEventsPerTrigger`,
+  * default 1000). It rewrites each touched bucket as exactly one file, so
+  * a bucket holds one file however many batches touched it, and a batch's
+  * scan does not grow with the stream's age.
   */
 object Scd2Stream {
 
@@ -227,15 +234,19 @@ object Scd2Stream {
     * out of B, a micro-batch costs O(history·k/B + batch); untouched
     * buckets are never opened.
     *
-    * Spark jobs per call, whatever the batch size: one to cache the batch,
-    * two for the per-key first-ts aggregate (map stage + the one collect
-    * that yields both the touched buckets and the merge's broadcast side),
-    * one for the merge's window shuffle, one to broadcast the collected
-    * aggregate (skipped when no touched bucket holds history yet), one for
-    * the write. The touched buckets are read with the memoized table-wide
-    * schema, so no schema-inference job runs; only the first apply after a
-    * commit this process did not make (or after a schema-changing one)
-    * re-infers it, at O(buckets) listing cost.
+    * Spark jobs per call, whatever the batch size: one collect of the
+    * batch's rows to the driver, one to broadcast the per-key first ts
+    * (skipped when no touched bucket holds history yet), one for the
+    * write. The per-key first ts and the touched buckets come from the
+    * collected rows in process, and the merge reads the batch back as a
+    * one-partition local relation, which already satisfies the SCD2
+    * window's clustering: the merge plans no shuffle. The touched buckets
+    * are read with the memoized table-wide schema, so no schema-inference
+    * job runs; only the first apply after a commit this process did not
+    * make (or after a schema-changing one) re-infers it, at O(buckets)
+    * listing cost. Every batch, a one-off wide one (a seed drain) too,
+    * takes this path: the batch is held on the driver, and each touched
+    * bucket is rewritten as one file (class doc, scale notes).
     *
     * Crash-safe via the manifest + per-bucket rename protocol (class doc);
     * commit is the commit-log append AFTER all buckets are swapped, and
@@ -250,92 +261,118 @@ object Scd2Stream {
     recoverBucketed(historyDir)
     val commitLog = historyDir + ".commits"
     if (batchId.exists(committedIds(commitLog).contains)) return
-    // persist: the batch feeds two actions (first-ts collect, merge) —
-    // compute the input once, so observe() metrics upstream count it once.
-    // coalesce: a narrow batch routed through a union of source partitions
-    // would otherwise run one task per branch × partition in every stage
-    val cached = batch.coalesce(spark.sparkContext.defaultParallelism).persist()
-    try {
-      val bucket = bucketCol(keys.map(col), nBuckets)
-      val firstTs = Scd2.firstEventTs(cached, keys, tsCol)
-      val collected = firstTs.withColumn("__bucket", bucket).collect()
-      if (collected.isEmpty) return
-      val touched = collected.map(_.getInt(firstTs.schema.size)).distinct.sorted
-      val firstNew = Some(spark.createDataFrame(
-        collected.map(r => Row.fromSeq(r.toSeq.init)).toSeq.asJava, firstTs.schema))
-      // touched bucket → whether it has a pre-image to read and move aside
-      val pre = touched.toSeq.map(b =>
-        b -> StreamFs.exists(s"$historyDir/__bucket=$b"))
-      val dirs = pre.collect { case (b, true) => s"$historyDir/__bucket=$b" }
-      // the table-wide schema before this batch: inferred if the touched
-      // buckets must be read and it is not memoized for the current commit
-      // state; otherwise only a memo that still holds
-      val prior =
-        if (dirs.nonEmpty) Some(tableSchema(spark, historyDir))
-        else memoizedSchema(historyDir, commitStamp(spark, historyDir))
-      val merged =
-        if (dirs.nonEmpty) {
-          // read with the table-wide schema: after an ADD COLUMN only the
-          // buckets a batch touches get rewritten with the wider schema, so
-          // bucket dirs legitimately carry mixed schemas until every bucket
-          // has been touched once — a column a bucket's files lack reads
-          // as null
-          val histRaw = spark.read.schema(prior.get)
-            .option("basePath", historyDir)
-            .parquet(dirs.toIndexedSeq: _*)
-          val (hist, b) =
-            alignForEvolution(histRaw.drop("__bucket"), cached, tsCol, opCol)
-          opCol match {
-            case Some(op) => Scd2.applyBatchWithDeletes(hist,
-              b, keys, tsCol, seqCol, op, onLate, firstNew)
-            case None => Scd2.applyBatch(hist, b, keys,
-              tsCol, seqCol, onLate, firstNew)
-          }
-        } else opCol match {
-          case Some(op) =>
-            Scd2.fromEventsWithDeletes(cached, keys, tsCol, seqCol, op).drop(op)
-          case None => Scd2.fromEvents(cached, keys, tsCol, seqCol)
+    // the one job over the batch: one action, so observe() metrics
+    // upstream fire once, and one task, however many source partitions
+    // and union branches feed it
+    val rows = batch.coalesce(1).collect()
+    if (rows.isEmpty) return
+    val local = spark.createDataFrame(rows.toSeq.asJava, batch.schema)
+    val bucket = bucketCol(keys.map(col), nBuckets)
+    val (touched, firstTs) = perKey(spark, local, keys, tsCol, bucket)
+    val events = local.coalesce(1)
+    // touched bucket → whether it has a pre-image to read and move aside
+    val pre = touched.map(b =>
+      b -> StreamFs.exists(s"$historyDir/__bucket=$b"))
+    val dirs = pre.collect { case (b, true) => s"$historyDir/__bucket=$b" }
+    // the table-wide schema before this batch: inferred if the touched
+    // buckets must be read and it is not memoized for the current commit
+    // state; otherwise only a memo that still holds
+    val prior =
+      if (dirs.nonEmpty) Some(tableSchema(spark, historyDir))
+      else memoizedSchema(historyDir, commitStamp(spark, historyDir))
+    val merged =
+      if (dirs.nonEmpty) {
+        // read with the table-wide schema: after an ADD COLUMN only the
+        // buckets a batch touches get rewritten with the wider schema, so
+        // bucket dirs legitimately carry mixed schemas until every bucket
+        // has been touched once — a column a bucket's files lack reads
+        // as null
+        val histRaw = spark.read.schema(prior.get)
+          .option("basePath", historyDir)
+          .parquet(dirs: _*)
+        val (hist, b) =
+          alignForEvolution(histRaw.drop("__bucket"), events, tsCol, opCol)
+        opCol match {
+          case Some(op) => Scd2.applyBatchWithDeletes(hist,
+            b, keys, tsCol, seqCol, op, onLate, Some(firstTs))
+          case None => Scd2.applyBatch(hist, b, keys,
+            tsCol, seqCol, onLate, Some(firstTs))
         }
-      val tmp = historyDir + ".tmp"
-      StreamFs.delete(tmp)
-      merged.withColumn("__bucket", bucket)
-        .write.partitionBy("__bucket")
-        .mode("overwrite").parquet(tmp)
-      failpoint("after-tmp-write")
-      tableSchemas.remove(historyDir)
-      writeManifest(historyDir + ".inflight", batchId, pre)
-      failpoint("after-manifest")
-      val oldRoot = historyDir + ".oldbuckets"
-      StreamFs.mkdirs(oldRoot)
-      // phase A: move every pre-imaged touched bucket aside
-      pre.foreach { case (b, hadPre) =>
-        if (hadPre) {
-          StreamFs.renameOrThrow(s"$historyDir/__bucket=$b",
-            s"$oldRoot/__bucket=$b")
-          failpoint(s"phase-a:$b")
-        }
+      } else opCol match {
+        case Some(op) =>
+          Scd2.fromEventsWithDeletes(events, keys, tsCol, seqCol, op).drop(op)
+        case None => Scd2.fromEvents(events, keys, tsCol, seqCol)
       }
-      // phase B: move the new bucket contents in
-      StreamFs.mkdirs(historyDir)
-      pre.foreach { case (b, _) =>
-        val src = s"$tmp/__bucket=$b"
-        if (StreamFs.exists(src))
-          StreamFs.renameOrThrow(src, s"$historyDir/__bucket=$b")
-        failpoint(s"phase-b:$b")
+    val tmp = historyDir + ".tmp"
+    StreamFs.delete(tmp)
+    // one write task: each touched bucket becomes exactly one file
+    merged.withColumn("__bucket", bucket).coalesce(1)
+      .write.partitionBy("__bucket")
+      .mode("overwrite").parquet(tmp)
+    failpoint("after-tmp-write")
+    tableSchemas.remove(historyDir)
+    writeManifest(historyDir + ".inflight", batchId, pre)
+    failpoint("after-manifest")
+    val oldRoot = historyDir + ".oldbuckets"
+    StreamFs.mkdirs(oldRoot)
+    // phase A: move every pre-imaged touched bucket aside
+    pre.foreach { case (b, hadPre) =>
+      if (hadPre) {
+        StreamFs.renameOrThrow(s"$historyDir/__bucket=$b",
+          s"$oldRoot/__bucket=$b")
+        failpoint(s"phase-a:$b")
       }
-      batchId.foreach(appendCommit(commitLog, _))
-      failpoint("after-commit")
-      StreamFs.delete(oldRoot)
-      StreamFs.delete(tmp)
-      StreamFs.delete(historyDir + ".inflight")
-      // a commit that wrote no column the table lacked leaves its schema
-      // as it was: carry the memo over to the new commit state
-      prior.filter(p => merged.schema.forall(f =>
-          p.find(_.name == f.name)
-            .exists(_.dataType.catalogString == f.dataType.catalogString)))
-        .foreach(p => commitStamp(spark, historyDir)
-          .foreach(st => tableSchemas.put(historyDir, SchemaMemo(st, p))))
-    } finally { cached.unpersist(); () }
+    }
+    // phase B: move the new bucket contents in
+    StreamFs.mkdirs(historyDir)
+    pre.foreach { case (b, _) =>
+      val src = s"$tmp/__bucket=$b"
+      if (StreamFs.exists(src))
+        StreamFs.renameOrThrow(src, s"$historyDir/__bucket=$b")
+      failpoint(s"phase-b:$b")
+    }
+    batchId.foreach(appendCommit(commitLog, _))
+    failpoint("after-commit")
+    StreamFs.delete(oldRoot)
+    StreamFs.delete(tmp)
+    StreamFs.delete(historyDir + ".inflight")
+    // a commit that wrote no column the table lacked leaves its schema
+    // as it was: carry the memo over to the new commit state
+    prior.filter(p => merged.schema.forall(f =>
+        p.find(_.name == f.name)
+          .exists(_.dataType.catalogString == f.dataType.catalogString)))
+      .foreach(p => commitStamp(spark, historyDir)
+        .foreach(st => tableSchemas.put(historyDir, SchemaMemo(st, p))))
+  }
+
+  /** The touched buckets (sorted) and the per-key first ts of a batch held
+    * on the driver as a local relation, with no Spark job. `bucket` is
+    * evaluated as a Project over the relation, which the optimizer folds
+    * in place. The first ts is [[Scd2.firstEventTs]]'s relation (keys +
+    * `__first_ts`, the min of the key's non-null ts, null when it has
+    * none), grouped and compared here by the ts type's Catalyst ordering,
+    * and returned as a local relation for the merge to broadcast. */
+  private def perKey(spark: SparkSession, local: DataFrame, keys: Seq[String],
+                     tsCol: String, bucket: Column): (Seq[Int], DataFrame) = {
+    val n = keys.size
+    val keyed = local.select((keys.map(col) :+ col(tsCol) :+ bucket): _*)
+    val rows = keyed.collect()
+    val touched = rows.map(_.getInt(n + 1)).distinct.sorted.toSeq
+    val tsType = keyed.schema(n).dataType
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(tsType)
+    val byTs = PhysicalDataType.ordering(tsType).on[Any](toCatalyst)
+    // binary keys group by content, as Spark's groupBy does
+    def groupKey(r: Row) = r.toSeq.take(n).map {
+      case b: Array[Byte] => b.toSeq
+      case v => v
+    }
+    val first = rows.groupBy(groupKey).valuesIterator.map { rs =>
+      val ts = rs.iterator.map(_.get(n)).filter(_ != null)
+      Row.fromSeq(rs.head.toSeq.take(n) :+ (if (ts.hasNext) ts.min(byTs) else null))
+    }.toSeq
+    val schema = StructType(keyed.schema.take(n) :+
+      StructField("__first_ts", tsType, nullable = true))
+    (touched, spark.createDataFrame(first.asJava, schema))
   }
 
   /** Complete or roll back an interrupted [[applyMicroBatchBucketed]]
@@ -388,6 +425,10 @@ object Scd2Stream {
     * ADD COLUMN brought in after the bucket's last rewrite reads as null,
     * and a bucket never written yields no rows.
     *
+    * Each key is matched as `array_contains(array(value), key)`, the
+    * value cast to the key column's type, so a lookup of a key never seen
+    * before compiles no codegen class; a null value matches no row.
+    *
     * One Spark job per call (the scan) while the table-wide schema is
     * memoized for the current commit state; the first lookup after a
     * commit this process did not make (or after a schema-changing one)
@@ -398,14 +439,18 @@ object Scd2Stream {
     require(keys.size == values.size,
       s"lookupByKey: ${keys.size} key columns but ${values.size} values")
     val schema = tableSchema(spark, historyDir)
-    val b = bucketOf(spark, values, keys.map(schema(_).dataType), nBuckets)
+    val keyTypes = keys.map(schema(_).dataType)
+    val b = bucketOf(spark, values, keyTypes, nBuckets)
     val dir = s"$historyDir/__bucket=$b"
     if (!StreamFs.exists(dir))
       return spark.createDataFrame(java.util.List.of[Row](), schema)
-    keys.zip(values).foldLeft(
+    // an array literal reaches generated code by reference, where a
+    // primitive literal is inlined: the predicate compiles to the same
+    // code for every key value, so a new key compiles no class
+    keys.zip(values).zip(keyTypes).foldLeft(
       spark.read.schema(schema).option("basePath", historyDir).parquet(dir)
         .filter(col("__bucket") === b)) {
-      case (df, (k, v)) => df.filter(col(k) === v)
+      case (df, ((k, v), t)) => df.filter(array_contains(array(lit(v).cast(t)), col(k)))
     }.drop("__bucket")
   }
 

@@ -10,6 +10,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.scd2.Scd2
 import graft.streaming.Scd2Stream
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
@@ -124,7 +125,7 @@ class BucketedStreamSpec extends SparkSpec {
     assert(ex.getMessage.contains("1 key columns but 2 values"))
   }
 
-  test("Spark jobs: a point lookup runs one, a narrow micro-batch at most six") {
+  test("Spark jobs: a point lookup runs one, a narrow micro-batch at most three") {
     val dir = Files.createTempDirectory("graft-bkt-jobs").toString + "/hist"
     val keys = (1L to 400L).toSeq
     Scd2Stream.applyMicroBatchBucketed(spark, events(keys, 1000L), dir,
@@ -139,7 +140,7 @@ class BucketedStreamSpec extends SparkSpec {
     val narrow = events(Seq(3L, 7L, 11L, 19L, 23L, 29L), 5000L)
     val (_, applyJobs) = jobsOf(Scd2Stream.applyMicroBatchBucketed(spark, narrow,
       dir, Seq("k"), "ts", "seq", batchId = Some(1L)))
-    assert(applyJobs <= 6, s"narrow micro-batch ran $applyJobs jobs")
+    assert(applyJobs <= 3, s"narrow micro-batch ran $applyJobs jobs")
     val (after, afterJobs) = jobsOf(
       Scd2Stream.lookupByKey(spark, dir, Seq("k"), Seq(7L)).collect())
     assert(afterJobs === 1, s"lookup after a commit ran $afterJobs jobs")
@@ -192,5 +193,42 @@ class BucketedStreamSpec extends SparkSpec {
     assert(got.collect().map(_.getAs[String]("segment")).toSeq === Seq(null))
     val widened = Scd2Stream.lookupByKey(spark, dir, Seq("k"), Seq(2), nBuckets = 8)
     assert(widened.collect().map(_.getAs[String]("segment")).toSeq === Seq("s-2"))
+  }
+
+  test("a lookup of a key never seen before compiles no codegen class") {
+    val dir = Files.createTempDirectory("graft-bkt-codegen").toString + "/hist"
+    Scd2Stream.applyMicroBatchBucketed(spark, events((1L to 400L).toSeq, 1000L),
+      dir, Seq("k"), "ts", "seq", nBuckets = 16, batchId = Some(0L))
+    def lookup(v: Any) =
+      Scd2Stream.lookupByKey(spark, dir, Seq("k"), Seq(v), nBuckets = 16).collect()
+    // warm-up: the schema memo and the first compile of the lookup's plan
+    lookup(1L)
+    lookup(2L)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val found = (100L until 110L).map(k => lookup(k).map(_.getAs[Long]("k")).toSeq)
+    assert(compiles.getCount - before === 0L, "classes compiled for 10 new keys")
+    assert(found === (100L until 110L).map(Seq(_)))
+    // a key with no row and a null key find nothing, as an equality would
+    assert(lookup(9999L).isEmpty && lookup(null).isEmpty)
+  }
+
+  test("each touched bucket is rewritten as one file, however often it is touched") {
+    val dir = Files.createTempDirectory("graft-bkt-files").toString + "/hist"
+    Scd2Stream.applyMicroBatchBucketed(spark, events((1L to 200L).toSeq, 1000L),
+      dir, Seq("k"), "ts", "seq", nBuckets = 8, batchId = Some(0L))
+    val b = Scd2Stream.bucketOf(spark, Seq(7L), Seq(LongType), 8)
+    def parquetFiles(): Seq[String] =
+      new java.io.File(s"$dir/__bucket=$b").list().filter(_.endsWith(".parquet")).toSeq
+    assert(parquetFiles().size === 1, "after the seed batch")
+    for (n <- 1 to 4) {
+      Scd2Stream.applyMicroBatchBucketed(spark,
+        events(Seq(7L, 300L + n), 5000L + 1000L * n),
+        dir, Seq("k"), "ts", "seq", nBuckets = 8, batchId = Some(n.toLong))
+      assert(parquetFiles().size === 1, s"after narrow batch $n: ${parquetFiles()}")
+    }
+    val current = Scd2Stream.lookupByKey(spark, dir, Seq("k"), Seq(7L), nBuckets = 8)
+      .filter(col(Scd2.IsCurrent) === "Y").collect()
+    assert(current.map(_.getAs[String]("value")).toSeq === Seq("v9000-7"))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import graft.ops.Scd2Queries
 import graft.scd2.Scd2
 import graft.streaming.Scd2Stream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -243,7 +244,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming path honors LatePolicy: Error poisons, Drop excludes the late row") {
-    val tmp0 = Files.createTempDirectory("graft-late").toString
     import spark.implicits._
     val b1 = Seq((1L, 1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
                  (1L, 2L, java.sql.Timestamp.valueOf("2024-01-01 12:00:00")))
@@ -251,27 +251,38 @@ class StreamingSpec extends SparkSpec {
     val b2 = Seq((1L, 3L, java.sql.Timestamp.valueOf("2024-01-01 11:00:00")), // LATE
                  (1L, 4L, java.sql.Timestamp.valueOf("2024-01-01 13:00:00")))
       .toDF("user_id", "event_id", "ts")
-    // default Error: the micro-batch fails loudly
-    Scd2Stream.applyMicroBatch(spark, b1, s"$tmp0/hist",
-      Seq("user_id"), "ts", "event_id", batchId = Some(0L))
-    val ex = intercept[Exception] {
-      Scd2Stream.applyMicroBatch(spark, b2, s"$tmp0/hist",
-        Seq("user_id"), "ts", "event_id", batchId = Some(1L))
+    type Apply = (DataFrame, String, Long, Scd2.LatePolicy) => Unit
+    // each layout's apply, and its history read back as a plain table
+    val paths: Seq[(String, Apply, String => DataFrame)] = Seq(
+      ("flat", (b, dir, id, late) => Scd2Stream.applyMicroBatch(spark, b, dir,
+        Seq("user_id"), "ts", "event_id", batchId = Some(id), onLate = late),
+        dir => spark.read.parquet(dir)),
+      ("bucketed", (b, dir, id, late) => Scd2Stream.applyMicroBatchBucketed(spark,
+        b, dir, Seq("user_id"), "ts", "event_id", nBuckets = 4, batchId = Some(id),
+        onLate = late),
+        dir => Scd2Stream.readBucketed(spark, dir)))
+    def same(got: DataFrame, want: DataFrame, clue: String): Unit = {
+      assert(got.count() === want.count(), clue)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, clue)
     }
-    assert(ex.getMessage != null || ex.getCause != null) // raise_error surfaced
-    // Drop: the late row is excluded, the batch commits
-    val tmp1 = Files.createTempDirectory("graft-late-drop").toString
-    Scd2Stream.applyMicroBatch(spark, b1, s"$tmp1/hist",
-      Seq("user_id"), "ts", "event_id", batchId = Some(0L))
-    Scd2Stream.applyMicroBatch(spark, b2, s"$tmp1/hist",
-      Seq("user_id"), "ts", "event_id", batchId = Some(1L),
-      onLate = Scd2.LatePolicy.Drop)
-    val got = spark.read.parquet(s"$tmp1/hist")
-    val expect = Scd2.fromEvents(
-      b1.unionByName(b2.filter(col("event_id") =!= 3L)),
-      Seq("user_id"), "ts", "event_id")
-    assert(got.count() === expect.count())
-    assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty)
+    for ((name, apply, read) <- paths) {
+      // default Error: the micro-batch fails loudly and commits nothing
+      val tmp0 = Files.createTempDirectory("graft-late").toString
+      apply(b1, s"$tmp0/hist", 0L, Scd2.LatePolicy.Error)
+      val ex = intercept[Exception] {
+        apply(b2, s"$tmp0/hist", 1L, Scd2.LatePolicy.Error)
+      }
+      assert(ex.getMessage != null || ex.getCause != null, name) // raise_error surfaced
+      same(read(s"$tmp0/hist"), Scd2.fromEvents(b1, Seq("user_id"), "ts", "event_id"),
+        s"$name: Error committed the poisoned batch")
+      // Drop: the late row is excluded, the batch commits
+      val tmp1 = Files.createTempDirectory("graft-late-drop").toString
+      apply(b1, s"$tmp1/hist", 0L, Scd2.LatePolicy.Drop)
+      apply(b2, s"$tmp1/hist", 1L, Scd2.LatePolicy.Drop)
+      same(read(s"$tmp1/hist"), Scd2.fromEvents(
+        b1.unionByName(b2.filter(col("event_id") =!= 3L)),
+        Seq("user_id"), "ts", "event_id"), s"$name: Drop")
+    }
   }
 
   test("bucketed point lookup prunes to a single bucket partition") {

@@ -31,25 +31,36 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *
   * == Crash safety / exactly-once ==
   *
-  * The local-FS sink is made crash-safe with a rename-aside two-phase swap
-  * plus a batch-id commit protocol; [[recover]] / [[recoverBucketed]]
-  * (invoked automatically on every apply) complete or roll back an
-  * interrupted swap, so a crash at ANY point leaves the history either
-  * fully pre-batch (and the batch replays) or fully post-batch (and the
-  * replay is a no-op):
+  * Each history keeps one commit record: the last committed batch id, in a
+  * hidden `_graft_batch` marker at the history root. Both layouts share one
+  * exactly-once rule, the one Spark's own file sink applies: a batch whose
+  * id is at or below the recorded id is already committed, and applying it
+  * again is a no-op. So batch ids must grow monotonically, as
+  * `foreachBatch` ids do. [[recover]] (called on every apply) finishes or
+  * undoes an interrupted apply, so a crash at ANY point leaves the history
+  * either fully pre-batch (and the batch replays) or fully post-batch (and
+  * the replay is a no-op):
   *
-  *  - plain layout ([[applyMicroBatch]]): the batch id is written INSIDE
-  *    the new directory (hidden `_graft_batch` file) before the swap, so
-  *    the atomic `rename(tmp → hist)` IS the commit point — the separate
-  *    commit-log append is only an index of older ids and is healed from
-  *    the marker on replay. The old directory is renamed aside (never
-  *    deleted before the new one is in place) and dropped last.
-  *  - bucketed layout ([[applyMicroBatchBucketed]]): a manifest
-  *    (`<dir>.inflight`) records the touched buckets and whether each had a
-  *    pre-image, pre-imaged buckets are renamed aside, new bucket dirs are
-  *    renamed in, and the commit-log append happens only after every bucket
-  *    is in place; recovery rolls an uncommitted batch back
-  *    bucket-by-bucket from the manifest.
+  *  - plain layout ([[applyMicroBatch]]): the new history is written to
+  *    `<dir>.tmp` with the marker inside, the old directory is renamed
+  *    aside to `<dir>.old` (never deleted before the new one is in place)
+  *    and the atomic `rename(tmp → dir)` is the commit point; the old
+  *    directory is dropped last. Recovery rolls a missing `<dir>` back from
+  *    `<dir>.old`.
+  *  - bucketed layout ([[applyMicroBatchBucketed]]): the touched buckets
+  *    and the marker are staged in `<dir>.tmp`, and the atomic
+  *    `rename(<dir>.tmp → <dir>.pending)` is the commit point. The commit
+  *    then rolls forward: each staged `__bucket=b` replaces the live one,
+  *    the marker is written at the root and the stage is dropped. Recovery
+  *    deletes an uncommitted `<dir>.tmp` and finishes a `<dir>.pending`;
+  *    finishing again is harmless, as a bucket already moved is no longer
+  *    in the stage.
+  *
+  * A history written by an earlier version with a `<dir>.commits` log is
+  * upgraded on its first apply or [[recover]]: the log's highest committed
+  * id is folded into the marker and the log is deleted. The earlier
+  * bucketed protocol's `<dir>.inflight` and `<dir>.oldbuckets` mark an
+  * interrupted commit that version must finish; they fail recovery.
   *
   * On a real deployment the sink is a transactional table format (MERGE)
   * and this protocol is the table format's problem; the merge itself
@@ -147,25 +158,17 @@ object Scd2Stream {
   /** One micro-batch: read current history, merge, crash-safe swap.
     *
     * Exactly-once on replay: with a `batchId` (foreachBatch supplies one),
-    * an already-committed id is a no-op; the commit point is the atomic
-    * rename of the marker-carrying new directory (see class doc). */
+    * an id at or below the history's last committed id is a no-op; the
+    * commit point is the atomic rename of the marker-carrying new directory
+    * (see class doc). */
   def applyMicroBatch(spark: SparkSession, batch: DataFrame, historyDir: String,
                       keys: Seq[String], tsCol: String, seqCol: String,
                       batchId: Option[Long] = None,
                       failpoint: String => Unit = noFail,
                       opCol: Option[String] = None,
                       onLate: Scd2.LatePolicy = Scd2.LatePolicy.Error): Unit = {
-    recover(historyDir)
-    val commitLog = historyDir + ".commits"
-    val alreadyDone = batchId.exists { id =>
-      val inLog = committedIds(commitLog).contains(id)
-      val inMarker = markerId(historyDir).contains(id)
-      // heal the commit-log index from the authoritative in-dir marker
-      // (covers a crash after the commit-point rename, before the append)
-      if (inMarker && !inLog) appendCommit(commitLog, id)
-      inLog || inMarker
-    }
-    if (alreadyDone) return
+    val last = lastCommitted(historyDir)
+    if (batchId.exists(id => last.exists(id <= _))) return
     // persist: the batch feeds two actions (emptiness probe + merge);
     // without it the micro-batch input recomputes per action — and any
     // observe() metrics upstream would double-count
@@ -191,9 +194,8 @@ object Scd2Stream {
           Scd2.fromEvents(cached, keys, tsCol, seqCol)
       }
       val tmp = historyDir + ".tmp"
-      StreamFs.delete(tmp)
       merged.write.mode("overwrite").parquet(tmp)
-      batchId.foreach(writeMarker(tmp, _))
+      batchId.orElse(last).foreach(writeMarker(tmp, _))
       failpoint("after-tmp-write")
       val old = historyDir + ".old"
       if (StreamFs.exists(historyDir)) {
@@ -201,30 +203,39 @@ object Scd2Stream {
         failpoint("after-rename-aside")
       }
       StreamFs.renameOrThrow(tmp, historyDir) // ← atomic commit point (marker now live)
-      failpoint("after-rename-in")
-      batchId.foreach(appendCommit(commitLog, _))
       failpoint("after-commit")
       StreamFs.delete(old)
     } finally { cached.unpersist(); () }
   }
 
-  /** Complete or roll back an interrupted [[applyMicroBatch]] swap. Safe to
-    * call any time; called automatically on every apply. */
+  /** Finish or undo an interrupted apply of either layout (class doc), and
+    * upgrade a history an earlier version left with a commit log. Safe to
+    * call any time; called automatically on every apply.
+    *
+    * @throws IllegalStateException when the earlier bucketed protocol's
+    *         `.inflight` manifest or `.oldbuckets` dir is present: that
+    *         version must finish its own interrupted commit first */
   def recover(historyDir: String): Unit = {
+    Seq(".inflight", ".oldbuckets").map(historyDir + _).find(StreamFs.exists)
+      .foreach(p => throw new IllegalStateException(s"$p is left by an " +
+        "interrupted bucketed commit of an earlier graft version; recover " +
+        "the history with that version before applying with this one"))
     val old = historyDir + ".old"
     if (StreamFs.exists(old)) {
-      if (StreamFs.exists(historyDir)) {
-        // new data is live → the commit-point rename happened; the batch is
-        // committed (its marker is inside the live dir), only cleanup remained
-        StreamFs.delete(old)
-      } else {
-        // crash between rename-aside and rename-in → roll back
-        StreamFs.renameOrThrow(old, historyDir)
-      }
+      // a live dir means the commit-point rename happened; else roll back
+      if (StreamFs.exists(historyDir)) StreamFs.delete(old)
+      else StreamFs.renameOrThrow(old, historyDir)
     }
-    // a tmp dir without a completed swap is uncommitted data; the batch
-    // will replay (its id is neither in the log nor in the live marker)
+    if (StreamFs.exists(historyDir + ".pending")) rollForward(historyDir, noFail)
+    // a stage that never reached its commit point: the batch replays
     StreamFs.delete(historyDir + ".tmp")
+    foldCommitLog(historyDir)
+  }
+
+  /** [[recover]], then the history's last committed batch id. */
+  private def lastCommitted(historyDir: String): Option[Long] = {
+    recover(historyDir)
+    markerId(historyDir)
   }
 
   /** One micro-batch against a BUCKETED history: the table is laid out as
@@ -248,9 +259,10 @@ object Scd2Stream {
     * takes this path: the batch is held on the driver, and each touched
     * bucket is rewritten as one file (class doc, scale notes).
     *
-    * Crash-safe via the manifest + per-bucket rename protocol (class doc);
-    * commit is the commit-log append AFTER all buckets are swapped, and
-    * [[recoverBucketed]] rolls an uncommitted batch back completely. */
+    * Exactly-once on replay as [[applyMicroBatch]]: an id at or below the
+    * history's last committed id is a no-op. Crash-safe by staging the
+    * touched buckets and rolling them forward once the stage is committed
+    * (class doc). */
   def applyMicroBatchBucketed(spark: SparkSession, batch: DataFrame,
                               historyDir: String, keys: Seq[String],
                               tsCol: String, seqCol: String, nBuckets: Int = 64,
@@ -258,9 +270,8 @@ object Scd2Stream {
                               failpoint: String => Unit = noFail,
                               onLate: Scd2.LatePolicy = Scd2.LatePolicy.Error,
                               opCol: Option[String] = None): Unit = {
-    recoverBucketed(historyDir)
-    val commitLog = historyDir + ".commits"
-    if (batchId.exists(committedIds(commitLog).contains)) return
+    val last = lastCommitted(historyDir)
+    if (batchId.exists(id => last.exists(id <= _))) return
     // the one job over the batch: one action, so observe() metrics
     // upstream fire once, and one task, however many source partitions
     // and union branches feed it
@@ -270,10 +281,7 @@ object Scd2Stream {
     val bucket = bucketCol(keys.map(col), nBuckets)
     val (touched, firstTs) = perKey(spark, local, keys, tsCol, bucket)
     val events = local.coalesce(1)
-    // touched bucket → whether it has a pre-image to read and move aside
-    val pre = touched.map(b =>
-      b -> StreamFs.exists(s"$historyDir/__bucket=$b"))
-    val dirs = pre.collect { case (b, true) => s"$historyDir/__bucket=$b" }
+    val dirs = touched.map(b => s"$historyDir/__bucket=$b").filter(StreamFs.exists)
     // the table-wide schema before this batch: inferred if the touched
     // buckets must be read and it is not memoized for the current commit
     // state; otherwise only a memo that still holds
@@ -304,38 +312,16 @@ object Scd2Stream {
         case None => Scd2.fromEvents(events, keys, tsCol, seqCol)
       }
     val tmp = historyDir + ".tmp"
-    StreamFs.delete(tmp)
     // one write task: each touched bucket becomes exactly one file
     merged.withColumn("__bucket", bucket).coalesce(1)
       .write.partitionBy("__bucket")
       .mode("overwrite").parquet(tmp)
+    batchId.orElse(last).foreach(writeMarker(tmp, _))
     failpoint("after-tmp-write")
     tableSchemas.remove(historyDir)
-    writeManifest(historyDir + ".inflight", batchId, pre)
-    failpoint("after-manifest")
-    val oldRoot = historyDir + ".oldbuckets"
-    StreamFs.mkdirs(oldRoot)
-    // phase A: move every pre-imaged touched bucket aside
-    pre.foreach { case (b, hadPre) =>
-      if (hadPre) {
-        StreamFs.renameOrThrow(s"$historyDir/__bucket=$b",
-          s"$oldRoot/__bucket=$b")
-        failpoint(s"phase-a:$b")
-      }
-    }
-    // phase B: move the new bucket contents in
-    StreamFs.mkdirs(historyDir)
-    pre.foreach { case (b, _) =>
-      val src = s"$tmp/__bucket=$b"
-      if (StreamFs.exists(src))
-        StreamFs.renameOrThrow(src, s"$historyDir/__bucket=$b")
-      failpoint(s"phase-b:$b")
-    }
-    batchId.foreach(appendCommit(commitLog, _))
+    StreamFs.renameOrThrow(tmp, historyDir + ".pending") // ← atomic commit point
     failpoint("after-commit")
-    StreamFs.delete(oldRoot)
-    StreamFs.delete(tmp)
-    StreamFs.delete(historyDir + ".inflight")
+    rollForward(historyDir, failpoint)
     // a commit that wrote no column the table lacked leaves its schema
     // as it was: carry the memo over to the new commit state
     prior.filter(p => merged.schema.forall(f =>
@@ -375,37 +361,23 @@ object Scd2Stream {
     (touched, spark.createDataFrame(first.asJava, schema))
   }
 
-  /** Complete or roll back an interrupted [[applyMicroBatchBucketed]]
-    * swap. Safe to call any time; called automatically on every apply. */
-  def recoverBucketed(historyDir: String): Unit = {
-    val manifest = historyDir + ".inflight"
-    val oldRoot = historyDir + ".oldbuckets"
-    if (StreamFs.exists(manifest)) {
-      val (batchId, pre) = readManifest(manifest)
-      val committed =
-        batchId.exists(committedIds(historyDir + ".commits").contains)
-      if (!committed) {
-        // roll the interrupted batch back bucket-by-bucket
-        pre.foreach { case (b, hadPre) =>
-          val live = s"$historyDir/__bucket=$b"
-          val saved = s"$oldRoot/__bucket=$b"
-          if (hadPre) {
-            if (StreamFs.exists(saved)) {
-              // phase A moved the original aside; anything live is phase-B
-              // data from the dead batch
-              StreamFs.delete(live)
-              StreamFs.renameOrThrow(saved, live)
-            } // else phase A never reached it: live IS the original
-          } else {
-            // fresh bucket: anything live is phase-B data from the dead batch
-            StreamFs.delete(live)
-          }
-        }
-      } // committed → every bucket is in place, only cleanup remained
-      StreamFs.delete(manifest)
+  /** Finish a committed bucketed stage (`<dir>.pending`): each staged
+    * bucket replaces the live one, then the stage's batch id becomes the
+    * root marker and the stage is dropped. Each step can be repeated after
+    * a crash: a bucket already moved is no longer in the stage, and the
+    * marker write is an overwrite. */
+  private def rollForward(historyDir: String, failpoint: String => Unit): Unit = {
+    val pending = historyDir + ".pending"
+    StreamFs.mkdirs(historyDir)
+    StreamFs.listNames(pending).filter(_.startsWith("__bucket=")).foreach { b =>
+      StreamFs.delete(s"$historyDir/$b")
+      failpoint(s"after-clear:$b")
+      StreamFs.renameOrThrow(s"$pending/$b", s"$historyDir/$b")
+      failpoint(s"after-replace:$b")
     }
-    StreamFs.delete(oldRoot)
-    StreamFs.delete(historyDir + ".tmp")
+    markerId(pending).foreach(writeMarker(historyDir, _))
+    failpoint("after-marker")
+    StreamFs.delete(pending)
   }
 
   /** Read a bucketed history back as a plain SCD2 table. `mergeSchema`:
@@ -482,17 +454,16 @@ object Scd2Stream {
   // A single-bucket read cannot see the columns other buckets carry, and
   // inferring the table-wide schema costs a listing of every bucket plus a
   // mergeSchema job. So it is memoized per table, keyed to the table's
-  // commit state: the modification time of the history root (every commit
-  // renames bucket dirs out of and into it) and the length + modification
-  // time of the commit log (which grows with every batch-id commit). A
-  // commit by another process, a crash mid-protocol or a recovery moves
-  // that state, and the next reader re-infers; this needs modification
-  // times finer than the gap between two commits (local filesystems and
-  // HDFS keep milliseconds). This process's own commits — the protocol has
-  // a single writer — invalidate the memo before touching the table and
-  // carry it over when they wrote no new column.
+  // commit state: the modification times of the history root (every commit
+  // replaces bucket dirs in it) and of its marker (rewritten by every
+  // batch-id commit). A commit by another process, a crash mid-protocol or
+  // a recovery moves that state, and the next reader re-infers; this needs
+  // modification times finer than the gap between two commits (local
+  // filesystems and HDFS keep milliseconds). This process's own commits —
+  // the protocol has a single writer — invalidate the memo before touching
+  // the table and carry it over when they wrote no new column.
 
-  private type CommitStamp = (Long, Long, Long)
+  private type CommitStamp = (Long, Long)
   private final case class SchemaMemo(stamp: CommitStamp, schema: StructType)
   private val tableSchemas = new ConcurrentHashMap[String, SchemaMemo]()
 
@@ -502,11 +473,8 @@ object Scd2Stream {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def status(p: Path) =
       try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
-    status(root).map { r =>
-      val log = status(new Path(historyDir + ".commits"))
-      (r.getModificationTime, log.fold(-1L)(_.getLen),
-        log.fold(-1L)(_.getModificationTime))
-    }
+    status(root).map(r => (r.getModificationTime,
+      status(new Path(root, MarkerName)).fold(-1L)(_.getModificationTime)))
   }
 
   private def memoizedSchema(historyDir: String,
@@ -527,27 +495,47 @@ object Scd2Stream {
     }
   }
 
-  // ---- commit/marker/manifest plumbing -----------------------------------
+  // ---- commit record plumbing -------------------------------------------
   //
-  // The protocol's own metadata must be as crash-safe as the data path,
-  // and all of it goes through [[StreamFs]] (hadoop FileContext) so the
-  // contract holds on any Hadoop-reachable store:
-  //  - the commit-log FORMAT is newline-prefixed, ';'-terminated records
-  //    ("\n<id>;"), and the parse is strict: an unterminated fragment (a
-  //    torn write by an earlier engine version or an external writer) is
-  //    ignored and can never merge with a later record or fabricate a
-  //    committed id. The log is APPENDED by read + rewrite-through-atomic-
-  //    rename rather than a POSIX append (ChecksumFileSystem and object
-  //    stores don't support append): a crash mid-commit leaves the OLD
-  //    complete log, the batch replays, and the protocol makes the replay
-  //    a no-op/rollback.
-  //  - marker and manifest files are written to a sibling tmp and RENAMED
-  //    into place, so they are either absent or complete — recovery never
-  //    sees a half-written manifest (a torn manifest with wrong pre-image
-  //    flags would roll back the wrong buckets).
+  // The commit record goes through [[StreamFs]] (hadoop FileContext), so
+  // the contract holds on any Hadoop-reachable store. The marker is written
+  // to a sibling tmp and RENAMED into place, so it is either the previous
+  // record or the new one, never torn.
 
   private val MarkerName = "_graft_batch" // leading '_' → invisible to parquet reads
 
+  private def writeMarker(dir: String, id: Long): Unit =
+    StreamFs.writeAtomicString(s"$dir/$MarkerName", s"$id\n")
+
+  private def markerId(dir: String): Option[Long] =
+    StreamFs.readString(s"$dir/$MarkerName")
+      .map(_.linesIterator.toSeq).flatMap(_.headOption)
+      .map(_.trim).filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
+
+  /** Upgrade from the `<dir>.commits` log of earlier versions: the marker
+    * takes the log's highest committed id when that is above its own, then
+    * the log is deleted. A crash in between folds the same log again. */
+  private def foldCommitLog(historyDir: String): Unit = {
+    val log = historyDir + ".commits"
+    StreamFs.readString(log).foreach { content =>
+      val pureLegacy = !content.contains(';')
+      // split with -1: a trailing "\n" yields an empty last element, so the
+      // last element is exactly the unterminated tail (if any)
+      val parts = content.split("\n", -1)
+      val logged = parts.iterator.zipWithIndex.flatMap { case (l, i) =>
+        parseCommitRecord(l, terminated = i < parts.length - 1,
+          allowLegacy = pureLegacy)
+      }.maxOption
+      val marked = markerId(historyDir)
+      logged.filter(id => marked.forall(_ < id)).foreach(writeMarker(historyDir, _))
+      StreamFs.delete(log)
+    }
+  }
+
+  /** One record of the earlier versions' commit log. Its FORMAT is
+    * newline-prefixed, ';'-terminated records ("\n<id>;"), and the parse is
+    * strict: an unterminated fragment (a torn write) is ignored and can
+    * never merge with a later record or fabricate a committed id. */
   private def parseCommitRecord(line: String, terminated: Boolean,
                                 allowLegacy: Boolean): Option[Long] = {
     val l = line.trim
@@ -563,61 +551,8 @@ object Scd2Stream {
       // which point bare "12" would fabricate a commit for a batch id that
       // never committed. A pure legacy file by definition predates the
       // new format, so every record in it was a completed old-format
-      // append; [[committedIds]] rewrites it to strict format on first
-      // read, so a mixed-format log can never arise.
+      // append.
       Some(l.toLong)
     else None // unterminated fragment from a torn append — not committed
-  }
-
-  private def committedIds(commitLog: String): Set[Long] =
-    StreamFs.readString(commitLog).fold(Set.empty[Long]) { content =>
-      val pureLegacy = !content.contains(';')
-      // split with -1: a trailing "\n" yields an empty last element, so the
-      // last element is exactly the unterminated tail (if any)
-      val parts = content.split("\n", -1)
-      val ids = parts.iterator.zipWithIndex.flatMap { case (l, i) =>
-        parseCommitRecord(l, terminated = i < parts.length - 1,
-          allowLegacy = pureLegacy)
-      }.toSet
-      // Upgrade-on-read: compact a pure legacy file to the strict format
-      // ATOMICALLY before any new-format append can produce a mixed log —
-      // legacy ids stay durable as ';' records, and every later read
-      // parses strictly (only the single-driver stream touches this log,
-      // so the read-rewrite pair cannot race another writer).
-      if (pureLegacy && ids.nonEmpty)
-        StreamFs.writeAtomicString(commitLog,
-          ids.toSeq.sorted.map(id => s"\n$id;").mkString)
-      ids
-    }
-
-  /** Append a commit record, preserving the on-disk format exactly:
-    * read + rewrite-through-atomic-rename (see the plumbing note — POSIX
-    * append is not available on every FileSystem). A crash leaves either
-    * the old or the new complete log, never a torn record. */
-  private def appendCommit(commitLog: String, id: Long): Unit =
-    StreamFs.writeAtomicString(commitLog,
-      StreamFs.readString(commitLog).getOrElse("") + s"\n$id;")
-
-  private def writeMarker(dir: String, id: Long): Unit =
-    StreamFs.writeAtomicString(s"$dir/$MarkerName", s"$id\n")
-
-  private def markerId(dir: String): Option[Long] =
-    StreamFs.readString(s"$dir/$MarkerName")
-      .map(_.linesIterator.toSeq).flatMap(_.headOption)
-      .map(_.trim).filter(s => s.nonEmpty && s.forall(_.isDigit)).map(_.toLong)
-
-  private def writeManifest(f: String, batchId: Option[Long],
-                            pre: Seq[(Int, Boolean)]): Unit =
-    StreamFs.writeAtomicString(f, (s"${batchId.getOrElse(-1L)}" +:
-      pre.map { case (b, hadPre) => s"$b,${if (hadPre) 1 else 0}" }).mkString("", "\n", "\n"))
-
-  private def readManifest(f: String): (Option[Long], Seq[(Int, Boolean)]) = {
-    val lines = StreamFs.readString(f).fold(Vector.empty[String])(_.linesIterator.toVector)
-    val id = lines.headOption.map(_.trim.toLong).filter(_ >= 0)
-    val pre = lines.drop(1).filter(_.nonEmpty).map { l =>
-      val Array(b, p) = l.split(","): @unchecked
-      b.toInt -> (p == "1")
-    }
-    (id, pre)
   }
 }

@@ -148,7 +148,7 @@ object StreamFs {
 
   /** Write `content` to a sibling tmp file, then rename over `dst` — the
     * file is either absent, the previous version, or complete, never torn.
-    * (The protocols' metadata files: markers, manifests, commit logs.) */
+    * (The protocols' metadata files: markers and manifests.) */
   def writeAtomicString(dst: String, content: String): Unit = {
     val tmp = dst + ".wtmp"
     writeFile(tmp, content)

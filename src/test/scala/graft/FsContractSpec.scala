@@ -67,7 +67,7 @@ class FsContractSpec extends SparkSpec {
       .select("doc_id").distinct().count() === 3)
   }
 
-  test("SCD2 swap + commit log work through the checksumming LocalFs wrapper") {
+  test("SCD2 swap + commit marker work through the checksumming LocalFs wrapper") {
     val tmp = Files.createTempDirectory("graft-fscontract-scd2").toString
     val hist = s"file:$tmp/history"
     def ev(id: Long, user: Long, t: String) =
@@ -80,11 +80,9 @@ class FsContractSpec extends SparkSpec {
       Seq("user_id"), "ts", "event_id", batchId = Some(0L))
     Scd2Stream.applyMicroBatch(spark, b2, hist,
       Seq("user_id"), "ts", "event_id", batchId = Some(1L))
-    // marker + commit log carry LocalFs checksums (wrote through the facade)
+    // the commit marker carries a LocalFs checksum (wrote through the facade)
     assert(local(s"$tmp/history/._graft_batch.crc").exists(),
       "history marker must carry a LocalFs checksum")
-    assert(local(s"$tmp/.history.commits.crc").exists(),
-      "commit log must carry a LocalFs checksum")
     // replay of both ids is a no-op; history equals the batch-built twin
     val once = spark.read.parquet(hist).collect().toSet
     Scd2Stream.applyMicroBatch(spark, b1, hist,
@@ -111,7 +109,7 @@ class FsContractSpec extends SparkSpec {
     val expect = Scd2.fromEvents(b1, Seq("user_id"), "ts", "event_id")
     assert(got.count() === expect.count())
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty)
-    // replay no-op via the commit log written through the facade
+    // replay no-op via the commit marker written through the facade
     Scd2Stream.applyMicroBatchBucketed(spark, b1, hist,
       Seq("user_id"), "ts", "event_id", nBuckets = 8, batchId = Some(0L))
     assert(Scd2Stream.readBucketed(spark, hist).count() === expect.count())

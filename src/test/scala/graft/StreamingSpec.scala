@@ -92,67 +92,127 @@ class StreamingSpec extends SparkSpec {
     untouched.foreach { d => assert(mtimes1(d) === mtimes0(d), s"$d was rewritten") }
   }
 
-  test("plain swap: crash at every protocol window, then replay → exactly-once") {
+  test("both layouts: crash at every failpoint a clean apply fires, then replay → exactly-once") {
     val ev = events().cache()
     val b1 = ev.filter(col("event_id") <= 300)
     val b2 = ev.filter(col("event_id") > 300 && col("event_id") <= 700)
     val expect = Scd2.fromEvents(ev.filter(col("event_id") <= 700),
       Seq("user_id"), "ts", "event_id").cache()
-    for (fp <- Seq("after-tmp-write", "after-rename-aside",
-                   "after-rename-in", "after-commit")) {
-      val tmp = Files.createTempDirectory("graft-crash").toString
-      val histDir = s"$tmp/history"
-      Scd2Stream.applyMicroBatch(spark, b1, histDir,
-        Seq("user_id"), "ts", "event_id", batchId = Some(0L))
-      val boom = intercept[RuntimeException] {
-        Scd2Stream.applyMicroBatch(spark, b2, histDir,
-          Seq("user_id"), "ts", "event_id", batchId = Some(1L),
-          failpoint = l => if (l == fp) throw new RuntimeException(s"crash:$l"))
+    type Apply = (DataFrame, String, Long, String => Unit) => Unit
+    // each layout's apply, its history read back as a plain table, and the
+    // protocol steps (label prefixes) every commit passes through
+    val layouts: Seq[(String, Apply, String => DataFrame, Seq[String])] = Seq(
+      ("flat", (b, dir, id, fp) => Scd2Stream.applyMicroBatch(spark, b, dir,
+        Seq("user_id"), "ts", "event_id", batchId = Some(id), failpoint = fp),
+        dir => spark.read.parquet(dir),
+        Seq("after-tmp-write", "after-rename-aside", "after-commit")),
+      ("bucketed", (b, dir, id, fp) => Scd2Stream.applyMicroBatchBucketed(spark,
+        b, dir, Seq("user_id"), "ts", "event_id", nBuckets = 4,
+        batchId = Some(id), failpoint = fp),
+        dir => Scd2Stream.readBucketed(spark, dir),
+        Seq("after-tmp-write", "after-commit", "after-clear:", "after-replace:",
+          "after-marker")))
+    val debris = Seq(".tmp", ".pending", ".old", ".inflight", ".oldbuckets", ".commits")
+    for ((name, apply, read, steps) <- layouts) {
+      def afterBatch0(): String = {
+        val dir = Files.createTempDirectory("graft-crash").toString + "/history"
+        apply(b1, dir, 0L, _ => ())
+        dir
       }
-      assert(boom.getMessage === s"crash:$fp")
-      // replay after the simulated crash: recovery must roll back or roll
-      // forward so the replay lands exactly at the two-batch state
-      Scd2Stream.applyMicroBatch(spark, b2, histDir,
-        Seq("user_id"), "ts", "event_id", batchId = Some(1L))
-      val got = spark.read.parquet(histDir)
-      assert(got.count() === expect.count(), s"[$fp]")
-      assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty, s"[$fp]")
-      // no protocol debris survives recovery + replay
-      assert(!new java.io.File(histDir + ".old").exists(), s"[$fp] .old left behind")
-      assert(!new java.io.File(histDir + ".tmp").exists(), s"[$fp] .tmp left behind")
+      // the labels come from a clean apply, so none can go stale
+      val fired = scala.collection.mutable.ArrayBuffer.empty[String]
+      apply(b2, afterBatch0(), 1L, fired += _)
+      steps.foreach(st => assert(fired.exists(_.startsWith(st)),
+        s"$name: no $st label among $fired"))
+      for (label <- fired) {
+        val clue = s"[$name $label]"
+        val dir = afterBatch0()
+        val boom = intercept[RuntimeException] {
+          apply(b2, dir, 1L, l => if (l == label) throw new RuntimeException(s"crash:$l"))
+        }
+        assert(boom.getMessage === s"crash:$label", clue)
+        // replay after the simulated crash: recovery must roll back or roll
+        // forward so the replay lands exactly at the two-batch state
+        apply(b2, dir, 1L, _ => ())
+        val got = read(dir)
+        assert(got.count() === expect.count(), clue)
+        assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty, clue)
+        debris.foreach(d =>
+          assert(!new java.io.File(dir + d).exists(), s"$clue $d left behind"))
+      }
     }
   }
 
-  test("bucketed swap: crash at every protocol window, then replay → exactly-once") {
+  test("a bucketed history an earlier version left with a commit log upgrades in place") {
     val ev = events().cache()
     val b1 = ev.filter(col("event_id") <= 300)
     val b2 = ev.filter(col("event_id") > 300 && col("event_id") <= 700)
-    val expect = Scd2.fromEvents(ev.filter(col("event_id") <= 700),
-      Seq("user_id"), "ts", "event_id").cache()
-    val lastBucket = b2.select(pmod(hash(col("user_id")), lit(16)).as("b"))
-      .distinct().collect().map(_.getInt(0)).max
-    // first-match prefixes cover partial phase A / partial phase B; the
-    // explicit last-bucket label covers "all buckets in place, uncommitted"
-    for (fp <- Seq("after-tmp-write", "after-manifest", "phase-a:",
-                   "phase-b:", s"phase-b:$lastBucket", "after-commit")) {
-      val tmp = Files.createTempDirectory("graft-crash-bkt").toString
-      val histDir = s"$tmp/history"
-      Scd2Stream.applyMicroBatchBucketed(spark, b1, histDir,
-        Seq("user_id"), "ts", "event_id", nBuckets = 16, batchId = Some(0L))
-      intercept[RuntimeException] {
-        Scd2Stream.applyMicroBatchBucketed(spark, b2, histDir,
-          Seq("user_id"), "ts", "event_id", nBuckets = 16, batchId = Some(1L),
-          failpoint = l => if (l.startsWith(fp)) throw new RuntimeException(s"crash:$l"))
-      }
-      Scd2Stream.applyMicroBatchBucketed(spark, b2, histDir,
-        Seq("user_id"), "ts", "event_id", nBuckets = 16, batchId = Some(1L))
-      val got = Scd2Stream.readBucketed(spark, histDir)
-      assert(got.count() === expect.count(), s"[$fp]")
-      assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty, s"[$fp]")
-      assert(!new java.io.File(histDir + ".inflight").exists(), s"[$fp] manifest left")
-      assert(!new java.io.File(histDir + ".oldbuckets").exists(), s"[$fp] .oldbuckets left")
-      assert(!new java.io.File(histDir + ".tmp").exists(), s"[$fp] .tmp left")
+    val b3 = ev.filter(col("event_id") > 700 && col("event_id") <= 1000)
+    val tmp = Files.createTempDirectory("graft-upgrade").toString
+    val histDir = s"$tmp/history"
+    def apply(b: DataFrame, id: Long): Unit =
+      Scd2Stream.applyMicroBatchBucketed(spark, b, histDir, Seq("user_id"), "ts",
+        "event_id", nBuckets = 4, batchId = Some(id))
+    // the earlier layout after batches 0 and 1: `__bucket=` dirs, no root
+    // marker, and a strict-format commit log beside the root
+    Scd2.fromEvents(b1.unionByName(b2), Seq("user_id"), "ts", "event_id")
+      .withColumn("__bucket", pmod(hash(col("user_id")), lit(4)))
+      .write.partitionBy("__bucket").parquet(histDir)
+    Files.write(java.nio.file.Paths.get(histDir + ".commits"), "\n0;\n1;".getBytes)
+    val before = Scd2Stream.readBucketed(spark, histDir).collect().toSet
+    // its ids replay as no-ops, and the log is folded into the marker
+    apply(b1, 0L)
+    apply(b2, 1L)
+    assert(Scd2Stream.readBucketed(spark, histDir).collect().toSet === before)
+    assert(!new java.io.File(histDir + ".commits").exists(), "log not folded")
+    assert(new String(Files.readAllBytes(
+      java.nio.file.Paths.get(s"$histDir/_graft_batch"))).trim === "1")
+    // the next id applies
+    apply(b3, 2L)
+    val expect = Scd2.fromEvents(ev.filter(col("event_id") <= 1000),
+      Seq("user_id"), "ts", "event_id")
+    val got = Scd2Stream.readBucketed(spark, histDir)
+    assert(got.count() === expect.count())
+    assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty)
+    // an interrupted commit of the earlier bucketed protocol fails recovery
+    // by name instead of being guessed at
+    for (debris <- Seq(".inflight", ".oldbuckets")) {
+      val f = new java.io.File(histDir + debris)
+      f.mkdirs()
+      val ex = intercept[IllegalStateException](Scd2Stream.recover(histDir))
+      assert(ex.getMessage.contains(histDir + debris), ex.getMessage)
+      f.delete()
     }
+  }
+
+  test("the commit record stays one id: non-data files are the same after 1 and after 40 narrow bucketed batches") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft-flat-cost").toString
+    val histDir = s"$tmp/history"
+    val marker = s"$histDir/_graft_batch"
+    // every file beside the part files, with its size; the marker's own
+    // size grows with its id's digits, so it is compared by content
+    def nonDataFiles(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(tmp)).filterNot(_.getName.contains("part-"))
+        .map(f => f.getPath -> (if (f.getPath == marker) 0L else f.length)).toMap
+    }
+    def markerText = new String(Files.readAllBytes(java.nio.file.Paths.get(marker)))
+    var afterOne = Map.empty[String, Long]
+    for (i <- 0 until 40) {
+      val batch = Seq((i % 6L, i.toLong, new java.sql.Timestamp(1700000000000L + i * 1000L)))
+        .toDF("user_id", "event_id", "ts")
+      Scd2Stream.applyMicroBatchBucketed(spark, batch, histDir, Seq("user_id"),
+        "ts", "event_id", nBuckets = 8, batchId = Some(i.toLong))
+      if (i == 0) {
+        afterOne = nonDataFiles()
+        assert(markerText === "0\n")
+      }
+    }
+    assert(afterOne.contains(marker), afterOne)
+    assert(nonDataFiles() === afterOne)
+    assert(markerText === "39\n")
   }
 
   test("torn commit-log append can neither fabricate nor corrupt committed ids") {
@@ -209,12 +269,16 @@ class StreamingSpec extends SparkSpec {
     val expect = Scd2.fromEvents(ev.filter(col("event_id") <= 700),
       Seq("user_id"), "ts", "event_id")
     assert(spark.read.parquet(s"$tmpB/history").count() === expect.count())
-    // the legacy log from case A was compacted to strict format on first
-    // read — its ids survive as ';' records (no mixed-format window)
-    val logAContent = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$tmpA/history.commits")))
-    assert(logAContent.contains("0;") && logAContent.contains("1;"),
-      s"legacy log not compacted: [$logAContent]")
+    // the legacy log from case A was folded into the marker and removed;
+    // its ids stay committed, so replaying them is a no-op
+    assert(!new java.io.File(s"$tmpA/history.commits").exists(),
+      "legacy log not folded into the marker")
+    val onceA = spark.read.parquet(s"$tmpA/history").collect().toSet
+    Scd2Stream.applyMicroBatch(spark, b1, s"$tmpA/history",
+      Seq("user_id"), "ts", "event_id", batchId = Some(0L))
+    Scd2Stream.applyMicroBatch(spark, b2, s"$tmpA/history",
+      Seq("user_id"), "ts", "event_id", batchId = Some(1L))
+    assert(spark.read.parquet(s"$tmpA/history").collect().toSet === onceA)
   }
 
   test("bare digits in a mixed-format log never fabricate a commit") {

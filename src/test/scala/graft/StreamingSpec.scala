@@ -92,55 +92,62 @@ class StreamingSpec extends SparkSpec {
     untouched.foreach { d => assert(mtimes1(d) === mtimes0(d), s"$d was rewritten") }
   }
 
-  test("both layouts: crash at every failpoint a clean apply fires, then replay → exactly-once") {
+  /** Crashes `apply` at every failpoint label a clean apply of batch 1 fires
+    * (so the label list cannot go stale), replays batch 1, and checks the
+    * history read back by `read` lands exactly at the two-batch state with no
+    * debris. `steps` are label prefixes every commit must pass through. */
+  private def crashAtEveryFailpoint(name: String,
+      apply: (DataFrame, String, Long, String => Unit) => Unit,
+      read: String => DataFrame, steps: Seq[String]): Unit = {
     val ev = events().cache()
     val b1 = ev.filter(col("event_id") <= 300)
     val b2 = ev.filter(col("event_id") > 300 && col("event_id") <= 700)
     val expect = Scd2.fromEvents(ev.filter(col("event_id") <= 700),
       Seq("user_id"), "ts", "event_id").cache()
-    type Apply = (DataFrame, String, Long, String => Unit) => Unit
-    // each layout's apply, its history read back as a plain table, and the
-    // protocol steps (label prefixes) every commit passes through
-    val layouts: Seq[(String, Apply, String => DataFrame, Seq[String])] = Seq(
-      ("flat", (b, dir, id, fp) => Scd2Stream.applyMicroBatch(spark, b, dir,
+    val debris = Seq(".tmp", ".pending", ".old", ".inflight", ".oldbuckets", ".commits")
+    def afterBatch0(): String = {
+      val dir = Files.createTempDirectory("graft-crash").toString + "/history"
+      apply(b1, dir, 0L, _ => ())
+      dir
+    }
+    val fired = scala.collection.mutable.ArrayBuffer.empty[String]
+    apply(b2, afterBatch0(), 1L, fired += _)
+    steps.foreach(st => assert(fired.exists(_.startsWith(st)),
+      s"$name: no $st label among $fired"))
+    for (label <- fired) {
+      val clue = s"[$name $label]"
+      val dir = afterBatch0()
+      val boom = intercept[RuntimeException] {
+        apply(b2, dir, 1L, l => if (l == label) throw new RuntimeException(s"crash:$l"))
+      }
+      assert(boom.getMessage === s"crash:$label", clue)
+      // replay after the simulated crash: recovery must roll back or roll
+      // forward so the replay lands exactly at the two-batch state
+      apply(b2, dir, 1L, _ => ())
+      val got = read(dir)
+      assert(got.count() === expect.count(), clue)
+      assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty, clue)
+      debris.foreach(d =>
+        assert(!new java.io.File(dir + d).exists(), s"$clue $d left behind"))
+    }
+  }
+
+  test("plain swap: crash at every protocol window, then replay → exactly-once") {
+    crashAtEveryFailpoint("flat",
+      (b, dir, id, fp) => Scd2Stream.applyMicroBatch(spark, b, dir,
         Seq("user_id"), "ts", "event_id", batchId = Some(id), failpoint = fp),
-        dir => spark.read.parquet(dir),
-        Seq("after-tmp-write", "after-rename-aside", "after-commit")),
-      ("bucketed", (b, dir, id, fp) => Scd2Stream.applyMicroBatchBucketed(spark,
+      dir => spark.read.parquet(dir),
+      Seq("after-tmp-write", "after-rename-aside", "after-commit"))
+  }
+
+  test("bucketed swap: crash at every protocol window, then replay → exactly-once") {
+    crashAtEveryFailpoint("bucketed",
+      (b, dir, id, fp) => Scd2Stream.applyMicroBatchBucketed(spark,
         b, dir, Seq("user_id"), "ts", "event_id", nBuckets = 4,
         batchId = Some(id), failpoint = fp),
-        dir => Scd2Stream.readBucketed(spark, dir),
-        Seq("after-tmp-write", "after-commit", "after-clear:", "after-replace:",
-          "after-marker")))
-    val debris = Seq(".tmp", ".pending", ".old", ".inflight", ".oldbuckets", ".commits")
-    for ((name, apply, read, steps) <- layouts) {
-      def afterBatch0(): String = {
-        val dir = Files.createTempDirectory("graft-crash").toString + "/history"
-        apply(b1, dir, 0L, _ => ())
-        dir
-      }
-      // the labels come from a clean apply, so none can go stale
-      val fired = scala.collection.mutable.ArrayBuffer.empty[String]
-      apply(b2, afterBatch0(), 1L, fired += _)
-      steps.foreach(st => assert(fired.exists(_.startsWith(st)),
-        s"$name: no $st label among $fired"))
-      for (label <- fired) {
-        val clue = s"[$name $label]"
-        val dir = afterBatch0()
-        val boom = intercept[RuntimeException] {
-          apply(b2, dir, 1L, l => if (l == label) throw new RuntimeException(s"crash:$l"))
-        }
-        assert(boom.getMessage === s"crash:$label", clue)
-        // replay after the simulated crash: recovery must roll back or roll
-        // forward so the replay lands exactly at the two-batch state
-        apply(b2, dir, 1L, _ => ())
-        val got = read(dir)
-        assert(got.count() === expect.count(), clue)
-        assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty, clue)
-        debris.foreach(d =>
-          assert(!new java.io.File(dir + d).exists(), s"$clue $d left behind"))
-      }
-    }
+      dir => Scd2Stream.readBucketed(spark, dir),
+      Seq("after-tmp-write", "after-commit", "after-clear:", "after-replace:",
+        "after-marker"))
   }
 
   test("a bucketed history an earlier version left with a commit log upgrades in place") {

@@ -11,20 +11,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle parallelism is CONSTANT across core counts (round-17,
-    // round-16 verdict item 2): it used to default to $SPARK_GRAFT_CPUS,
-    // which made the driver's 8-vs-32-core scaling probe non-diagnostic —
-    // the 8-core run also ran 8 shuffle partitions, trading lost
-    // parallelism for lower scheduling overhead one-for-one, so every
-    // ratio read ≈1. With a fixed partition count the low-core run now
-    // measures actual parallelism. Override via
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS (cluster-sized in production).
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", shuffleParts)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Tables.checkSchemas(spark, sfDir)
       .foreach(d => System.err.println(s"[schema-drift] $d"))

@@ -1,8 +1,7 @@
 package graft
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[4]", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     args.foreach { q =>

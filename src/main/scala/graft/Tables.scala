@@ -58,15 +58,20 @@ object Tables {
     import org.apache.spark.sql.types._
     val path = s"$sfDir/events.parquet"
     // Plain read first; only a legacy INT64 TIMESTAMP(NANOS) file (which
-    // Spark rejects at schema inference) turns on the session-wide
-    // nanosAsLong conf — the common timestamp[us] flavor leaves session
-    // state untouched (round-7 verdict item: no unconditional mutation).
+    // Spark rejects at schema inference) is read with nanosAsLong, on a
+    // child session: its relation keeps the child's conf for the scan,
+    // and the caller's session conf is never touched.
     val df =
       try spark.read.parquet(path)
       catch {
         case e: Throwable if illegalParquetType(e) =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          spark.read.parquet(path)
+          val nanos = spark.newSession()
+          nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          spark.baseRelationToDataFrame(nanos.read.parquet(path)
+            .queryExecution.analyzed.collectFirst {
+              case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+                r.relation
+            }.get)
       }
     df.schema("ts").dataType match {
       case LongType => // nanos since epoch → truncate to µs

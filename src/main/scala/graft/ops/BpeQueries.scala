@@ -119,51 +119,45 @@ object BpeQueries {
   /** The trained symbol table: every word type fully encoded by the
     * [[bpeMerges]] learned merges — (word, freq, pos, sym, nxt). */
   private[graft] def trainedSyms(s: SparkSession, dir: String): DataFrame = {
-    val ty = occurrences(s, dir).groupBy("word").agg(count(lit(1)).as("freq"))
+    val t = trainingSession(s)
+    val ty = occurrences(t, dir).groupBy("word").agg(count(lit(1)).as("freq"))
     val wOrd = Window.partitionBy("word").orderBy("pos")
-    // Narrow the shuffle width only while the iterations MATERIALIZE
-    // (eager localCheckpoint runs inside the scoped region; the final
-    // checkpointed state is partitioning-fixed, so downstream plans are
-    // unaffected by the restore). Driver-sequential, so the temporary
-    // session-conf scope cannot race another query.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, bpePartitions)
-    // AQE is OFF inside the scoped training region (r17): every round's
-    // shuffle is already fixed at the right-sized bpe.partitions width
-    // over the Heaps-bounded type table, so adaptive replanning buys
-    // nothing here while costing one extra scheduled stage-job per
-    // exchange per round (measured in the r17 job-count probe). The
-    // restore happens before any downstream consumer plans.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = s.conf.get(aqeKey)
-    s.conf.set(aqeKey, "false")
-    try {
-      // s0 checkpoints WITH the carried nxt column: the corpus pass
-      // (occurrences → type freq → char explode) runs exactly once —
-      // before r17 both round-1 arms re-derived it from the raw scan
-      var state = ty.select(col("word"), col("freq"),
-          posexplode(concat(
-            expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
-            array(lit("</w>")))))
-        .toDF("word", "freq", "pos", "sym")
-        .withColumn("nxt", lead(col("sym"), 1).over(wOrd))
-        .localCheckpoint(true)
-      // eager checkpoint after EVERY round. MEASURED, not assumed (r17
-      // in-JVM A/B at sf0.1, min-of-3 interleaved, of a checkpoint every
-      // N rounds): N=1 → 9.2 s over the 4 bpe faces, N=2 → 10.9 s,
-      // N=4 → 19.9 s, N=8 → 47.7 s. Each round's state has TWO consumers
-      // (pair-count argmax + rewrite), so every uncheckpointed round
-      // re-executes its crossJoin + 5-window rewrite once per consumer
-      // and the recompute compounds per block — the job-launch latency
-      // an amortized checkpoint saves never catches up
-      for (_ <- 1 to bpeMerges)
-        state = mergeStep(state).localCheckpoint(true)
-      state
-    } finally {
-      s.conf.set(key, prev)
-      s.conf.set(aqeKey, prevAqe)
-    }
+    // s0 checkpoints WITH the carried nxt column: the corpus pass
+    // (occurrences → type freq → char explode) runs exactly once —
+    // before r17 both round-1 arms re-derived it from the raw scan
+    var state = ty.select(col("word"), col("freq"),
+        posexplode(concat(
+          expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
+          array(lit("</w>")))))
+      .toDF("word", "freq", "pos", "sym")
+      .withColumn("nxt", lead(col("sym"), 1).over(wOrd))
+      .localCheckpoint(true)
+    // eager checkpoint after EVERY round. MEASURED, not assumed (r17
+    // in-JVM A/B at sf0.1, min-of-3 interleaved, of a checkpoint every
+    // N rounds): N=1 → 9.2 s over the 4 bpe faces, N=2 → 10.9 s,
+    // N=4 → 19.9 s, N=8 → 47.7 s. Each round's state has TWO consumers
+    // (pair-count argmax + rewrite), so every uncheckpointed round
+    // re-executes its crossJoin + 5-window rewrite once per consumer
+    // and the recompute compounds per block — the job-launch latency
+    // an amortized checkpoint saves never catches up
+    for (_ <- 1 to bpeMerges)
+      state = mergeStep(state).localCheckpoint(true)
+    // the checkpointed rows, planned downstream under the caller's conf
+    s.createDataFrame(state.rdd, state.schema)
+  }
+
+  /** The session the training iterations run in: a child of `s` (shared
+    * context and checkpoints, a conf of its own) with the narrow
+    * [[bpePartitions]] shuffle and AQE off, so the caller's conf is never
+    * touched. AQE buys nothing here: every round's shuffle is already at
+    * the right width over the Heaps-bounded type table, and adaptive
+    * replanning costs one extra scheduled stage-job per exchange per
+    * round (measured in the r17 job-count probe). */
+  private[graft] def trainingSession(s: SparkSession): SparkSession = {
+    val t = s.newSession()
+    t.conf.set("spark.sql.shuffle.partitions", bpePartitions)
+    t.conf.set("spark.sql.adaptive.enabled", "false")
+    t
   }
 
   /** The learned subword vocabulary: top-[[vocabTopK]] tokens by corpus

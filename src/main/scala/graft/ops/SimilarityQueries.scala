@@ -1402,10 +1402,13 @@ object SimilarityQueries {
     * ROUND-17 PROMOTION (round-16 verdict item 3, carried from r15): the
     * registered face now IS the HNSW-style descent — entry at the
     * [[hnswEntryMult]]×-coarser nested layer, one extra greedy round —
-    * over the per-session prebuilt edge set, i.e. exactly
-    * [[annGraphSearchHnsw]] (which stays registered for bench/oracle
-    * continuity). The flat-entry per-run-rebuild formulation survives as
-    * [[annGraphSearchFlat]] (the spec seam pinning that the memoized
+    * over the per-session prebuilt edge set; `ann_graph_search_hnsw`
+    * stays registered as this same face for bench/oracle continuity.
+    * The coarse entry layer is √n/8 entries where the flat face scores
+    * every query against the full √n ring (~450k cosines per query at
+    * 2e11 nodes), trading that corpus-growth term for one more
+    * frontier-bounded hop (≤ beam·degree rows per query). The flat-entry
+    * per-run-rebuild formulation survives as [[annGraphSearchFlat]] (the spec seam pinning that the memoized
     * edge set ≡ a freshly built one, and the recall baseline); the full
     * NN-Descent build cost itself is still paid and timed per run by the
     * registered `knn_graph_ann`. Oracle updated in lockstep
@@ -1472,25 +1475,6 @@ object SimilarityQueries {
     * hits ⊂ md5 % stride hits, the HNSW layer property) and ONE extra
     * greedy round walks back down. */
   val hnswEntryMult = 8
-
-  /** REGISTERED + DuckDB-oracled HNSW-style DESCENT twin of
-    * [[annGraphSearchPrebuilt]] — PROMOTED to a first-class search face
-    * (round-15 verdict #4; the flat entry ring was the last documented
-    * scale term on the search path):
-    * the flat face scores every query against the full √n entry ring —
-    * at 2e11 nodes that is ~450k cosines PER QUERY, the dominant
-    * steady-state term once the index is prebuilt (round-14 verdict #8).
-    * This face enters at a [[hnswEntryMult]]×-coarser nested layer
-    * (√n/8 entries) and spends one extra hop descending — trading the
-    * corpus-growth-proportional entry term for one more
-    * frontier-bounded round (≤ beam·degree rows per query, independent
-    * of n). Same greedy machinery, same edge set, same visited-set
-    * fold; AnnTrainingSpec pins recall ≥ the flat face on the clustered
-    * fixture, and BASELINE.md records where the crossover sits (at
-    * bench scale the √n term is small, so the win is the SHAPE — entry
-    * cost O(√n/m + rounds·beam·2k) per query instead of O(√n)). */
-  def annGraphSearchHnsw(s: SparkSession, dir: String): DataFrame =
-    annGraphSearch(s, dir) // r17: the registered face IS the descent
 
   private[graft] def searchOverGraph(s: SparkSession, dir: String,
       edges: DataFrame, entryStrideMult: Int = 1,
@@ -1790,7 +1774,8 @@ object SimilarityQueries {
     "hybrid_search_ivf" -> (hybridSearchIvf _),
     "takedown_replay_ann" ->
       (graft.streaming.AnnStream.takedownReplayAnn _),
-    "ann_graph_search_hnsw" -> (annGraphSearchHnsw _),
+    // the descent's own name before r17, kept as an alias of the face
+    "ann_graph_search_hnsw" -> (annGraphSearch _),
     "ann_ivf_capped" -> (annIvfCapped _))
 
   /** The √n seed stride as a DuckDB scalar subquery — the oracle twin of
@@ -1890,6 +1875,11 @@ object SimilarityQueries {
        |  FROM gst_$rounds WHERE q != node)
        |WHERE rank <= $topK ORDER BY q, rank""".stripMargin
   }
+
+  /** The oracle of `ann_graph_search` and its `ann_graph_search_hnsw`
+    * alias: the descent's unrolled hops. */
+  private lazy val graphSearchOracle =
+    graphSearchOracleSql(hnswEntryMult, searchRounds + 1)
 
   /** One unrolled NN-Descent round for the knn_graph_ann oracle — the
     * SAME incremental rounds the Spark plan runs: round 1 is the full
@@ -2643,10 +2633,8 @@ object SimilarityQueries {
     // same unrolled hops with the nested 8x-coarser entry layer and one
     // extra round; the oracle proves the descent is exact machinery,
     // not an approximation of the face
-    "ann_graph_search" ->
-      graphSearchOracleSql(hnswEntryMult, searchRounds + 1),
-    "ann_graph_search_hnsw" ->
-      graphSearchOracleSql(hnswEntryMult, searchRounds + 1),
+    "ann_graph_search" -> graphSearchOracle,
+    "ann_graph_search_hnsw" -> graphSearchOracle,
     "diversity_sample" ->
       s"""WITH $diversityCtes
          |SELECT * FROM (

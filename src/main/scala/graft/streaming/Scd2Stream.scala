@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Structured Streaming wiring for the CDC → SCD2 pipeline (SURVEY.md §7.1
@@ -111,17 +111,13 @@ object Scd2Stream {
             seqCol: String, triggerMs: Long = 200L,
             opCol: Option[String] = None,
             onLate: Scd2.LatePolicy = Scd2.LatePolicy.Error): StreamingQuery =
-    events
-      .observe(ObservedMetricsName, count(lit(1)).as("n_events"),
-        countDistinctKeysApprox(keys).as("n_keys_approx"))
-      .writeStream
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMicroBatch(spark, batch, historyDir, keys, tsCol, seqCol,
-          batchId = Some(batchId), opCol = opCol, onLate = onLate)
-      }
-      .start()
+    BatchStore.start(
+      events.observe(ObservedMetricsName, count(lit(1)).as("n_events"),
+        countDistinctKeysApprox(keys).as("n_keys_approx")),
+      checkpoint, triggerMs) { (batch, batchId) =>
+      applyMicroBatch(spark, batch, historyDir, keys, tsCol, seqCol,
+        batchId = Some(batchId), opCol = opCol, onLate = onLate)
+    }
 
   private def countDistinctKeysApprox(keys: Seq[String]) =
     approx_count_distinct(concat_ws("", keys.map(col): _*))

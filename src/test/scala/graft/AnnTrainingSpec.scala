@@ -180,7 +180,7 @@ class AnnTrainingSpec extends SparkSpec {
     assert(registered === fresh,
       "promoted ann_graph_search must equal the fresh-build descent")
     // and the hnsw face is the same face
-    val hnsw = ops.SimilarityQueries.annGraphSearchHnsw(spark, sf)
+    val hnsw = ops.SimilarityQueries.queries("ann_graph_search_hnsw")(spark, sf)
       .as[(Long, Int, Long, Double)].collect().toSet
     assert(hnsw === registered)
   }

@@ -18,8 +18,7 @@ object CmsSteadyProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val nb = if (args.length > 1) args(1).toInt else 16
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = Tables.documents(spark, dir).select("doc_id", "text").cache()
     val maxId = docs.agg(max("doc_id")).first().getLong(0)

@@ -13,8 +13,7 @@ object DevExplain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 5
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries.getOrElse(name, SparkEntry.benchOnly(name))
     fn(spark, sfDir).explain("formatted")

@@ -17,8 +17,7 @@ object EvalCompactProbe {
     val batchCounts =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(4, 64, 256)
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val scored = graft.ops.CurationQueries.highNdvScored(spark, dir)
       .localCheckpoint()

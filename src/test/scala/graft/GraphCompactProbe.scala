@@ -16,8 +16,7 @@ object GraphCompactProbe {
     val dir = args(0)
     val batchCounts =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(4, 16, 64)
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val corpus = Tables.embeddings(spark, dir).select("vec_id", "embedding")
 

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object JpegPhashProbe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = MediaQueries.mediaPhashJpeg(spark, args(0)).localCheckpoint()
     df.groupBy("hamming").count().orderBy("hamming").show(70)

@@ -19,8 +19,7 @@ object MediaCapProbe {
     val dir = args(0)
     val frac = if (args.length > 1) args(1).toDouble else 0.05
     val skipUncapped = args.length > 2 && args(2) == "skipUncapped"
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val sigs = MediaQueries.mediaPhash(spark, dir)

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions._
 object PcaPhaseProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val a = f

@@ -18,18 +18,16 @@ import org.apache.spark.sql.functions._
 object R17PlanProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = GraftSession.builder("local[4]", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // ---- BPE: one merge round, carried-nxt state vs derivation state
-    // (mirrors trainedSyms' scoped region: AQE off, narrow shuffle width
-    // — under AQE a localCheckpoint rebases on UnknownPartitioning and
+    // (in trainedSyms' own session: AQE off, narrow shuffle width —
+    // under AQE a localCheckpoint rebases on UnknownPartitioning and
     // the round would show a spurious Exchange the trainer doesn't pay)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    val bpe = graft.ops.BpeQueries.trainingSession(spark)
     val wOrd = Window.partitionBy("word").orderBy("pos")
-    val s0 = Tables.documents(spark, dir)
+    val s0 = Tables.documents(bpe, dir)
       .select(explode(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
         .as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
@@ -45,8 +43,6 @@ object R17PlanProbe {
     graft.ops.BpeQueries.mergeStep(s1).explain("formatted")
     println("===== bpe_merge_round_derived (nxt dropped: pre-r17 shape) =====")
     graft.ops.BpeQueries.mergeStep(s1.drop("nxt")).explain("formatted")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
 
     // ---- pagerank: one round, deg pre-joined vs per-round deg join
     val pairs = graft.ops.DedupQueries.queries("dedup_jaccard")(spark, dir)

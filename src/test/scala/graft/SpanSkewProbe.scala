@@ -52,8 +52,7 @@ object SpanSkewProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/tmp/x10"
     val hotFrac = if (args.length > 1) args(1).toDouble else 0.2
     val every = math.max(1L, math.round(1.0 / hotFrac))
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val boiler = (1 to PrepQueries.scrubSpanLen).map(i => s"boiler$i")

@@ -6,10 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("local[8]", 8)
-      .appName("graft-test")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder().appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

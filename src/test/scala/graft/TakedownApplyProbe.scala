@@ -14,8 +14,7 @@ object TakedownApplyProbe {
     import org.apache.spark.sql.functions._
     val Array(gateName, stateDirs, sfDir) = args.take(3)
     val tdId = args.lift(3).map(_.toLong).getOrElse(1L)
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.streaming.{AnnStream, GraphStream, PairStream, Takedown}
     val docs = Tables.documents(spark, sfDir).select("doc_id")

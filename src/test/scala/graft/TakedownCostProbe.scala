@@ -18,8 +18,7 @@ object TakedownCostProbe {
     import org.apache.spark.sql.functions._
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/tmp/graft_scale/x10", "/tmp/graft_scale/x100")
-    val spark = GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import graft.streaming.{AnnStream, DedupStream, GraphStream,
       NearDupStream, PairStream, Takedown, WinnowStream}

@@ -11,8 +11,7 @@ object WinnowTdProbe {
   def main(args: Array[String]): Unit = {
     import org.apache.spark.sql.functions._
     val Array(stateDir, sfDir) = args.take(2)
-    val spark = graft.GraftSession.builder("local[32]", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def timed[A](name: String)(f: => A): A = {
       val t0 = System.nanoTime()
